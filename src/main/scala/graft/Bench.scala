@@ -36,9 +36,9 @@ object Bench {
     def inPool(items: Seq[() => Unit]): Unit = {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(8, math.max(1, cpus.toInt / 4)))
-      items.map(f => pool.submit(new Runnable { def run(): Unit = f() }))
+      try items.map(f => pool.submit(new Runnable { def run(): Unit = f() }))
         .foreach(_.get())
-      pool.shutdown()
+      finally pool.shutdown()
     }
     inPool(SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -34,18 +34,19 @@ object Verify {
     val par = sys.env.get("SPARK_GRAFT_VERIFY_PAR").map(_.trim.toInt)
       .getOrElse(math.min(8, math.max(1, cpus.toInt / 4)))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-    val futures = work.map { case (name, fn) =>
-      pool.submit(new Runnable {
-        def run(): Unit =
-          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          catch { case e: Throwable =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          }
-      })
-    }
-    futures.foreach(_.get())
-    pool.shutdown()
+    try {
+      val futures = work.map { case (name, fn) =>
+        pool.submit(new Runnable {
+          def run(): Unit =
+            try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name")
+            catch { case e: Throwable =>
+              System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            }
+        })
+      }
+      futures.foreach(_.get())
+    } finally pool.shutdown()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -104,9 +104,13 @@ object Embedders {
   /** Default deterministic featurizer used by all correctness tests. */
   val deterministic: Embedder = new DeterministicHashEmbedder(16)
 
-  /** Column function embedding a text column with the given embedder. */
+  /** Column function embedding a text column with the given embedder.
+    * Non-deterministic on purpose: Catalyst then never copies the call into
+    * a pushed-down filter or a collapsed projection, so the embedder (for
+    * [[OllamaHttpEmbedder]], a network call) runs exactly once per row that
+    * reaches it. */
   def embedColumn(e: Embedder): Column => Column = {
-    val f = udf((s: String) => e.embed(s))
+    val f = udf((s: String) => e.embed(s)).asNondeterministic()
     c => f(c)
   }
 }

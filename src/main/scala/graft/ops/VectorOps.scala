@@ -4,8 +4,10 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Vector-math operators over `ARRAY<FLOAT>` embedding columns, built from
-  * Spark's higher-order functions (codegen'd; no UDF in the hot path).
+/** Vector-math operators over `ARRAY<FLOAT>` embedding columns: native
+  * codegen'd kernels in [[graft.ops.expr.VecMath]] (`VecDot`, `VecDist2`,
+  * `VecNormalize`) for the per-row and per-pair paths, Spark's higher-order
+  * functions for the exact-decimal forms; no UDF in the hot path.
   */
 object VectorOps {
 
@@ -14,12 +16,10 @@ object VectorOps {
     * each component divides in double and narrows back to float — matching
     * the reference's float32-output/float64-accumulator arithmetic. A zero
     * vector is returned unchanged (reference: internal/util/text.go:43-45).
+    * Native kernel ([[graft.ops.expr.VecNormalize]]): `v` is evaluated once
+    * per row, so an embed UDF feeding it runs once per row.
     */
-  def l2normalize(v: Column): Column = {
-    val n = l2norm(v)
-    when(n === lit(0.0), v)
-      .otherwise(transform(v, x => (x.cast(DoubleType) / n).cast(FloatType)))
-  }
+  def l2normalize(v: Column): Column = graft.ops.expr.VecMath.normalizeColumn(v)
 
   /** √Σx² accumulated in double (native kernel; see
     * [[graft.ops.expr.VecMath]]). */

@@ -2,7 +2,8 @@ package graft.ops.expr
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
@@ -13,7 +14,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * per candidate pair (LSH/IVF/near-dup verify — SURVEY.md §2.3 Group C), so
   * the allocation cost multiplies by the candidate count. These kernels are
   * the same double-accumulator arithmetic in a flat loop over the unsafe
-  * array data, no intermediates.
+  * array data, no intermediates. [[VecNormalize]] also reads its input
+  * once: the equivalent `CASE WHEN norm = 0 THEN v ELSE transform(v, ...)`
+  * copies `v`'s expression into the condition and into the lambda body,
+  * where CSE reaches neither, so an embed UDF feeding it would run once
+  * per component.
   *
   * Element semantics: the loop runs over the common prefix of the two
   * arrays and null elements contribute 0 — embedding columns are
@@ -22,13 +27,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * queries (VectorOps.dotExact/l2normExact) stay HOF-based on purpose:
   * their cost is the determinism contract, not the loop shape.
   */
-abstract class VecBinaryExpression extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-
-  private def isVec(t: DataType): Boolean = t match {
+private[expr] object VecType {
+  def isVec(t: DataType): Boolean = t match {
     case ArrayType(FloatType | DoubleType, _) => true
     case _ => false
   }
+
+  def isFloat(t: DataType): Boolean = t.asInstanceOf[ArrayType].elementType == FloatType
+}
+
+abstract class VecBinaryExpression extends BinaryExpression {
+  import VecType.isVec
+  override def dataType: DataType = DoubleType
 
   override def checkInputDataTypes() =
     if (isVec(left.dataType) && isVec(right.dataType))
@@ -38,10 +48,8 @@ abstract class VecBinaryExpression extends BinaryExpression {
         s"$prettyName requires two array<float|double> arguments, " +
           s"got ${left.dataType} and ${right.dataType}")
 
-  protected def leftIsFloat: Boolean =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-  protected def rightIsFloat: Boolean =
-    right.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  protected def leftIsFloat: Boolean = VecType.isFloat(left.dataType)
+  protected def rightIsFloat: Boolean = VecType.isFloat(right.dataType)
 }
 
 /** Σ aᵢ·bᵢ in double accumulation. */
@@ -76,6 +84,38 @@ case class VecDist2(left: Expression, right: Expression) extends VecBinaryExpres
   override def prettyName: String = "vec_dist2"
 }
 
+/** x / ‖x‖ with the norm accumulated in double, each component divided in
+  * double and narrowed to float; a zero-norm vector passes through
+  * unchanged. Same bits, `dataType` and null behaviour as the HOF form
+  * `when(norm === 0, v).otherwise(transform(v, x => (x / norm).cast(float)))`:
+  * the element type is the input's (a double input carries the
+  * float-narrowed quotients widened back), elements are nullable, and a
+  * null element stays null. */
+case class VecNormalize(child: Expression) extends UnaryExpression {
+  override def dataType: DataType =
+    ArrayType(child.dataType.asInstanceOf[ArrayType].elementType, containsNull = true)
+
+  override def checkInputDataTypes() =
+    if (VecType.isVec(child.dataType))
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires an array<float|double> argument, got ${child.dataType}")
+
+  private def isFloat: Boolean = VecType.isFloat(child.dataType)
+
+  override def nullSafeEval(v: Any): Any =
+    VecMath.normalize(v.asInstanceOf[ArrayData], isFloat)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, v => s"graft.ops.expr.VecMath.normalize($v, $isFloat)")
+
+  override protected def withNewChildInternal(c: Expression): VecNormalize =
+    copy(child = c)
+
+  override def prettyName: String = "vec_normalize"
+}
+
 object VecMath {
 
   private def elem(arr: ArrayData, i: Int, isFloat: Boolean): Double =
@@ -107,6 +147,23 @@ object VecMath {
     acc
   }
 
+  def normalize(v: ArrayData, isFloat: Boolean): ArrayData = {
+    val norm = math.sqrt(dot(v, v, isFloat, isFloat))
+    if (norm == 0.0) v
+    else {
+      val n = v.numElements()
+      val out = UnsafeArrayData.createFreshArray(n, if (isFloat) 4 else 8)
+      var i = 0
+      while (i < n) {
+        if (v.isNullAt(i)) out.setNullAt(i)
+        else if (isFloat) out.setFloat(i, (v.getFloat(i).toDouble / norm).toFloat)
+        else out.setDouble(i, (v.getDouble(i) / norm).toFloat.toDouble)
+        i += 1
+      }
+      out
+    }
+  }
+
   def dotColumn(a: Column, b: Column): Column = {
     import org.apache.spark.sql.GraftBridge
     GraftBridge.column(VecDot(GraftBridge.expression(a), GraftBridge.expression(b)))
@@ -115,5 +172,10 @@ object VecMath {
   def dist2Column(a: Column, b: Column): Column = {
     import org.apache.spark.sql.GraftBridge
     GraftBridge.column(VecDist2(GraftBridge.expression(a), GraftBridge.expression(b)))
+  }
+
+  def normalizeColumn(v: Column): Column = {
+    import org.apache.spark.sql.GraftBridge
+    GraftBridge.column(VecNormalize(GraftBridge.expression(v)))
   }
 }

@@ -68,6 +68,68 @@ class OpsSpec extends SparkSpec {
     assert(out(1).getDouble(2) == 0.0)
   }
 
+  test("l2normalize kernel matches the HOF formula bit for bit, dataType " +
+    "included, interpreted and codegen'd") {
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.types._
+    // the formula the kernel replaced, kept as the reference
+    def hof(v: Column): Column = {
+      val n = VectorOps.l2norm(v)
+      when(n === lit(0.0), v)
+        .otherwise(transform(v, x => (x.cast(DoubleType) / n).cast(FloatType)))
+    }
+    val rnd = new scala.util.Random(20261017L)
+    def scale(): Double = math.pow(10, rnd.nextInt(9) - 4)
+    val randFloat = for (d <- Seq(1, 16, 768); _ <- 1 to 20) yield {
+      val s = scale()
+      (0 until d).map(_ => (rnd.nextGaussian() * s).toFloat)
+    }
+    val randDouble = for (d <- Seq(1, 16, 768); _ <- 1 to 20) yield {
+      val s = scale()
+      (0 until d).map(_ => rnd.nextGaussian() * s)
+    }
+    // null vector, null element, zero-norm vector with a null, zero
+    // vector, empty array
+    def edges[T](one: T, zero: T): Seq[Seq[Any]] =
+      Seq(null, Seq(one, null, one), Seq(null, zero), Seq(zero, zero), Seq())
+    // a non-null-element float column is the embed UDF's output type
+    val cases: Seq[(ArrayType, Seq[Seq[Any]])] = Seq(
+      ArrayType(FloatType, containsNull = false) -> randFloat,
+      ArrayType(FloatType, containsNull = true) -> (randFloat.take(5) ++ edges(3.0f, 0.0f)),
+      ArrayType(DoubleType, containsNull = false) -> randDouble,
+      ArrayType(DoubleType, containsNull = true) -> (randDouble.take(5) ++ edges(3.0, 0.0)))
+    // float/double elements as raw bits, so -0.0, NaN and rounding differ
+    def bits(a: Seq[Any]): Seq[Option[Long]] = Option(a).map(_.map {
+      case null => None
+      case f: Float => Some(java.lang.Float.floatToRawIntBits(f).toLong)
+      case d: Double => Some(java.lang.Double.doubleToRawLongBits(d))
+    }).orNull
+    val modes = Seq("NO_CODEGEN" -> "false", "CODEGEN_ONLY" -> "true")
+    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      for ((mode, wholeStage) <- modes; (t, vs) <- cases) {
+        spark.conf.set(keys(0), mode)
+        spark.conf.set(keys(1), wholeStage)
+        // an RDD source, not a local Seq: ConvertToLocalRelation would
+        // evaluate a projection over local rows interpreted in both modes
+        val df = spark.createDataFrame(
+          spark.sparkContext.parallelize(vs.zipWithIndex.map { case (v, i) => Row(i, v) }, 2),
+          StructType(Seq(StructField("id", IntegerType), StructField("v", t))))
+        val out = df.select($"id", VectorOps.l2normalize($"v").as("got"), hof($"v").as("want"))
+        assert(out.schema("got").copy(name = "want") == out.schema("want"), s"$mode $t")
+        val rows = out.orderBy("id").collect()
+        assert(rows.length == vs.length)
+        rows.foreach { r =>
+          assert(bits(r.getSeq[Any](1)) == bits(r.getSeq[Any](2)), s"$mode $t row ${r.getInt(0)}")
+        }
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("fnv1a64 known test vectors") {
     // Published FNV-1a 64 vectors (http://www.isthe.com/chongo/tech/comp/fnv/)
     assert(Fnv1a64.hash("") == 0xcbf29ce484222325L)

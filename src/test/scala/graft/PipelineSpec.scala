@@ -1,10 +1,22 @@
 package graft
 
 import graft.cdc.Changelog
+import graft.embed.{Embedder, Embedders}
 import graft.model.Mapping
+import graft.ops.{TextOps, VectorOps}
 import graft.pipeline.VectorPipeline
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
+
+/** The shipped featurizer, counting its calls across executors. */
+final class CountingEmbedder(calls: LongAccumulator) extends Embedder {
+  def dim: Int = Embedders.deterministic.dim
+  def embed(text: String): Array[Float] = {
+    calls.add(1)
+    Embedders.deterministic.embed(text)
+  }
+}
 
 /** End-to-end semantics of the CDC replay pipeline on sf0.001. */
 class PipelineSpec extends SparkSpec {
@@ -44,6 +56,30 @@ class PipelineSpec extends SparkSpec {
     val twice = VectorPipeline.latestByPk(replayed)
       .select("schema", "table", "primary_key", "lsn", "op")
     assert(once.exceptAll(twice).isEmpty && twice.exceptAll(once).isEmpty)
+  }
+
+  test("each output point is embedded exactly once (vectorPoints and the " +
+    "l2normalize(embed(text)) shape)") {
+    val calls = spark.sparkContext.longAccumulator("embed_calls")
+    VectorPipeline.vectorPoints(changes, Mapping.documents, new CountingEmbedder(calls))
+      .write.format("noop").mode("overwrite").save()
+    val n = points.count()
+    assert(n > 0)
+    assert(calls.value == n, s"${calls.value} embed calls for $n points")
+
+    // the index maintainer's projection: normalize straight over the UDF
+    calls.reset()
+    val embed = Embedders.embedColumn(new CountingEmbedder(calls))
+    val texts = VectorPipeline.latestByPk(changes)
+      .filter(col("op") =!= "d")
+      .withColumn("text", TextOps.textConcat(Mapping.documents.textColumns
+        .map(c => element_at(col("after"), c))))
+      .filter(length(col("text")) > 0)
+    texts.select(VectorOps.l2normalize(embed(col("text"))).cast("array<double>"))
+      .write.format("noop").mode("overwrite").save()
+    val m = texts.count()
+    assert(m > 0)
+    assert(calls.value == m, s"${calls.value} embed calls for $m rows")
   }
 
   test("no change visible for unmapped tables (F1)") {
