@@ -1,18 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** The one-line result: per query the min of its two timed passes, or
+    * its first error. A failed query is listed under `failed` and left out
+    * of `queries` and of `value`. */
+  def summary(results: Seq[(String, Either[Throwable, Double])],
+              sfDir: String): String = {
+    val ok = results.collect { case (name, Right(sec)) => name -> sec }
+    val failed = results.collect { case (name, Left(_)) => name }
+    val qs = ok.map { case (k, v) => s"\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    s"""{"metric":"total","value":${ok.map(_._2).sum},"unit":"sec","runs":2,"agg":"min","queries":$qs,"failed":$fs,"sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    def newSession(): SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    var spark = newSession()
-    spark.sparkContext.setLogLevel("WARN")
+    var spark = Harness.session()
     // Warm each query's whole-stage-codegen classes on the smallest fixture:
     // generated code is scale-independent, so the compile cost (which
     // dominates cold runs) is paid once here, and the timed runs below
@@ -27,58 +31,44 @@ object Bench {
       require(unknown.isEmpty,
         s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.mkString(",")}")
     }
-    // The two warm-up phases below are UNTIMED setup; they run their
-    // independent jobs from a small driver-side pool (guide §2.6) because
-    // each sf0.001 plan keeps only a couple of cores busy and the serial
-    // loop left the box idle for minutes. The timed region (two min-of-2
-    // noop passes, strictly sequential) is untouched — same methodology,
-    // same generated classes, same cache state when timing starts.
-    def inPool(items: Seq[() => Unit]): Unit = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(8, math.max(1, cpus.toInt / 4)))
-      try items.map(f => pool.submit(new Runnable { def run(): Unit = f() }))
-        .foreach(_.get())
-      finally pool.shutdown()
-    }
-    inPool(SparkEntry.queries.toSeq
+    // The two warm-up phases below are UNTIMED setup, so their failures are
+    // dropped; they run their independent jobs from the harness pool
+    // (guide §2.6) because each sf0.001 plan keeps only a couple of cores
+    // busy and the serial loop left the box idle for minutes. The timed
+    // region (two min-of-2 noop passes, strictly sequential) is untouched —
+    // same methodology, same generated classes, same cache state when
+    // timing starts.
+    Harness.inPool(SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (_, fn) => () =>
+      .map { case (name, fn) => name -> (() =>
         // noop write, not count(): warm the SAME generated classes the
         // timed passes execute (a counted plan prunes differently)
-        try fn(spark, "/root/testdata/sf0.001")
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => }
+        Harness.noop(fn(spark, "/root/testdata/sf0.001")))
       })
     // Warm the target-SF data path (OS page cache + parquet footers): the
     // timed loop measures query execution, and without this pre-read the
     // alphabetically-first queries absorb every table's first-touch disk
     // I/O while later ones read from memory — noise, not plan cost.
-    inPool(new java.io.File(sfDir).listFiles()
+    Harness.inPool(new java.io.File(sfDir).listFiles()
       .filter(_.getName.endsWith(".parquet")).toSeq
-      .map { f => () =>
+      .map { f => f.getName -> (() =>
         // a count() would satisfy itself from footer metadata without
         // touching data pages; the noop sink drives the real column scan
-        try spark.read.parquet(f.getPath)
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => }
+        Harness.noop(spark.read.parquet(f.getPath)))
       })
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    // Time a noop WRITE, never count(): count() lets Catalyst prune every
-    // aggregate expression the row count doesn't reference, so a query
-    // whose expensive work lives in un-grouped, un-ordered output columns
-    // measured a fiction (round-13 finding: q_poisson_bootstrap at sf1 was
-    // 2.3 s counted vs 61 s real — the whole ×16 replicate agg optimized
-    // away). The noop sink executes the COMPLETE plan with every output
-    // column materialized and writes nothing.
-    def exec(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def pass(over: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
-        : Map[String, Double] = over.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { exec(fn(spark, sfDir)) } catch { case _: Throwable => () }
-      name -> (System.nanoTime() - t0) / 1e9
+    def pass(over: Seq[(String, (SparkSession, String) => DataFrame)])
+        : Map[String, Either[Throwable, Double]] = over.map { case (name, fn) =>
+      name -> Harness.timedNoop(fn(spark, sfDir))
     }.toMap
+    def minOf2(chunk: Seq[(String, (SparkSession, String) => DataFrame)])
+        : Seq[(String, Either[Throwable, Double])] = {
+      val (p1, p2) = (pass(chunk), pass(chunk))
+      chunk.map { case (name, _) =>
+        name -> Harness.minOf2(p1(name), p2(name))
+      }
+    }
     // Two full timed passes, min per query: the box the bench runs on is
     // shared, and a scheduler hiccup in a single pass shows up as a uniform
     // 1.3-3x inflation of every query — the min of two passes measures the
@@ -102,7 +92,7 @@ object Bench {
     // is not repeated.
     val recycle: Option[Int] =
       sys.env.get("SPARK_GRAFT_RECYCLE").map(_.trim.toInt).filter(_ > 0)
-    val results: Seq[(String, Double)] = recycle match {
+    val results: Seq[(String, Either[Throwable, Double])] = recycle match {
       case None =>
         // absorb first-position bias: the alphabetically-first query pays
         // any residual first-touch cost (JIT tails, allocator warm-up) in
@@ -111,25 +101,21 @@ object Bench {
         // (observed: the first query reading 3–4× its quiet-box time while
         // the rest of the suite sat at a uniform ~1.2× load factor).
         ordered.headOption.foreach { case (_, fn) =>
-          try exec(fn(spark, sfDir)) catch { case _: Throwable => }
+          Harness.timedNoop(fn(spark, sfDir))
         }
-        val (p1, p2) = (pass(ordered), pass(ordered))
-        ordered.map { case (name, _) => name -> math.min(p1(name), p2(name)) }
+        minOf2(ordered)
       case Some(n) =>
         ordered.grouped(n).toSeq.flatMap { chunk =>
           graft.util.SessionCache.invalidate(spark)
           spark.stop()
-          spark = newSession()
-          spark.sparkContext.setLogLevel("WARN")
+          spark = Harness.session()
           pass(chunk) // untimed warm: artifacts + first-touch, discarded
-          val (p1, p2) = (pass(chunk), pass(chunk))
-          chunk.map { case (name, _) => name -> math.min(p1(name), p2(name)) }
+          minOf2(chunk)
         }
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","runs":2,"agg":"min","queries":$qs,"sf":"$sfDir"}""")
+    for ((name, Left(e)) <- results) System.err.println(s"[bench] $name failed: $e")
+    println(summary(results, sfDir))
     spark.stop()
+    if (results.exists(_._2.isLeft)) sys.exit(1)
   }
 }

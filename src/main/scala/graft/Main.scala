@@ -7,7 +7,7 @@ import graft.pipeline.VectorPipeline
 import graft.sink.{MilvusSink, ParquetVectorStore, QdrantSink}
 import graft.stream.{CdcStream, Health, HealthServer, Supervisor}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
 /** Process entry point — the engine-shaped equivalent of the reference's
@@ -23,14 +23,9 @@ object Main {
     val storeDir = if (args.length > 1) args(1) else "/tmp/graft-store"
     require(cfg.mappings.nonEmpty, "config carries no table mappings")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-cdc2vec")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val builder = Harness.builder().appName("graft-cdc2vec")
+    sys.env.get("SPARK_MASTER").foreach(builder.master) // deployment setting
+    val spark = Harness.start(builder)
 
     val embedder = mkEmbedder(cfg)
     val health = new Health().register(spark)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,59 +8,33 @@ object Verify {
     // optional third arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    // Queries run CONCURRENTLY from a small driver-side pool (guide §2.6:
-    // overlap independent jobs so the next query's tasks back-fill cores
-    // the current query's straggler tail leaves idle — at verify scale
-    // most queries keep only a few of the 32 cores busy). Each query's
-    // plan, its result, and its output file are untouched: outputs go to
-    // disjoint per-query directories, every registered query is
-    // deterministic (trailing ORDER BY convention), and SessionCache
-    // memoizes shared artifacts under a per-entry lock, so concurrent
-    // consumers block on one build exactly as sequential ones did.
-    val work = SparkEntry.queries.toSeq.sortBy(_._1)
+    // Queries run CONCURRENTLY from the harness pool (guide §2.6: overlap
+    // independent jobs so the next query's tasks back-fill cores the
+    // current query's straggler tail leaves idle — at verify scale most
+    // queries keep only a few of the 32 cores busy). Each query's plan, its
+    // result, and its output file are untouched: outputs go to disjoint
+    // per-query directories, every registered query is deterministic
+    // (trailing ORDER BY convention), and SessionCache memoizes shared
+    // artifacts under a per-entry lock, so concurrent consumers block on
+    // one build exactly as sequential ones did.
+    val failed = Harness.inPool(SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    val par = sys.env.get("SPARK_GRAFT_VERIFY_PAR").map(_.trim.toInt)
-      .getOrElse(math.min(8, math.max(1, cpus.toInt / 4)))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-    try {
-      val futures = work.map { case (name, fn) =>
-        pool.submit(new Runnable {
-          def run(): Unit =
-            try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/$name")
-            catch { case e: Throwable =>
-              System.err.println(s"[verify] $name failed: ${e.getMessage}")
-            }
-        })
-      }
-      futures.foreach(_.get())
-    } finally pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+      .map { case (name, fn) => name -> (() =>
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
+      })
+    for ((name, e) <- failed)
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    def q(s: String): String = "\"" + graft.util.Json.escape(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] failed: ${failed.map(_._1).mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -4,8 +4,6 @@ import graft.cdc.Changelog
 import graft.model.Mapping
 import graft.sink.ParquetVectorStore
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable demo of the streaming pipeline: replays the synthetic change
   * log through the file-envelope source into a parquet vector store and
   * prints the resulting state. Usage:
@@ -14,13 +12,7 @@ import org.apache.spark.sql.SparkSession
 object CdcDemo {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, workDir) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val src = s"$workDir/envelopes"
     Changelog.envelopes(spark, sfDir).coalesce(1)

@@ -1,15 +1,9 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Dev-only: dump formatted plans for scan/join queries to audit pushdown,
   * pruning, and join strategy. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     val dir = "/root/testdata/sf0.01"
     val defaults = Seq("q_scan_project_filter", "q_join_broadcast", "q_join_shuffle",
       "q_topk", "q_agg_hash", "q_ngram_containment", "q_bm25",

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness
 
 /** Growth-law measurement for the scale-critical query tail (VERDICT r11
   * #5): run a named query subset against one fixture directory and report
@@ -37,8 +37,6 @@ import org.apache.spark.sql.SparkSession
 object ScaleLaw {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env("SPARK_GRAFT_SF_DIR")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     val names = sys.env("SPARK_GRAFT_ONLY").split(",").map(_.trim).toSeq
     val unknown = names.toSet.diff(graft.SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
@@ -66,49 +64,38 @@ object ScaleLaw {
     //    (SPARK_GRAFT_SHUFFLE) — the house rule is to size partitions
     //    for DATA VOLUME, not core count; 32 partitions of a 1.2-billion
     //    -pair shuffle at sf3 are ~40M rows each.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
+    val builder = Harness.builder()
       .config("spark.executor.heartbeatInterval", "60s")
       .config("spark.network.timeout", "800s")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .foreach(n => builder.config("spark.sql.shuffle.partitions", n))
     sys.env.get("SPARK_GRAFT_PAGESIZE")
       .foreach(p => builder.config("spark.buffer.pageSize", p))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.start(builder)
     val subset = names.map(n => n -> graft.SparkEntry.queries(n))
+    // untimed warm-ups: failures are dropped here and recorded by the
+    // timed passes. The codegen warm-up runs the same noop plan the timed
+    // passes run (a counted plan prunes differently, so count() would warm
+    // other generated classes).
     subset.foreach { case (name, fn) =>
       println(s"GRAFT:begin $name phase=codegen-warmup")
-      try fn(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => }
+      Harness.timedNoop(fn(spark, "/root/testdata/sf0.001"))
       println(s"GRAFT:end $name phase=codegen-warmup")
     }
     new java.io.File(sfDir).listFiles()
       .filter(_.getName.endsWith(".parquet"))
-      .foreach { f =>
-        try spark.read.parquet(f.getPath)
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => }
-      }
-    // Timed passes execute a noop WRITE, never count(): count() lets
-    // Catalyst prune aggregate expressions the row count doesn't reference
-    // and the measured exponent is then a fiction (the Bench.scala
-    // round-13 finding). Output rows are recorded from ONE untimed count.
-    // A throw is recorded next to the time, never swallowed: the r14 sf3
-    // leg's dying JVM produced a JSON where every query "ran" in 5 ms
-    // because the write threw instantly — a failure mode this closes.
-    def pass(phase: String): Map[String, (Double, Option[String])] =
+      .foreach(f => Harness.timedNoop(spark.read.parquet(f.getPath)))
+    // Timed passes execute a noop WRITE (Harness.noop); output rows are
+    // recorded from ONE untimed count. A throw is recorded in place of the
+    // time, never swallowed: the r14 sf3 leg's dying JVM produced a JSON
+    // where every query "ran" in 5 ms because the write threw instantly.
+    def pass(phase: String): Map[String, Either[String, Double]] =
       subset.map { case (name, fn) =>
         println(s"GRAFT:begin $name phase=$phase")
-        val t0 = System.nanoTime()
-        val err =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
-          catch { case e: Throwable => Some(e.getClass.getSimpleName) }
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"GRAFT:end $name phase=$phase sec=$sec%.3f err=${err.getOrElse("none")}")
-        name -> (sec, err)
+        val r = Harness.timedNoop(fn(spark, sfDir)).left.map(_.getClass.getSimpleName)
+        println(s"GRAFT:end $name phase=$phase " +
+          r.fold(e => s"err=$e", sec => f"sec=$sec%.3f"))
+        name -> r
       }.toMap
     pass("warm") // warm: artifacts + first touch, discarded
     val rows: Map[String, Long] = subset.map { case (name, fn) =>
@@ -119,12 +106,11 @@ object ScaleLaw {
     }.toMap
     val (p1, p2) = (pass("timed1"), pass("timed2"))
     val qs = subset.map { case (name, _) =>
-      val errs = Seq(p1(name)._2, p2(name)._2).flatten
-      if (errs.nonEmpty)
-        s"""\"$name\":{\"sec\":null,\"rows\":${rows(name)},\"err\":\"${errs.head}\"}"""
-      else {
-        val sec = math.min(p1(name)._1, p2(name)._1)
-        s"""\"$name\":{\"sec\":$sec,\"rows\":${rows(name)}}"""
+      Harness.minOf2(p1(name), p2(name)) match {
+        case Left(err) =>
+          s"""\"$name\":{\"sec\":null,\"rows\":${rows(name)},\"err\":\"$err\"}"""
+        case Right(sec) =>
+          s"""\"$name\":{\"sec\":$sec,\"rows\":${rows(name)}}"""
       }
     }.mkString("{", ",", "}")
     println(s"""{"metric":"scalelaw","sf":"$sfDir","queries":$qs}""")

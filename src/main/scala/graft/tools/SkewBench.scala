@@ -102,13 +102,7 @@ object SkewBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft-skewbench")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val eBase = sys.env.getOrElse("SKEWBENCH_EDGES", "1000000").toLong
     val hubBase = sys.env.getOrElse("SKEWBENCH_HUB", "5000").toLong
