@@ -17,24 +17,20 @@ object Harness {
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** `local[cores]` with one shuffle partition per core, UTC session time,
-    * no UI, and parquet NANOS timestamps read as longs (the fixtures carry
-    * them; `Q.events` converts). */
+    * no UI, parquet NANOS timestamps read as longs (the fixtures carry
+    * them; `Q.events` converts), and WARN logging set as a config so it
+    * holds while the context starts; a `setLogLevel` after `getOrCreate`
+    * would let its ~20 start-up INFO lines through. */
   def builder(cores: Int = cpus): SparkSession.Builder = SparkSession.builder()
     .master(s"local[$cores]")
     .config("spark.sql.shuffle.partitions", cores.toLong)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-  /** Gets or creates the session `b` describes, logging at WARN. */
-  def start(b: SparkSession.Builder): SparkSession = {
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+    .config("spark.log.level", "WARN")
 
   /** The session of [[builder]]`(cores)`, with nothing added. */
-  def session(cores: Int = cpus): SparkSession = start(builder(cores))
+  def session(cores: Int = cpus): SparkSession = builder(cores).getOrCreate()
 
   /** Driver-side threads for independent jobs: a sf0.001 or verify-scale
     * plan keeps only a few cores busy, so a handful of concurrent queries

@@ -25,7 +25,7 @@ object Main {
 
     val builder = Harness.builder().appName("graft-cdc2vec")
     sys.env.get("SPARK_MASTER").foreach(builder.master) // deployment setting
-    val spark = Harness.start(builder)
+    val spark = builder.getOrCreate()
 
     val embedder = mkEmbedder(cfg)
     val health = new Health().register(spark)

@@ -318,9 +318,12 @@ object GroupE {
         |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
       graft.GraftExtensions.register(spark)
       tbl(spark, dir, "documents").createOrReplaceTempView("graft_documents")
-      spark.sql(
+      // spark.sql analyses eagerly: the frame holds the view's plan, so
+      // the session-global name can go at once
+      try spark.sql(
         """SELECT doc_id, lang, fnv1a64(text) AS text_hash
           |FROM graft_documents ORDER BY doc_id""".stripMargin)
+      finally spark.catalog.dropTempView("graft_documents")
     },
 
     // Manual skew-join: when BOTH join sides are too large to broadcast

@@ -424,12 +424,12 @@ object GroupG {
         .orderBy("event_id")
     },
 
-    // Correlated LATERAL subquery through the SQL surface: each customer's
-    // two most recent qualifying orders — the "top-N per entity" idiom a
-    // SQL user writes with LATERAL. Catalyst decorrelates it into the
-    // window plan a DataFrame user would have written (no per-row
-    // re-execution, no nested loop); the oracle runs the same shape in
-    // DuckDB's native LATERAL.
+    // Top-N per entity: each customer's two most recent qualifying orders,
+    // the idiom a SQL user writes with a correlated LATERAL subquery (the
+    // oracle runs exactly that in DuckDB). Here it is the plan Catalyst
+    // decorrelates the LATERAL into — a rank-limited window per customer
+    // (WindowGroupLimit: map-side top-k before the shuffle) joined to the
+    // segment's customers — with no session-global view to register.
     Q("q_lateral_topk",
       """SELECT c.c_custkey, o.o_orderkey,
         |       strftime(o.o_orderdate, '%Y-%m-%d') AS odate
@@ -440,18 +440,16 @@ object GroupG {
         |           ORDER BY o_orderdate DESC, o_orderkey LIMIT 2) o
         |WHERE c.c_mktsegment = 'BUILDING'
         |ORDER BY c_custkey, o_orderkey""".stripMargin) { (spark, dir) =>
-      tbl(spark, dir, "customer").createOrReplaceTempView("g_customer")
-      tbl(spark, dir, "orders").createOrReplaceTempView("g_orders")
-      spark.sql(
-        """SELECT c.c_custkey, o.o_orderkey,
-          |       date_format(o.o_orderdate, 'yyyy-MM-dd') AS odate
-          |FROM g_customer c,
-          |  LATERAL (SELECT o_orderkey, o_orderdate FROM g_orders
-          |           WHERE o_custkey = c.c_custkey
-          |             AND o_orderpriority = '1-URGENT'
-          |           ORDER BY o_orderdate DESC, o_orderkey LIMIT 2) o
-          |WHERE c.c_mktsegment = 'BUILDING'
-          |ORDER BY c_custkey, o_orderkey""".stripMargin)
+      val w = Window.partitionBy("o_custkey")
+        .orderBy(col("o_orderdate").desc, col("o_orderkey"))
+      val top2 = tbl(spark, dir, "orders")
+        .filter(col("o_orderpriority") === "1-URGENT")
+        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 2)
+      tbl(spark, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
+        .join(top2, col("c_custkey") === col("o_custkey"))
+        .select(col("c_custkey"), col("o_orderkey"),
+          date_format(col("o_orderdate"), "yyyy-MM-dd").as("odate"))
+        .orderBy("c_custkey", "o_orderkey")
     },
 
     // k-anonymity with a generalization ladder (k = 5) over the

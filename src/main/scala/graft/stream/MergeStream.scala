@@ -30,12 +30,13 @@ import java.nio.charset.StandardCharsets.UTF_8
   * The store writes O(micro-batch) per trigger:
   *
   *   path/manifest-SEQ.txt     commit log head (atomic rename install)
-  *   path/data/delta-SEQ/      one per merge: the compacted batch,
+  *   path/data/delta-SEQ/      one per merge: the batch collapsed per pk,
   *                             partitionBy(bucket = pmod(fnv1a64(pk), B))
-  *   path/data/base-SEQ/       per-bucket compactions (also bucket-
-  *                             partitioned); a bucket's state = its base
-  *                             file (if any) + its live deltas, collapsed
-  *                             last-writer-wins at read time (merge-on-read)
+  *   path/data/base-SEQ/       the same, from a merge that also compacted
+  *                             buckets (or [[compactAll]]); a bucket's
+  *                             state = its base file (if any) + its live
+  *                             deltas, collapsed last-writer-wins at read
+  *                             time (merge-on-read)
   *
   * The bucket hash is the repo's native codegen'd FNV-1a ([[VectorOps
   * .fnv1a64]]) rather than Spark's Murmur3 so the registered audit
@@ -43,16 +44,24 @@ import java.nio.charset.StandardCharsets.UTF_8
   * bucket ids in DuckDB — an operator debugging a hot bucket sees the
   * actual layout, not a statistical proxy.
   *
-  * A merge (1) writes the batch as one new bucket-partitioned delta dir,
-  * (2) compacts any bucket whose live-delta count exceeds
-  * `maxDeltasPerBucket` (bounding read fan-in AND the small-file count),
-  * (3) commits by atomically renaming the next manifest into place, then
-  * (4) vacuums dirs no retained manifest references. Crash at any point
-  * leaves either the old manifest (orphan delta dir, overwritten by the
-  * replayed batch) or the new one (vacuum backlog, cleared next merge) —
-  * never a torn state; readers resolve exactly one manifest. Untouched
-  * buckets' files are never rewritten (MergeStreamSpec pins this
-  * byte-for-byte).
+  * A merge (1) runs one narrow aggregate over the raw batch — offered max
+  * LSN, accepted max LSN, touched buckets — and from the manifest picks
+  * the buckets due for compaction: touched buckets whose live-delta count
+  * would exceed `maxDeltasPerBucket` (bounding read fan-in AND the
+  * small-file count), plus one stale bucket after a [[split]]; (2) writes
+  * ONE new dir: the accepted rows unioned with those buckets' live rows,
+  * shuffled once by bucket and collapsed last-writer-wins per (bucket,
+  * pk), one file per bucket written; (3) commits by atomically renaming
+  * the next manifest into place, which records the dir as the new base of
+  * the compacted buckets and as a new delta of every other touched
+  * bucket; then (4) vacuums dirs no retained manifest references. Steps
+  * (1) and (2) only read committed dirs and write a dir no manifest names,
+  * so a crash before the rename leaves the old manifest, whole (the orphan
+  * dir is overwritten by the replayed batch, which writes under the same
+  * SEQ, or vacuumed by the next commit); a crash after it leaves the new
+  * one (vacuum backlog, cleared next commit) — never a torn state;
+  * readers resolve exactly one manifest. Untouched buckets' files are
+  * never rewritten (MergeStreamSpec pins this byte-for-byte).
   *
   * == Tombstones and GC (O(manifest), not O(state)) ==
   *
@@ -97,12 +106,14 @@ import java.nio.charset.StandardCharsets.UTF_8
   * `splitThresholdBytes`, the next merge doubles the bucket count without
   * rewriting a byte.
   *
-  * Scale shape: per trigger one shuffle sized by the micro-batch (the
-  * within-batch pk compaction) and one bucket-partitioned O(batch) write;
-  * compaction touches single buckets, amortized O(bucket/maxDeltas) per
-  * merge. Reads prune to live dirs via the manifest and to bucket
-  * partitions via partition pruning, then collapse with one window keyed
-  * by pk — the merge-on-read half of the standard LSM trade.
+  * Scale shape: per trigger two Spark jobs for the stats aggregate and two
+  * for the write — one shuffle of the batch plus the compacted buckets'
+  * live rows, one O(batch + compacted buckets) write. Compaction touches
+  * single buckets, amortized O(bucket/maxDeltas) per merge, and shares the
+  * batch's shuffle and write instead of running its own. Reads prune to
+  * live dirs via the manifest and to bucket partitions via partition
+  * pruning, then collapse with one window keyed by pk — the merge-on-read
+  * half of the standard LSM trade.
   */
 final class ParquetTableStore(path: String,
                               table: String = "public.documents",
@@ -130,8 +141,8 @@ final class ParquetTableStore(path: String,
 
   /** The store's bucket function — pmod of the native FNV-1a 64 over the
     * pk, exactly what `q_merge_amplification` replays in the oracle. */
-  private def bucketCol(b: Int): Column =
-    pmod(VectorOps.fnv1a64(col("pk")), lit(b.toLong)).cast("int")
+  private def bucketCol(b: Int, pk: Column = col("pk")): Column =
+    pmod(VectorOps.fnv1a64(pk), lit(b.toLong)).cast("int")
 
   private def fs(spark: SparkSession) =
     new org.apache.hadoop.fs.Path(path)
@@ -312,7 +323,8 @@ final class ParquetTableStore(path: String,
     * modulus (partition pruning keeps dead partitions unread); dirs older
     * than the current modulus additionally re-derive the current bucket
     * from the pk, because one old physical partition holds several current
-    * buckets and only some may still be live for this dir. */
+    * buckets and only some may still be live for this dir. Every row's
+    * `bucket` is its current bucket id. */
   private def unionLive(spark: SparkSession, m: Manifest): DataFrame = {
     val byDir = scala.collection.mutable.Map.empty[String, Set[Int]]
     m.base.foreach { case (k, d) => byDir(d) = byDir.getOrElse(d, Set.empty) + k }
@@ -324,25 +336,27 @@ final class ParquetTableStore(path: String,
       val scan = spark.read.schema(rowSchema).parquet(s"$dataDir/$d")
         .filter(col("bucket").isInCollection(physical))
       if (mod == m.buckets) scan
-      else scan.filter(bucketCol(m.buckets).isInCollection(ks))
+      else scan.withColumn("bucket", bucketCol(m.buckets))
+        .filter(col("bucket").isInCollection(ks))
     }
     parts.reduceOption(_.unionByName(_))
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rowSchema))
   }
 
-  /** Merge-on-read collapse: latest change per pk wins. Ties (the same
-    * (pk,lsn) re-delivered into two deltas) carry identical content, so
-    * any winner is the same row. */
-  private def collapse(df: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("pk")).orderBy(col("lsn").desc)
-    df.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn", "bucket")
+  /** Last-writer-wins per `keys`: the highest-LSN row wins. Ties (the
+    * same (pk,lsn) re-delivered into two deltas) carry identical content,
+    * so any winner is the same row. */
+  private def lww(df: DataFrame, keys: String*): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col("lsn").desc)
+    df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
   }
 
-  /** Full snapshot including tombstones: pk, lsn, deleted, attrs. */
-  def snapshot(spark: SparkSession): DataFrame =
-    collapse(unionLive(spark, loadManifest(spark).getOrElse(emptyManifest)))
+  /** Full snapshot including tombstones: pk, lsn, deleted, attrs — the
+    * merge-on-read collapse, latest change per pk. */
+  def snapshot(spark: SparkSession): DataFrame = lww(
+    unionLive(spark, loadManifest(spark).getOrElse(emptyManifest)), "pk")
+    .drop("bucket")
 
   /** Live rows (tombstones filtered). */
   def current(spark: SparkSession): DataFrame =
@@ -374,25 +388,6 @@ final class ParquetTableStore(path: String,
 
   // ---- write path -------------------------------------------------------
 
-  /** Collapse one micro-batch of raw change envelopes (RowChange columns)
-    * to its effective latest-per-pk form: mapped table only, null-After
-    * updates skipped, blind deletes (no REPLICA IDENTITY old tuple → empty
-    * pk) dropped — they identify no row (reference:
-    * internal/cdc/postgres/postgres.go:602-619). */
-  private def compactBatch(changes: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("pk")).orderBy(col("lsn").desc)
-    changes
-      .filter(concat(col("schema"), lit("."), col("table")) === table &&
-        (col("op") === "d" || col("after").isNotNull) &&
-        col("primary_key") =!= "")
-      .select(Seq(col("primary_key").as("pk"), col("lsn").cast("long").as("lsn"),
-        (col("op") === "d").as("deleted")) ++
-        attrs.map(c => element_at(col("after"), c).cast("string").as(c)): _*)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
-  }
-
   /** Max LSN over every change ever OFFERED to [[merge]] by this store
     * instance — before the table filter and the refusal filter, so it
     * tracks offerings, not acceptances. In-memory by design: a restart
@@ -406,89 +401,88 @@ final class ParquetTableStore(path: String,
 
   /** Apply one micro-batch. Re-delivery-safe and order-safe: a stored row
     * is replaced only by a change with a strictly higher LSN, and changes
-    * at or below the GC horizon are refused outright. */
+    * at or below the GC horizon are refused outright. Costs one narrow
+    * stats aggregate and one write ([[commitWrite]]): at streaming cadence
+    * the per-batch job count IS the merge operator's fixed cost. */
   def merge(changes: DataFrame): Unit = {
     val spark = changes.sparkSession
     val m = loadManifest(spark).getOrElse(emptyManifest)
-    val batch = compactBatch(changes)
-      .filter(col("lsn") > lit(m.gc))
-      .withColumn("bucket", bucketCol(m.buckets))
-      .persist()
-    try {
-      // offered watermark BEFORE any filtering: one tiny agg over the raw
-      // envelopes (lsn column only — column pruning keeps the scan narrow)
-      val rawMax = changes.agg(max(col("lsn").cast("long"))).head()
-      if (!rawMax.isNullAt(0))
-        offeredMax = math.max(offeredMax, rawMax.getLong(0))
-      // ONE stats pass over the persisted batch serves both the
-      // empty-trigger check and the touched-buckets/max-lsn bookkeeping
-      // (a separate isEmpty() was a whole extra Spark job per micro-batch
-      // — at streaming cadence the per-batch job count IS the merge
-      // operator's fixed cost). max(lsn) is null exactly when the batch
-      // has no rows; empty triggers (timer fired, no data) must not
-      // commit a manifest.
-      val agg = batch.agg(
-        collect_set(col("bucket")), max(col("lsn"))).head()
-      if (agg.isNullAt(1)) return
-      val seq = m.seq + 1
-      val deltaName = f"delta-$seq%08d"
-      // mode=overwrite clobbers an orphan of the same seq left by a crash
-      // between delta write and manifest commit (that batch is replaying
-      // through this very call). repartition co-locates each bucket into
-      // one task first: a dynamic-partition write otherwise emits a file
-      // per (task × bucket) — the small-file explosion — where this emits
-      // exactly one file per touched bucket per delta.
-      batch.repartition(col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"$dataDir/$deltaName")
-      val touched = agg.getSeq[Int](0).toSet // ≤ numBuckets values
-      val batchMax = agg.getLong(1)
-      var next = m.copy(seq = seq,
-        applied = math.max(m.applied, batchMax),
-        mods = m.mods + (deltaName -> m.buckets),
-        deltas = touched.foldLeft(m.deltas)((d, k) =>
-          d.updated(k, d.getOrElse(k, Nil) :+ deltaName)))
-      val over = touched.filter(k =>
-        next.deltas.getOrElse(k, Nil).size > maxDeltasPerBucket)
-      // post-split drain: migrate ONE stale bucket per merge (lowest id
-      // whose live dirs include an old-modulus dir) so old-modulus dirs
-      // retire deterministically instead of readers paying the pk
-      // re-derivation filter forever on a bucket that never compacts.
-      // One extra bucket compaction per merge, folded into the same commit.
-      val stale = (next.base.keySet ++ next.deltas.keySet).filter { k =>
-        (next.base.get(k).toList ::: next.deltas.getOrElse(k, Nil))
-          .exists(d => next.mods.getOrElse(d, next.buckets) != next.buckets)
-      } -- over
-      val toCompact = over ++ stale.toSeq.sorted.headOption
-      if (toCompact.nonEmpty) next = compactBuckets(spark, next, toCompact)
-      commitManifest(spark, next)
-      vacuum(spark)
-      maybeSplit(spark, next, touched)
-    } finally batch.unpersist()
+    val lsn = col("lsn").cast("long")
+    val bucket = bucketCol(m.buckets, col("primary_key"))
+    // accepted: mapped table only, null-After updates skipped, blind
+    // deletes (no REPLICA IDENTITY old tuple → empty pk) dropped — they
+    // identify no row (reference: internal/cdc/postgres/postgres.go:602-
+    // 619) — and nothing at or below the GC horizon
+    val ok = concat(col("schema"), lit("."), col("table")) === table &&
+      (col("op") === "d" || col("after").isNotNull) &&
+      col("primary_key") =!= "" && lsn > lit(m.gc)
+    // the one stats pass over the raw batch (narrow columns, no window):
+    // the offered max before any filter, the accepted max — null exactly
+    // when nothing is accepted, and an empty trigger must not commit a
+    // manifest — and the touched buckets
+    val st = changes.agg(max(lsn), max(when(ok, lsn)),
+      collect_set(when(ok, bucket))).head()
+    if (!st.isNullAt(0)) offeredMax = math.max(offeredMax, st.getLong(0))
+    if (st.isNullAt(1)) return
+    val touched = st.getSeq[Int](2).toSet // ≤ numBuckets values
+    // this batch's delta would push these past maxDeltasPerBucket
+    val over = touched.filter(k =>
+      m.deltas.getOrElse(k, Nil).size >= maxDeltasPerBucket)
+    // post-split drain: migrate ONE stale bucket per merge (lowest id
+    // whose live dirs include an old-modulus dir) so old-modulus dirs
+    // retire deterministically instead of readers paying the pk
+    // re-derivation filter forever on a bucket that never compacts.
+    val stale = (m.base.keySet ++ m.deltas.keySet).filter { k =>
+      (m.base.get(k).toList ::: m.deltas.getOrElse(k, Nil))
+        .exists(d => m.mods.getOrElse(d, m.buckets) != m.buckets)
+    } -- over
+    val rows = changes.filter(ok).select(Seq(col("primary_key").as("pk"),
+      lsn.as("lsn"), (col("op") === "d").as("deleted")) ++
+      attrs.map(c => element_at(col("after"), c).cast("string").as(c)) :+
+      bucket.as("bucket"): _*)
+    val next = commitWrite(spark, m, Some(rows), touched,
+      over ++ stale.toSeq.sorted.headOption, math.max(m.applied, st.getLong(1)))
+    maybeSplit(spark, next, touched)
   }
 
-  /** Rewrite `buckets` as one base dir: their live dirs collapsed LWW,
-    * tombstones at or below the GC horizon dropped (no pre-horizon change
-    * can arrive to need blocking — [[merge]] refuses them). Other
-    * buckets' files are untouched by construction. The rewrite always
-    * lands under the CURRENT modulus, which is what retires old-modulus
-    * dirs after a [[split]]. */
-  private def compactBuckets(spark: SparkSession, m: Manifest,
-                             buckets: Set[Int]): Manifest = {
-    val scoped = m.copy(
-      base = m.base.filter(kv => buckets(kv._1)),
-      deltas = m.deltas.filter(kv => buckets(kv._1)))
-    val baseName = f"base-${m.seq}%08d"
-    collapse(unionLive(spark, scoped))
+  /** The one write of a commit, then the commit. Unions `rows` (accepted
+    * changes, current bucket ids) with the live rows of the `compact`
+    * buckets, shuffles once by bucket into min(buckets written, shuffle
+    * partitions) tasks — a fixed count AQE does not coalesce into one
+    * task writing every bucket in series — collapses last-writer-wins per
+    * (bucket, pk), drops tombstones at or below the horizon (only live
+    * rows can carry one: [[merge]] refuses such changes), and writes one
+    * dir, one file per bucket. The manifest records it as the new base of
+    * every compacted bucket and as a new delta of every other touched
+    * bucket; it is named `base-SEQ` when it compacts anything, else
+    * `delta-SEQ`. Compaction lands under the CURRENT modulus, which is
+    * what retires old-modulus dirs after a [[split]]; other buckets' files
+    * are untouched by construction. */
+  private def commitWrite(spark: SparkSession, m: Manifest,
+                          rows: Option[DataFrame], touched: Set[Int],
+                          compact: Set[Int], applied: Long): Manifest = {
+    val seq = m.seq + 1
+    val name = f"${if (compact.isEmpty) "delta" else "base"}-$seq%08d"
+    val live = if (compact.isEmpty) None else Some(unionLive(spark, m.copy(
+      base = m.base.filter(kv => compact(kv._1)),
+      deltas = m.deltas.filter(kv => compact(kv._1)))))
+    val n = math.min((touched ++ compact).size,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    // mode=overwrite clobbers an orphan of the same seq left by a crash
+    // before the manifest commit (that batch is replaying through here)
+    lww((rows ++ live).reduce(_.unionByName(_))
+      .repartition(n, col("bucket")), "bucket", "pk")
       .filter(!col("deleted") || col("lsn") > lit(m.gc))
-      .withColumn("bucket", bucketCol(m.buckets))
-      .repartition(col("bucket")) // one file per compacted bucket
       .write.partitionBy("bucket").mode("overwrite")
-      .parquet(s"$dataDir/$baseName")
-    m.copy(
-      mods = m.mods + (baseName -> m.buckets),
-      base = buckets.foldLeft(m.base)((b, k) => b.updated(k, baseName)),
-      deltas = m.deltas -- buckets)
+      .parquet(s"$dataDir/$name")
+    val next = m.copy(seq = seq, applied = applied,
+      mods = m.mods + (name -> m.buckets),
+      base = m.base ++ compact.map(_ -> name),
+      deltas = (touched -- compact).foldLeft(m.deltas -- compact)((d, k) =>
+        d.updated(k, d.getOrElse(k, Nil) :+ name)))
+    commitManifest(spark, next)
+    vacuum(spark)
+    next
   }
 
   /** Record the source's replay horizon — slot confirmed_flush: nothing at
@@ -583,13 +577,11 @@ final class ParquetTableStore(path: String,
     * tombstones at or below the recorded horizon and retires old-modulus
     * dirs after a [[split]]. The O(state) pass an operator schedules
     * deliberately (off-peak), never something the streaming loop runs on
-    * a timer. */
+    * a timer. Writes through [[merge]]'s one-write routine. */
   def compactAll(spark: SparkSession): Unit = {
     val m = loadManifest(spark).getOrElse(emptyManifest)
     val all = m.base.keySet ++ m.deltas.keySet
-    if (all.isEmpty) return
-    commitManifest(spark, compactBuckets(spark, m.copy(seq = m.seq + 1), all))
-    vacuum(spark)
+    if (all.nonEmpty) commitWrite(spark, m, None, Set.empty, all, m.applied)
   }
 
   /** Double the bucket count — a MANIFEST-ONLY commit, zero data writes.
@@ -660,7 +652,9 @@ object ParquetTableStore {
   * [[CdcStream.run]] (which maintains the vector store). */
 object MergeStream {
 
-  /** `gcHorizon`, when given, turns tombstone GC into an operated loop:
+  /** Runs the store's merge over a checkpointed change stream.
+    *
+    * `gcHorizon`, when given, turns tombstone GC into an operated loop:
     * every `gcEveryBatches` micro-batches the store runs one two-phase GC
     * step — the provider's current value becomes the PENDING candidate and
     * the previous cycle's candidate becomes the live replay horizon
@@ -674,8 +668,9 @@ object MergeStream {
     * micro-batches drains the directory before promotion — a segment's
     * first delivery is never refused as a replay, even out of LSN order.
     * The gc step itself is an O(manifest) commit — no data rewrite
-    * happens on this timer. */
-  /** `wireFormat` selects the source: "json" (default) reads envelope
+    * happens on this timer.
+    *
+    * `wireFormat` selects the source: "json" (default) reads envelope
     * lines through Spark's file source; "pgoutput" reads binary WAL
     * segments through the `graft-pgoutput` replay source (the live
     * topology's tap output). `retireSegments` (pgoutput only) closes the

@@ -71,7 +71,7 @@ object ScaleLaw {
       .foreach(n => builder.config("spark.sql.shuffle.partitions", n))
     sys.env.get("SPARK_GRAFT_PAGESIZE")
       .foreach(p => builder.config("spark.buffer.pageSize", p))
-    val spark = Harness.start(builder)
+    val spark = builder.getOrCreate()
     val subset = names.map(n => n -> graft.SparkEntry.queries(n))
     // untimed warm-ups: failures are dropped here and recorded by the
     // timed passes. The codegen warm-up runs the same noop plan the timed

@@ -25,6 +25,8 @@ class HarnessSpec extends SparkSpec {
     assert(spark.sparkContext.uiWebUrl.isEmpty)
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(LogManager.getRootLogger.getLevel == Level.WARN)
+    // set in the builder, so the level holds from the context's start
+    assert(spark.sparkContext.getConf.get("spark.log.level") == "WARN")
   }
 
   test("timedNoop returns the error, not a time, for a query that throws " +

@@ -133,31 +133,106 @@ class MergeStreamSpec extends SparkSpec {
 
   test("a merge rewrites only touched buckets: untouched buckets' files " +
     "stay byte-identical") {
-    val dir = tmp() + "/table"
-    val store = new ParquetTableStore(dir, numBuckets = 4)
-    // find two pks landing in different buckets under pmod(fnv1a64(pk), 4)
-    val bucketOf = (1 to 16).map(_.toString).toDF("pk")
-      .select(col("pk"), pmod(graft.ops.VectorOps.fnv1a64(col("pk")), lit(4L))
-        .cast("int").as("b"))
-      .as[(String, Int)].collect().toMap // one job, not 16
-    val (pkA, bA) = bucketOf.head
-    val (pkB, bB) = bucketOf.find(_._2 != bA).get
-    store.merge(change("c", pkA, 10, "a1"))
-    store.merge(change("c", pkB, 20, "b1"))
-    val before = dataFiles(dir)
-    assert(before.keys.exists(_.contains(s"bucket=$bB")), "fixture broken")
-    // touch ONLY pkA's bucket
-    store.merge(change("u", pkA, 30, "a2"))
-    val after = dataFiles(dir)
-    // every pkB-bucket file survives the merge byte-for-byte — the O(state)
-    // full-rewrite path would have rewritten (and re-encoded) all of them
-    val untouched = before.filter(_._1.contains(s"bucket=$bB"))
-    untouched.foreach { case (p, sig) =>
-      assert(after.get(p).contains(sig),
-        s"untouched-bucket file $p was rewritten or dropped by the merge")
+    // maxDeltas 1: the third merge folds bucket bA's compaction into its
+    // one write, which must keep the same guarantees
+    for (maxDeltas <- Seq(4, 1)) {
+      val dir = tmp() + "/table"
+      val store = new ParquetTableStore(dir, numBuckets = 4,
+        maxDeltasPerBucket = maxDeltas)
+      // find two pks landing in different buckets under pmod(fnv1a64(pk), 4)
+      val bucketOf = (1 to 16).map(_.toString).toDF("pk")
+        .select(col("pk"), pmod(graft.ops.VectorOps.fnv1a64(col("pk")), lit(4L))
+          .cast("int").as("b"))
+        .as[(String, Int)].collect().toMap // one job, not 16
+      val (pkA, bA) = bucketOf.head
+      val (pkB, bB) = bucketOf.find(_._2 != bA).get
+      store.merge(change("c", pkA, 10, "a1"))
+      store.merge(change("c", pkB, 20, "b1"))
+      val before = dataFiles(dir)
+      assert(before.keys.exists(_.contains(s"bucket=$bB")), "fixture broken")
+      // touch ONLY pkA's bucket
+      store.merge(change("u", pkA, 30, "a2"))
+      val after = dataFiles(dir)
+      // every pkB-bucket file survives the merge byte-for-byte — the O(state)
+      // full-rewrite path would have rewritten (and re-encoded) all of them
+      val untouched = before.filter(_._1.contains(s"bucket=$bB"))
+      untouched.foreach { case (p, sig) =>
+        assert(after.get(p).contains(sig),
+          s"untouched-bucket file $p was rewritten or dropped by the merge")
+      }
+      assert(store.current(spark).select("pk", "content").as[(String, String)]
+        .collect().toSet == Set((pkA, "a2"), (pkB, "b1")))
+      if (maxDeltas == 1) {
+        assert(store.stats(spark).as[(Int, Boolean, Int)].collect()
+          .contains((bA, true, 0)), "the merge did not compact bucket bA")
+        val Seq(pkC, pkD) = bucketOf.collect {
+          case (pk, b) if b == bA && pk != pkA => pk }.toSeq.sorted.take(2)
+        // a tombstone that will sit at the GC horizon, in a delta of bA
+        store.merge(change("d", pkC, 12, null))
+        store.gc(spark, 12)
+        assert(store.gcHorizon(spark) == 12)
+        // one batch touching only bA (second delta → compaction folded in):
+        // a re-delivered older-LSN upsert of pkA above the horizon, and a
+        // tombstone above it
+        store.merge(change("u", pkA, 25, "stale")
+          .unionByName(change("d", pkD, 35, null)))
+        assert(store.snapshot(spark).select("pk", "lsn", "deleted")
+          .as[(String, Long, Boolean)].collect().toSet ==
+          Set((pkA, 30L, false), (pkB, 20L, false), (pkD, 35L, true)),
+          "compacting merge let an older LSN win, kept a tombstone at the " +
+            "horizon, or dropped one above it")
+        assert(store.stats(spark).as[(Int, Boolean, Int)].collect()
+          .contains((bA, true, 0)), "the merge did not compact bucket bA")
+        val end = dataFiles(dir)
+        untouched.foreach { case (p, sig) =>
+          assert(end.get(p).contains(sig),
+            s"untouched-bucket file $p was rewritten by a compacting merge")
+        }
+      }
     }
-    assert(store.current(spark).select("pk", "content").as[(String, String)]
-      .collect().toSet == Set((pkA, "a2"), (pkB, "b1")))
+  }
+
+  /** Spark jobs `body` starts: counted by a listener up to a marker job
+    * submitted after it, so every earlier job-start event has arrived. */
+  private def jobsIn(body: => Unit): Int = {
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription("jobs-in-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      Iterator.continually(starts.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile { d =>
+          assert(d != null, "marker job never reached the listener")
+          d != "jobs-in-marker"
+        }.size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a merge costs at most four Spark jobs: one stats aggregate and " +
+    "one write, also when it folds in a bucket compaction") {
+    val plain = new ParquetTableStore(tmp() + "/plain")
+    plain.merge(change("c", "1", 10, "v1"))
+    val plainJobs = jobsIn(plain.merge(change("c", "2", 20, "v2")
+      .unionByName(change("u", "1", 30, "v3"))))
+    assert(plainJobs <= 4, s"a plain merge ran $plainJobs jobs")
+    val folded = new ParquetTableStore(tmp() + "/folded", numBuckets = 1,
+      maxDeltasPerBucket = 1)
+    folded.merge(change("c", "1", 10, "v1"))
+    val foldedJobs = jobsIn(folded.merge(change("c", "2", 20, "v2")))
+    assert(folded.stats(spark).as[(Int, Boolean, Int)].collect().toSeq ==
+      Seq((0, true, 0)), "fixture broken: the merge did not compact")
+    assert(foldedJobs <= 4, s"a compacting merge ran $foldedJobs jobs")
+    assert(plain.current(spark).count() == 2 &&
+      folded.current(spark).count() == 2)
   }
 
   test("delta accumulation is bounded: per-bucket compaction + vacuum keep " +

@@ -60,14 +60,15 @@ def _check_one(item):
     files = glob.glob(f"{_OUT}/{name}/*.parquet")
     if not files:
         return name, False, f"FAIL {name}: no spark output"
-    got = con.execute(
-        f"SELECT * FROM read_parquet({files!r})").fetchall()
-    got_cols = [d[0] for d in con.description]
-    if sql is None:  # rows-only query (no oracle)
-        n = len(got)
+    if sql is None:  # rows-only query (no oracle): count, fetch nothing
+        n = con.execute(
+            f"SELECT count(*) FROM read_parquet({files!r})").fetchone()[0]
         if n == 0:
             return name, False, f"FAIL {name} (rows-only, 0 rows)"
         return name, True, f"ok   {name} (rows-only, {n} rows)"
+    got = con.execute(
+        f"SELECT * FROM read_parquet({files!r})").fetchall()
+    got_cols = [d[0] for d in con.description]
     try:
         want = con.execute(sql).fetchall()
         want_cols = [d[0] for d in con.description]
