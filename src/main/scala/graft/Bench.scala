@@ -1,8 +1,8 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
-  /** The one-line result: per query the min of its two timed passes, or
-    * its first error. A failed query is listed under `failed` and left out
+  /** The full record of a run, written to [[DetailPath]]: per query the
+    * min of its two timed passes, or its first error. A failed query is listed under `failed` and left out
     * of `queries` and of `value`. */
   def summary(results: Seq[(String, Either[Throwable, Double])],
               sfDir: String): String = {
@@ -12,6 +12,27 @@ object Bench {
       .mkString("{", ",", "}")
     val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     s"""{"metric":"total","value":${ok.map(_._2).sum},"unit":"sec","runs":2,"agg":"min","queries":$qs,"failed":$fs,"sf":"$sfDir"}"""
+  }
+
+  /** Where a run writes its [[summary]] record (gitignored `tmp/`). */
+  val DetailPath = "tmp/bench_detail.json"
+
+  /** The last stdout line, under 1 KB for any suite: total, queries run,
+    * the failed count with up to ten names, the geometric mean, the five
+    * slowest queries and the path of the full record. Names are cut to 40
+    * characters here; the record keeps them whole. */
+  def compact(results: Seq[(String, Either[Throwable, Double])]): String = {
+    def name(n: String) = "\"" + n.take(40) + "\""
+    def ms(sec: Double) = math.round(sec * 1000) / 1000.0
+    val ok = results.collect { case (n, Right(sec)) => n -> sec }
+    val failed = results.collect { case (n, Left(_)) => n }
+    val geomean =
+      if (ok.isEmpty) 0.0
+      else math.exp(ok.map(q => math.log(math.max(q._2, 1e-9))).sum / ok.size)
+    val slowest = ok.sortBy(-_._2).take(5)
+      .map { case (n, sec) => name(n) + ":" + ms(sec) }.mkString("{", ",", "}")
+    val fs = failed.take(10).map(name).mkString("[", ",", "]")
+    s"""{"metric":"total","value":${ok.map(_._2).sum},"unit":"sec","n":${results.size},"n_failed":${failed.size},"failed":$fs,"geomean":${ms(geomean)},"slowest":$slowest,"detail":"$DetailPath"}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -114,7 +135,10 @@ object Bench {
         }
     }
     for ((name, Left(e)) <- results) System.err.println(s"[bench] $name failed: $e")
-    println(summary(results, sfDir))
+    val detail = java.nio.file.Paths.get(DetailPath)
+    java.nio.file.Files.createDirectories(detail.getParent)
+    java.nio.file.Files.writeString(detail, summary(results, sfDir) + "\n")
+    println(compact(results))
     spark.stop()
     if (results.exists(_._2.isLeft)) sys.exit(1)
   }

@@ -2,7 +2,6 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One document entering the exact-dup gate: `group` shards the filter,
   * `fp` is the content fingerprint (xxhash64 of the normalized text). */
@@ -84,28 +83,13 @@ object BloomDedup {
     (out.result(), bits)
   }
 
+  private val keyed = KeyedFold((d: DocFp) => d.group)(
+    (_: Long, rows: Iterator[DocFp], prior: Option[Array[Long]]) => transition(rows, prior))
+
   /** Streaming gate: one fixed-size bit array per shard group, forever. */
-  def gate(ds: Dataset[DocFp]): Dataset[BloomVerdict] = {
-    implicit val outEnc = Encoders.product[BloomVerdict]
-    implicit val keyEnc = Encoders.scalaLong
-    implicit val stateEnc = Encoders.kryo[Array[Long]]
-    ds.groupByKey(_.group)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: Long, rows: Iterator[DocFp], state: GroupState[Array[Long]]) => {
-          val (verdicts, bits) = transition(rows, state.getOption)
-          state.update(bits)
-          verdicts.iterator
-        })
-  }
+  def gate(ds: Dataset[DocFp]): Dataset[BloomVerdict] = keyed.track(ds)
 
   /** Batch twin of [[gate]] — identical verdicts when the whole corpus
     * arrives as one batch (the equivalence the spec pins). */
-  def gateBatch(ds: Dataset[DocFp]): Dataset[BloomVerdict] = {
-    implicit val outEnc = Encoders.product[BloomVerdict]
-    implicit val keyEnc = Encoders.scalaLong
-    ds.groupByKey(_.group)
-      .flatMapGroups { (_: Long, rows: Iterator[DocFp]) =>
-        transition(rows, None)._1.iterator
-      }
-  }
+  def gateBatch(ds: Dataset[DocFp]): Dataset[BloomVerdict] = keyed.trackBatch(ds)
 }

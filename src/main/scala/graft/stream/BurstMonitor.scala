@@ -1,7 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** One event entering the monitor: `key` is the monitored series (event
   * type), `mi` its event-time minute bucket (epoch minutes). */
@@ -74,29 +73,15 @@ object BurstMonitor {
     (out.result(), (lastFin, ring, open, dropped))
   }
 
+  private val keyed = KeyedFold[String, MinuteArrival, State, BurstRow](_.key,
+    batch = Some(transition(_, _, empty, flush = true)._1.iterator))(
+    (key, rows, prior) => transition(key, rows, prior.getOrElse(empty), flush = false))
+
   /** Streaming monitor: finalized minutes stream out as they close. */
-  def monitor(ds: Dataset[MinuteArrival]): Dataset[BurstRow] = {
-    implicit val outEnc = Encoders.product[BurstRow]
-    implicit val keyEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[State]
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: String, rows: Iterator[MinuteArrival], state: GroupState[State]) => {
-          val (out, next) =
-            transition(key, rows, state.getOption.getOrElse(empty), flush = false)
-          state.update(next)
-          out.iterator
-        })
-  }
+  def monitor(ds: Dataset[MinuteArrival]): Dataset[BurstRow] = keyed.track(ds)
 
   /** Batch twin — identical transition with an end-of-input flush, so one
     * pass over a complete frame reproduces q_burst_detect exactly. */
-  def monitorBatch(ds: Dataset[MinuteArrival]): Dataset[BurstRow] = {
-    implicit val outEnc = Encoders.product[BurstRow]
-    implicit val keyEnc = Encoders.STRING
-    ds.groupByKey(_.key)
-      .flatMapGroups { (key: String, rows: Iterator[MinuteArrival]) =>
-        transition(key, rows, empty, flush = true)._1.iterator
-      }
-  }
+  def monitorBatch(ds: Dataset[MinuteArrival]): Dataset[BurstRow] =
+    keyed.trackBatch(ds)
 }

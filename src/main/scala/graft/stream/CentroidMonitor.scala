@@ -2,7 +2,6 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One labeled vector entering the monitor: components already quantized
   * to floor(x·2²⁴) longs ([[graft.ops.expr.VecQuant]] contract). */
@@ -95,28 +94,14 @@ object CentroidMonitor {
       .as[LabeledVec]
   }
 
+  private val keyed = KeyedFold[Int, LabeledVec, State, CentroidUpdate](_.label)(
+    transition(_, _, _) match { case (out, next) => (out.toSeq, next) })
+
   /** Streaming monitor: one bounded state entry per label, one
     * [[CentroidUpdate]] per (label, micro-batch with arrivals). */
-  def monitor(ds: Dataset[LabeledVec]): Dataset[CentroidUpdate] = {
-    implicit val outEnc = Encoders.product[CentroidUpdate]
-    implicit val keyEnc = Encoders.scalaInt
-    implicit val stateEnc = Encoders.kryo[State]
-    ds.groupByKey(_.label)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (label: Int, rows: Iterator[LabeledVec], state: GroupState[State]) => {
-          val (out, next) = transition(label, rows, state.getOption)
-          state.update(next)
-          out.iterator
-        })
-  }
+  def monitor(ds: Dataset[LabeledVec]): Dataset[CentroidUpdate] = keyed.track(ds)
 
   /** Batch twin — one update per label over the whole frame. */
-  def monitorBatch(ds: Dataset[LabeledVec]): Dataset[CentroidUpdate] = {
-    implicit val outEnc = Encoders.product[CentroidUpdate]
-    implicit val keyEnc = Encoders.scalaInt
-    ds.groupByKey(_.label)
-      .flatMapGroups { (label: Int, rows: Iterator[LabeledVec]) =>
-        transition(label, rows, None)._1.iterator
-      }
-  }
+  def monitorBatch(ds: Dataset[LabeledVec]): Dataset[CentroidUpdate] =
+    keyed.trackBatch(ds)
 }

@@ -1,7 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** One keyed arrival for the CUSUM chart: the observation plus the
   * chart's reference mean `mu` riding with the stream (slack k = μ/8
@@ -63,26 +62,11 @@ object CusumMonitor {
   private def point(key: String, s: S): CuPoint =
     CuPoint(key, s._4, s._1, s._2, s._3, s._5)
 
+  private val keyed = KeyedFold.points((e: CuEvent) => e.key)(fold, point)
+
   /** Streaming chart: one point per touched key per micro-batch. */
-  def track(ds: Dataset[CuEvent]): Dataset[CuPoint] = {
-    implicit val outEnc = Encoders.product[CuPoint]
-    implicit val keyEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[S]
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: String, rows: Iterator[CuEvent], state: GroupState[S]) => {
-          val next = fold(state.getOption, rows)
-          state.update(next)
-          Iterator.single(point(key, next))
-        })
-  }
+  def track(ds: Dataset[CuEvent]): Dataset[CuPoint] = keyed.track(ds)
 
   /** Batch twin over a bounded dataset: the final point per key. */
-  def trackBatch(ds: Dataset[CuEvent]): Dataset[CuPoint] = {
-    implicit val outEnc = Encoders.product[CuPoint]
-    implicit val keyEnc = Encoders.STRING
-    ds.groupByKey(_.key)
-      .mapGroups((key: String, rows: Iterator[CuEvent]) =>
-        point(key, fold(None, rows)))
-  }
+  def trackBatch(ds: Dataset[CuEvent]): Dataset[CuPoint] = keyed.trackBatch(ds)
 }

@@ -1,7 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** One value arrival for the smoother: (user, event-time µs, arrival
   * tiebreak id, value). */
@@ -52,28 +51,12 @@ object EwmaMonitor {
     }
   }
 
+  private val keyed = KeyedFold.points((e: EwmaEvent) => e.user_id)(fold,
+    (user: Long, s: S) => EwmaPoint(user, s._2, s._1))
+
   /** Streaming smoother: one point per touched key per micro-batch. */
-  def track(ds: Dataset[EwmaEvent]): Dataset[EwmaPoint] = {
-    implicit val outEnc = Encoders.product[EwmaPoint]
-    implicit val keyEnc = Encoders.scalaLong
-    implicit val stateEnc = Encoders.kryo[S]
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (user: Long, rows: Iterator[EwmaEvent], state: GroupState[S]) => {
-          val next = fold(state.getOption, rows)
-          state.update(next)
-          Iterator.single(EwmaPoint(user, next._2, next._1))
-        })
-  }
+  def track(ds: Dataset[EwmaEvent]): Dataset[EwmaPoint] = keyed.track(ds)
 
   /** Batch twin over a bounded dataset: the final point per key. */
-  def trackBatch(ds: Dataset[EwmaEvent]): Dataset[EwmaPoint] = {
-    implicit val outEnc = Encoders.product[EwmaPoint]
-    implicit val keyEnc = Encoders.scalaLong
-    ds.groupByKey(_.user_id)
-      .mapGroups { (user: Long, rows: Iterator[EwmaEvent]) =>
-        val s = fold(None, rows)
-        EwmaPoint(user, s._2, s._1)
-      }
-  }
+  def trackBatch(ds: Dataset[EwmaEvent]): Dataset[EwmaPoint] = keyed.trackBatch(ds)
 }

@@ -1,7 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** One token observation entering the tracker (group = the summary key,
   * e.g. language or source). */
@@ -78,29 +77,15 @@ object HeavyHitters {
     }
   }
 
+  private def keyed(k: Int) = KeyedFold((a: TokenArrival) => a.group)(
+    transition(_: String, _: Iterator[TokenArrival], _: Option[Summary], k))
+
   /** Streaming tracker: one bounded summary per group, the post-batch
     * top-10 emitted per (group, micro-batch with arrivals). */
-  def track(ds: Dataset[TokenArrival], k: Int = DefaultK): Dataset[HeavyHitter] = {
-    implicit val outEnc = Encoders.product[HeavyHitter]
-    implicit val keyEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[Summary]
-    ds.groupByKey(_.group)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (group: String, rows: Iterator[TokenArrival],
-         state: GroupState[Summary]) => {
-          val (out, next) = transition(group, rows, state.getOption, k)
-          state.update(next)
-          out.iterator
-        })
-  }
+  def track(ds: Dataset[TokenArrival], k: Int = DefaultK): Dataset[HeavyHitter] =
+    keyed(k).track(ds)
 
   /** Batch twin — one summary pass per group over the whole frame. */
-  def trackBatch(ds: Dataset[TokenArrival], k: Int = DefaultK): Dataset[HeavyHitter] = {
-    implicit val outEnc = Encoders.product[HeavyHitter]
-    implicit val keyEnc = Encoders.STRING
-    ds.groupByKey(_.group)
-      .flatMapGroups { (group: String, rows: Iterator[TokenArrival]) =>
-        transition(group, rows, None, k)._1.iterator
-      }
-  }
+  def trackBatch(ds: Dataset[TokenArrival], k: Int = DefaultK): Dataset[HeavyHitter] =
+    keyed(k).trackBatch(ds)
 }

@@ -1,7 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** One emitted Holt point: the user's updated (level, trend) and the
   * one-step-ahead forecast after a micro-batch that carried arrivals. */
@@ -49,29 +48,12 @@ object HoltMonitor {
     }
   }
 
+  private val keyed = KeyedFold.points((e: EwmaEvent) => e.user_id)(fold,
+    (user: Long, s: S) => HoltPoint(user, s._3, s._1, s._2, s._1 + s._2))
+
   /** Streaming smoother: one point per touched key per micro-batch. */
-  def track(ds: Dataset[EwmaEvent]): Dataset[HoltPoint] = {
-    implicit val outEnc = Encoders.product[HoltPoint]
-    implicit val keyEnc = Encoders.scalaLong
-    implicit val stateEnc = Encoders.kryo[S]
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (user: Long, rows: Iterator[EwmaEvent], state: GroupState[S]) => {
-          val next = fold(state.getOption, rows)
-          state.update(next)
-          Iterator.single(
-            HoltPoint(user, next._3, next._1, next._2, next._1 + next._2))
-        })
-  }
+  def track(ds: Dataset[EwmaEvent]): Dataset[HoltPoint] = keyed.track(ds)
 
   /** Batch twin over a bounded dataset: the final point per key. */
-  def trackBatch(ds: Dataset[EwmaEvent]): Dataset[HoltPoint] = {
-    implicit val outEnc = Encoders.product[HoltPoint]
-    implicit val keyEnc = Encoders.scalaLong
-    ds.groupByKey(_.user_id)
-      .mapGroups { (user: Long, rows: Iterator[EwmaEvent]) =>
-        val s = fold(None, rows)
-        HoltPoint(user, s._3, s._1, s._2, s._1 + s._2)
-      }
-  }
+  def trackBatch(ds: Dataset[EwmaEvent]): Dataset[HoltPoint] = keyed.trackBatch(ds)
 }

@@ -1,7 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** One keyed arrival for the seasonal smoother: `key` is the series
   * (event type, metric name), `us`/`event_id` order arrivals within a
@@ -80,26 +79,11 @@ object HoltWintersMonitor {
       sv.max - sv.min)
   }
 
+  private val keyed = KeyedFold.points((e: HwEvent) => e.key)(fold, point)
+
   /** Streaming smoother: one point per touched key per micro-batch. */
-  def track(ds: Dataset[HwEvent]): Dataset[HwPoint] = {
-    implicit val outEnc = Encoders.product[HwPoint]
-    implicit val keyEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[S]
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: String, rows: Iterator[HwEvent], state: GroupState[S]) => {
-          val next = fold(state.getOption, rows)
-          state.update(next)
-          Iterator.single(point(key, next))
-        })
-  }
+  def track(ds: Dataset[HwEvent]): Dataset[HwPoint] = keyed.track(ds)
 
   /** Batch twin over a bounded dataset: the final point per key. */
-  def trackBatch(ds: Dataset[HwEvent]): Dataset[HwPoint] = {
-    implicit val outEnc = Encoders.product[HwPoint]
-    implicit val keyEnc = Encoders.STRING
-    ds.groupByKey(_.key)
-      .mapGroups((key: String, rows: Iterator[HwEvent]) =>
-        point(key, fold(None, rows)))
-  }
+  def trackBatch(ds: Dataset[HwEvent]): Dataset[HwPoint] = keyed.trackBatch(ds)
 }

@@ -1,7 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** One keyed arrival for the drift detector: the observation plus the
   * operator-chosen test parameters (slack `delta`, alarm threshold
@@ -71,26 +70,11 @@ object PageHinkleyMonitor {
   private def point(key: String, s: S): PhPoint =
     PhPoint(key, s._4, s._1, s._2, s._6, s._5)
 
+  private val keyed = KeyedFold.points((e: PhEvent) => e.key)(fold, point)
+
   /** Streaming detector: one point per touched key per micro-batch. */
-  def track(ds: Dataset[PhEvent]): Dataset[PhPoint] = {
-    implicit val outEnc = Encoders.product[PhPoint]
-    implicit val keyEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[S]
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: String, rows: Iterator[PhEvent], state: GroupState[S]) => {
-          val next = fold(state.getOption, rows)
-          state.update(next)
-          Iterator.single(point(key, next))
-        })
-  }
+  def track(ds: Dataset[PhEvent]): Dataset[PhPoint] = keyed.track(ds)
 
   /** Batch twin over a bounded dataset: the final point per key. */
-  def trackBatch(ds: Dataset[PhEvent]): Dataset[PhPoint] = {
-    implicit val outEnc = Encoders.product[PhPoint]
-    implicit val keyEnc = Encoders.STRING
-    ds.groupByKey(_.key)
-      .mapGroups((key: String, rows: Iterator[PhEvent]) =>
-        point(key, fold(None, rows)))
-  }
+  def trackBatch(ds: Dataset[PhEvent]): Dataset[PhPoint] = keyed.trackBatch(ds)
 }

@@ -2,8 +2,8 @@ package graft.stream
 
 import graft.ops.expr.Fnv1a64
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
 
 /** One keyed arrival for the streaming bootstrap: the metric value plus
   * the row's deterministic replicate-hash key (for lineitem the batch
@@ -109,19 +109,10 @@ object PoissonBootstrapMonitor {
       mbs(1)._1, mbs(14)._1)
   }
 
+  private val keyed = KeyedFold.points((e: PbEvent) => e.key)(fold, point)
+
   /** Streaming CI: one point per touched key per micro-batch. */
-  def track(ds: Dataset[PbEvent]): Dataset[PbPoint] = {
-    implicit val outEnc = Encoders.product[PbPoint]
-    implicit val keyEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[S]
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: String, rows: Iterator[PbEvent], state: GroupState[S]) => {
-          val next = fold(state.getOption, rows)
-          state.update(next)
-          Iterator.single(point(key, next))
-        })
-  }
+  def track(ds: Dataset[PbEvent]): Dataset[PbPoint] = keyed.track(ds)
 
   /** The evicting form's state handler, exposed for TestGroupState specs:
     * on timeout the key's state retires (the last point it emitted while
@@ -130,13 +121,7 @@ object PoissonBootstrapMonitor {
   private[graft] def evictingHandler(idleMs: Long)(
       key: String, rows: Iterator[PbEvent],
       state: GroupState[S]): Iterator[PbPoint] =
-    if (state.hasTimedOut) { state.remove(); Iterator.empty }
-    else {
-      val next = fold(state.getOption, rows)
-      state.update(next)
-      state.setTimeoutDuration(idleMs)
-      Iterator.single(point(key, next))
-    }
+    keyed.evictingHandler(idleMs)(key, rows, state)
 
   /** [[track]] with BOUNDED state — the deployment form: emissions are
     * identical to [[track]] while a key is live, but a key that receives
@@ -147,22 +132,9 @@ object PoissonBootstrapMonitor {
     * against the batch query; a long-running deployment should use this
     * one so finished keys don't grow state without bound. */
   def trackEvicting(ds: Dataset[PbEvent],
-                    idleRetention: java.time.Duration): Dataset[PbPoint] = {
-    implicit val outEnc = Encoders.product[PbPoint]
-    implicit val keyEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[S]
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.ProcessingTimeTimeout)(
-        evictingHandler(idleRetention.toMillis))
-  }
+                    idleRetention: java.time.Duration): Dataset[PbPoint] =
+    keyed.trackEvicting(ds, idleRetention)
 
   /** Batch twin over a bounded dataset: the final point per key. */
-  def trackBatch(ds: Dataset[PbEvent]): Dataset[PbPoint] = {
-    implicit val outEnc = Encoders.product[PbPoint]
-    implicit val keyEnc = Encoders.STRING
-    ds.groupByKey(_.key)
-      .mapGroups((key: String, rows: Iterator[PbEvent]) =>
-        point(key, fold(None, rows)))
-  }
+  def trackBatch(ds: Dataset[PbEvent]): Dataset[PbPoint] = keyed.trackBatch(ds)
 }

@@ -1,7 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** One value observation entering the sketch (group = the summary key,
   * e.g. event_type; values pre-quantized to longs by the caller so the
@@ -130,31 +129,15 @@ object Quantiles {
     }
   }
 
+  private def keyed(eps: Double) = KeyedFold((a: ValueArrival) => a.group)(
+    transition(_: String, _: Iterator[ValueArrival], _: Option[Summary], eps))
+
   /** Streaming sketch: one bounded summary per group, estimates emitted
     * per (group, micro-batch with arrivals). */
   def track(ds: Dataset[ValueArrival], eps: Double = DefaultEps)
-      : Dataset[QuantileEstimate] = {
-    implicit val outEnc = Encoders.product[QuantileEstimate]
-    implicit val keyEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[Summary]
-    ds.groupByKey(_.group)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (group: String, rows: Iterator[ValueArrival],
-         state: GroupState[Summary]) => {
-          val (out, next) = transition(group, rows, state.getOption, eps)
-          state.update(next)
-          out.iterator
-        })
-  }
+      : Dataset[QuantileEstimate] = keyed(eps).track(ds)
 
   /** Batch twin — one summary pass per group over the whole frame. */
   def trackBatch(ds: Dataset[ValueArrival], eps: Double = DefaultEps)
-      : Dataset[QuantileEstimate] = {
-    implicit val outEnc = Encoders.product[QuantileEstimate]
-    implicit val keyEnc = Encoders.STRING
-    ds.groupByKey(_.group)
-      .flatMapGroups { (group: String, rows: Iterator[ValueArrival]) =>
-        transition(group, rows, None, eps)._1.iterator
-      }
-  }
+      : Dataset[QuantileEstimate] = keyed(eps).trackBatch(ds)
 }

@@ -1,7 +1,7 @@
 package graft.stream
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
 
 /** One keyed arrival for the SRM guardrail: the event's calendar day and
   * its user — arm assignment (user parity, the q_chi_square convention)
@@ -57,19 +57,10 @@ object SrmMonitor {
     SrPoint(day, na, nb, chi2, if (chi2 > 3841459L) 1L else 0L)
   }
 
+  private val keyed = KeyedFold.points((e: SrEvent) => e.day)(fold, point)
+
   /** Streaming guardrail: one point per touched day per micro-batch. */
-  def track(ds: Dataset[SrEvent]): Dataset[SrPoint] = {
-    implicit val outEnc = Encoders.product[SrPoint]
-    implicit val keyEnc = Encoders.scalaLong
-    implicit val stateEnc = Encoders.kryo[S]
-    ds.groupByKey(_.day)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (day: Long, rows: Iterator[SrEvent], state: GroupState[S]) => {
-          val next = fold(state.getOption, rows)
-          state.update(next)
-          Iterator.single(point(day, next))
-        })
-  }
+  def track(ds: Dataset[SrEvent]): Dataset[SrPoint] = keyed.track(ds)
 
   /** The evicting form's state handler, exposed for TestGroupState specs:
     * a day idle past its retention retires its distinct-user sets (the
@@ -78,13 +69,7 @@ object SrmMonitor {
   private[graft] def evictingHandler(idleMs: Long)(
       day: Long, rows: Iterator[SrEvent],
       state: GroupState[S]): Iterator[SrPoint] =
-    if (state.hasTimedOut) { state.remove(); Iterator.empty }
-    else {
-      val next = fold(state.getOption, rows)
-      state.update(next)
-      state.setTimeoutDuration(idleMs)
-      Iterator.single(point(day, next))
-    }
+    keyed.evictingHandler(idleMs)(day, rows, state)
 
   /** [[track]] with BOUNDED state — the deployment form: per-day
     * distinct-user sets retire once the day has been idle for
@@ -97,22 +82,9 @@ object SrmMonitor {
     * (set union). The NoTimeout [[track]] remains the bit-exact-twin form
     * the spec pins against the batch query. */
   def trackEvicting(ds: Dataset[SrEvent],
-                    idleRetention: java.time.Duration): Dataset[SrPoint] = {
-    implicit val outEnc = Encoders.product[SrPoint]
-    implicit val keyEnc = Encoders.scalaLong
-    implicit val stateEnc = Encoders.kryo[S]
-    ds.groupByKey(_.day)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.ProcessingTimeTimeout)(
-        evictingHandler(idleRetention.toMillis))
-  }
+                    idleRetention: java.time.Duration): Dataset[SrPoint] =
+    keyed.trackEvicting(ds, idleRetention)
 
   /** Batch twin over a bounded dataset: the final point per day. */
-  def trackBatch(ds: Dataset[SrEvent]): Dataset[SrPoint] = {
-    implicit val outEnc = Encoders.product[SrPoint]
-    implicit val keyEnc = Encoders.scalaLong
-    ds.groupByKey(_.day)
-      .mapGroups((day: Long, rows: Iterator[SrEvent]) =>
-        point(day, fold(None, rows)))
-  }
+  def trackBatch(ds: Dataset[SrEvent]): Dataset[SrPoint] = keyed.trackBatch(ds)
 }

@@ -1,7 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** One effective change entering the monitor (pk non-empty; deletes or
   * upserts with a non-null After — the q_index_staleness population). */
@@ -78,28 +77,12 @@ object StalenessMonitor {
     (out, st)
   }
 
+  private val keyed = KeyedFold((c: PkChange) => c.pk)(transition)
+
   /** Streaming monitor: three values of state per pk, transition rows out. */
-  def monitor(ds: Dataset[PkChange]): Dataset[StatusChange] = {
-    implicit val outEnc = Encoders.product[StatusChange]
-    implicit val keyEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[S]
-    ds.groupByKey(_.pk)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (pk: String, rows: Iterator[PkChange], state: GroupState[S]) => {
-          val (out, next) = transition(pk, rows, state.getOption)
-          state.update(next)
-          out.iterator
-        })
-  }
+  def monitor(ds: Dataset[PkChange]): Dataset[StatusChange] = keyed.track(ds)
 
   /** Batch twin: one pass, final status per pk. */
-  def monitorBatch(ds: Dataset[PkChange]): Dataset[StatusChange] = {
-    implicit val outEnc = Encoders.product[StatusChange]
-    implicit val keyEnc = Encoders.STRING
-    ds.groupByKey(_.pk)
-      .mapGroups { (pk: String, rows: Iterator[PkChange]) =>
-        val s = rows.foldLeft(Option.empty[S])((acc, c) => Some(step(acc, c)))
-        StatusChange(pk, status(s.get), s.get._2)
-      }
-  }
+  def monitorBatch(ds: Dataset[PkChange]): Dataset[StatusChange] =
+    keyed.trackBatch(ds)
 }

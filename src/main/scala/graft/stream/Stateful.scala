@@ -1,7 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** Typed change record for stateful processing (same shape as
   * [[graft.model.Types.rowChangeSchema]]). */
@@ -56,20 +55,10 @@ object Stateful {
     (out, image)
   }
 
-  def reconstruct(changes: Dataset[RowChangeRec]): Dataset[RowChangeRec] = {
-    implicit val enc = Encoders.product[RowChangeRec]
-    implicit val keyEnc = Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING)
-    implicit val stateEnc = Encoders.kryo[Map[String, String]]
-    changes
-      .groupByKey(c => (c.schema, c.table, c.primary_key))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: Key, rows: Iterator[RowChangeRec], state: GroupState[Map[String, String]]) => {
-          val (out, image) = transition(rows, state.getOption)
-          image match {
-            case Some(m) => state.update(m)
-            case None => state.remove()
-          }
-          out.iterator
-        })
-  }
+  private val keyed = new KeyedFold[Key, RowChangeRec, Map[String, String], RowChangeRec](
+    c => (c.schema, c.table, c.primary_key), (_, rows, prior) =>
+      transition(rows, prior) match { case (out, image) => (out.iterator, image) })
+
+  def reconstruct(changes: Dataset[RowChangeRec]): Dataset[RowChangeRec] =
+    keyed.track(changes)
 }

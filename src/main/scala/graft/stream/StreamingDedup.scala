@@ -5,7 +5,6 @@ import graft.ops.DedupOps
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One banded view of a document entering the dedup stream: `bucket` is the
   * MinHash band key (lang folded in), `sig` the full 16-perm signature. */
@@ -77,32 +76,20 @@ object StreamingDedup {
     (hits.result(), rep)
   }
 
+  private def keyed(minAgree: Double) =
+    new KeyedFold[Long, DocSig, (Long, Seq[Long]), DupHit](_.bucket, (_, rows, prior) =>
+      transition(rows, prior, minAgree) match { case (hits, rep) => (hits.iterator, rep) })
+
   /** Streaming flag pass: one bounded state entry per band bucket. A
     * document appears in up to [[NumBands]] buckets, so it can emit up to
     * [[NumBands]] hits — [[consolidate]] collapses them to the best one. */
-  def flagDuplicates(ds: Dataset[DocSig], minAgree: Double = 0.5): Dataset[DupHit] = {
-    implicit val hitEnc = Encoders.product[DupHit]
-    implicit val keyEnc = Encoders.scalaLong
-    implicit val stateEnc = Encoders.kryo[(Long, Seq[Long])]
-    ds.groupByKey(_.bucket)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: Long, rows: Iterator[DocSig], state: GroupState[(Long, Seq[Long])]) => {
-          val (hits, rep) = transition(rows, state.getOption, minAgree)
-          rep.foreach(state.update)
-          hits.iterator
-        })
-  }
+  def flagDuplicates(ds: Dataset[DocSig], minAgree: Double = 0.5): Dataset[DupHit] =
+    keyed(minAgree).track(ds)
 
   /** Batch twin of [[flagDuplicates]] — identical verdicts when the whole
     * corpus arrives as one batch (the equivalence the spec pins). */
-  def flagDuplicatesBatch(ds: Dataset[DocSig], minAgree: Double = 0.5): Dataset[DupHit] = {
-    implicit val hitEnc = Encoders.product[DupHit]
-    implicit val keyEnc = Encoders.scalaLong
-    ds.groupByKey(_.bucket)
-      .flatMapGroups { (_: Long, rows: Iterator[DocSig]) =>
-        transition(rows, None, minAgree)._1.iterator
-      }
-  }
+  def flagDuplicatesBatch(ds: Dataset[DocSig], minAgree: Double = 0.5): Dataset[DupHit] =
+    keyed(minAgree).trackBatch(ds)
 
   /** Collapse multi-bucket hits to one verdict per document: best estimate,
     * then lowest representative id — a partitioned window, never global. */

@@ -2,8 +2,7 @@ package graft.stream
 
 import graft.ops.expr.Fnv1a64
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** One distinct-count observation entering the HLL sketch. */
 final case class HllArrival(group: String, value: String)
@@ -78,29 +77,13 @@ object StreamingHll {
     }
   }
 
+  private val keyed = KeyedFold((a: HllArrival) => a.group)(transition)
+
   /** Streaming tracker: 256 bytes of state per group, one estimate per
     * (group, micro-batch with arrivals). */
-  def track(ds: Dataset[HllArrival]): Dataset[HllEstimate] = {
-    implicit val outEnc = Encoders.product[HllEstimate]
-    implicit val keyEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[Array[Byte]]
-    ds.groupByKey(_.group)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (group: String, rows: Iterator[HllArrival],
-         state: GroupState[Array[Byte]]) => {
-          val (out, next) = transition(group, rows, state.getOption)
-          state.update(next)
-          out.iterator
-        })
-  }
+  def track(ds: Dataset[HllArrival]): Dataset[HllEstimate] = keyed.track(ds)
 
   /** Batch twin — one register pass per group over the whole frame. */
-  def trackBatch(ds: Dataset[HllArrival]): Dataset[HllEstimate] = {
-    implicit val outEnc = Encoders.product[HllEstimate]
-    implicit val keyEnc = Encoders.STRING
-    ds.groupByKey(_.group)
-      .flatMapGroups { (group: String, rows: Iterator[HllArrival]) =>
-        transition(group, rows, None)._1.iterator
-      }
-  }
+  def trackBatch(ds: Dataset[HllArrival]): Dataset[HllEstimate] =
+    keyed.trackBatch(ds)
 }

@@ -2,8 +2,7 @@ package graft.stream
 
 import graft.ops.expr.Fnv1a64
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** One distinct-count observation entering the sketch (group = the
   * estimate key, e.g. language; value = the element being counted,
@@ -74,29 +73,15 @@ object StreamingKmv {
     else (Seq(KmvEstimate(group, s.size.toLong, estimate(s, k))), s)
   }
 
+  private def keyed(k: Int) = KeyedFold((a: KmvArrival) => a.group)(
+    transition(_: String, _: Iterator[KmvArrival], _: Option[Summary], k))
+
   /** Streaming tracker: k longs of state per group, one estimate emitted
     * per (group, micro-batch with arrivals). */
-  def track(ds: Dataset[KmvArrival], k: Int = DefaultK): Dataset[KmvEstimate] = {
-    implicit val outEnc = Encoders.product[KmvEstimate]
-    implicit val keyEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.kryo[Summary]
-    ds.groupByKey(_.group)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (group: String, rows: Iterator[KmvArrival],
-         state: GroupState[Summary]) => {
-          val (out, next) = transition(group, rows, state.getOption, k)
-          state.update(next)
-          out.iterator
-        })
-  }
+  def track(ds: Dataset[KmvArrival], k: Int = DefaultK): Dataset[KmvEstimate] =
+    keyed(k).track(ds)
 
   /** Batch twin — one summary pass per group over the whole frame. */
-  def trackBatch(ds: Dataset[KmvArrival], k: Int = DefaultK): Dataset[KmvEstimate] = {
-    implicit val outEnc = Encoders.product[KmvEstimate]
-    implicit val keyEnc = Encoders.STRING
-    ds.groupByKey(_.group)
-      .flatMapGroups { (group: String, rows: Iterator[KmvArrival]) =>
-        transition(group, rows, None, k)._1.iterator
-      }
-  }
+  def trackBatch(ds: Dataset[KmvArrival], k: Int = DefaultK): Dataset[KmvEstimate] =
+    keyed(k).trackBatch(ds)
 }

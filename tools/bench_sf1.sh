@@ -11,6 +11,8 @@
 #    localCheckpoint artifacts at sf1 need the headroom (the default 8g
 #    dies with Spark OOM exit code 52). SPARK_DRIVER_MEM feeds the
 #    forked runMain heap via build.sbt javaOptions — SBT_OPTS does NOT.
+#    The output file is a copy of Bench's detail file, the per-query
+#    record that BenchGate reads.
 # 3. SPARK_GRAFT_RECYCLE=24 (round 12): chunked session recycling inside
 #    Bench — every 24 queries get a fresh SparkSession plus one untimed
 #    warm run before their two timed passes, so late-alphabet queries
@@ -42,10 +44,22 @@ if [ ! -f "$SF1/lineitem.parquet" ]; then
 fi
 
 mkdir -p tmp
-# tee the raw log: grep -o alone would discard the crash diagnostics if
-# the JVM died mid-suite
+# Bench's last stdout line is a <1 KB summary; the per-query record that
+# BenchGate reads is its detail file. Remove the previous one first so a
+# JVM that dies mid-suite cannot leave a stale record to copy. tee the raw
+# log: it keeps the crash diagnostics.
+DETAIL=tmp/bench_detail.json
+rm -f "$DETAIL"
+status=0
 SPARK_DRIVER_MEM=48g SPARK_GRAFT_SF_DIR="$PWD/$SF1" SPARK_GRAFT_CPUS=32 \
   SPARK_GRAFT_RECYCLE="${SPARK_GRAFT_RECYCLE:-24}" \
   sbt -batch "runMain graft.Bench" 2>&1 | tee tmp/bench_sf1.log \
-  | grep -o '{"metric".*' > "$OUT"
-echo "wrote $OUT"
+  | grep -o '{"metric".*' || status=$?
+if [ -f "$DETAIL" ]; then
+  cp "$DETAIL" "$OUT"
+  echo "wrote $OUT"
+else
+  echo "ERROR: Bench wrote no $DETAIL (see tmp/bench_sf1.log)" >&2
+  exit 1
+fi
+exit "$status"
