@@ -2,12 +2,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** The full record of a run, written to [[DetailPath]]: per query the
-    * min of its two timed passes, or its first error. A failed query is listed under `failed` and left out
-    * of `queries` and of `value`. */
+    * min of its two timed passes, or its first error. A failed query is
+    * listed under `failed` and left out of `queries` and of `value`. */
   def summary(results: Seq[(String, Either[Throwable, Double])],
               sfDir: String): String = {
-    val ok = results.collect { case (name, Right(sec)) => name -> sec }
-    val failed = results.collect { case (name, Left(_)) => name }
+    val (ok, failed) = split(results)
     val qs = ok.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -17,23 +16,28 @@ object Bench {
   /** Where a run writes its [[summary]] record (gitignored `tmp/`). */
   val DetailPath = "tmp/bench_detail.json"
 
-  /** The last stdout line, under 1 KB for any suite: total, queries run,
-    * the failed count with up to ten names, the geometric mean, the five
-    * slowest queries and the path of the full record. Names are cut to 40
-    * characters here; the record keeps them whole. */
-  def compact(results: Seq[(String, Either[Throwable, Double])]): String = {
-    def name(n: String) = "\"" + n.take(40) + "\""
+  /** The last stdout line, under 1 KB for any suite: total, scale-factor
+    * directory, queries run, the failed count with up to ten names, the
+    * geometric mean, the five slowest queries and the path of the full
+    * record. */
+  def compact(results: Seq[(String, Either[Throwable, Double])],
+              sfDir: String): String = {
     def ms(sec: Double) = math.round(sec * 1000) / 1000.0
-    val ok = results.collect { case (n, Right(sec)) => n -> sec }
-    val failed = results.collect { case (n, Left(_)) => n }
+    val (ok, failed) = split(results)
     val geomean =
       if (ok.isEmpty) 0.0
       else math.exp(ok.map(q => math.log(math.max(q._2, 1e-9))).sum / ok.size)
     val slowest = ok.sortBy(-_._2).take(5)
-      .map { case (n, sec) => name(n) + ":" + ms(sec) }.mkString("{", ",", "}")
-    val fs = failed.take(10).map(name).mkString("[", ",", "]")
-    s"""{"metric":"total","value":${ok.map(_._2).sum},"unit":"sec","n":${results.size},"n_failed":${failed.size},"failed":$fs,"geomean":${ms(geomean)},"slowest":$slowest,"detail":"$DetailPath"}"""
+      .map { case (n, sec) => "\"" + n + "\":" + ms(sec) }.mkString("{", ",", "}")
+    val fs = failed.take(10).map("\"" + _ + "\"").mkString("[", ",", "]")
+    s"""{"metric":"total","value":${ok.map(_._2).sum},"unit":"sec","sf":"$sfDir","n":${results.size},"n_failed":${failed.size},"failed":$fs,"geomean":${ms(geomean)},"slowest":$slowest,"detail":"$DetailPath"}"""
   }
+
+  /** (name, seconds) of the queries that ran, and the names that failed. */
+  private def split(results: Seq[(String, Either[Throwable, Double])])
+      : (Seq[(String, Double)], Seq[String]) =
+    (results.collect { case (n, Right(sec)) => n -> sec },
+     results.collect { case (n, Left(_)) => n })
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -138,7 +142,7 @@ object Bench {
     val detail = java.nio.file.Paths.get(DetailPath)
     java.nio.file.Files.createDirectories(detail.getParent)
     java.nio.file.Files.writeString(detail, summary(results, sfDir) + "\n")
-    println(compact(results))
+    println(compact(results, sfDir))
     spark.stop()
     if (results.exists(_._2.isLeft)) sys.exit(1)
   }

@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoders}
 
 /** One event entering the monitor: `key` is the monitored series (event
   * type), `mi` its event-time minute bucket (epoch minutes). */
@@ -73,8 +73,7 @@ object BurstMonitor {
     (out.result(), (lastFin, ring, open, dropped))
   }
 
-  private val keyed = KeyedFold[String, MinuteArrival, State, BurstRow](_.key,
-    batch = Some(transition(_, _, empty, flush = true)._1.iterator))(
+  private val keyed = KeyedFold[String, MinuteArrival, State, BurstRow](_.key)(
     (key, rows, prior) => transition(key, rows, prior.getOrElse(empty), flush = false))
 
   /** Streaming monitor: finalized minutes stream out as they close. */
@@ -83,5 +82,7 @@ object BurstMonitor {
   /** Batch twin — identical transition with an end-of-input flush, so one
     * pass over a complete frame reproduces q_burst_detect exactly. */
   def monitorBatch(ds: Dataset[MinuteArrival]): Dataset[BurstRow] =
-    keyed.trackBatch(ds)
+    ds.groupByKey(_.key)(Encoders.STRING).flatMapGroups(
+      (key: String, rows: Iterator[MinuteArrival]) =>
+        transition(key, rows, empty, flush = true)._1.iterator)(Encoders.product[BurstRow])
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * keep the key's state and `None` to remove it. [[track]] runs the fold
   * over a stream, [[trackEvicting]] also retires keys idle past a
   * retention, and [[trackBatch]] is the batch twin: `step` from no prior
-  * state, or `batch` where the operator's end of input differs.
+  * state.
   *
   * Two decisions:
   *  1. State is `Encoders.kryo[S]`, and the key and output encoders are
@@ -28,8 +28,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 final class KeyedFold[K: TypeTag, E, S: ClassTag, O <: Product : TypeTag](
     key: E => K,
-    step: (K, Iterator[E], Option[S]) => (Iterator[O], Option[S]),
-    batch: Option[(K, Iterator[E]) => Iterator[O]] = None) extends Serializable {
+    step: (K, Iterator[E], Option[S]) => (Iterator[O], Option[S])) extends Serializable {
 
   // built on the driver; the handlers shipped to executors never use them
   @transient private[this] val keyEnc: Encoder[K] = ExpressionEncoder[K]()
@@ -63,19 +62,17 @@ final class KeyedFold[K: TypeTag, E, S: ClassTag, O <: Product : TypeTag](
       GroupStateTimeout.ProcessingTimeTimeout)(evictingHandler(idleRetention.toMillis) _)
 
   def trackBatch(ds: Dataset[E]): Dataset[O] = ds.groupByKey(key)(keyEnc)
-    .flatMapGroups(batch.getOrElse((k: K, rows: Iterator[E]) => step(k, rows, None)._1))
+    .flatMapGroups((k: K, rows: Iterator[E]) => step(k, rows, None)._1)
 }
 
 object KeyedFold {
 
   /** An operator whose `transition` returns the rows to emit and the key's
     * next state, which is always kept. */
-  def apply[K: TypeTag, E, S: ClassTag, O <: Product : TypeTag](
-      key: E => K, batch: Option[(K, Iterator[E]) => Iterator[O]] = None)(
+  def apply[K: TypeTag, E, S: ClassTag, O <: Product : TypeTag](key: E => K)(
       transition: (K, Iterator[E], Option[S]) => (Seq[O], S)): KeyedFold[K, E, S, O] =
     new KeyedFold[K, E, S, O](key, (k, rows, prior) =>
-      transition(k, rows, prior) match { case (out, next) => (out.iterator, Some(next)) },
-      batch)
+      transition(k, rows, prior) match { case (out, next) => (out.iterator, Some(next)) })
 
   /** A monitor that folds each key's rows into its state and emits one
     * point per touched key. */

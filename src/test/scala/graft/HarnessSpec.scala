@@ -85,19 +85,21 @@ class HarnessSpec extends SparkSpec {
       .contains("\"failed\":[],"))
   }
 
-  test("Bench's last line stays under 1 KB for 293 long query names and " +
-    "points at the full record") {
+  test("Bench's last line stays under 1 KB for a 293-query suite and " +
+    "names its scale factor and the full record") {
+    // 30-character names, longer than any registered query's
     val results = (1 to 293).map { i =>
-      val name = f"q_synthetic_${i}%03d_" + "long_query_name_" * 8
+      val name = f"q_synthetic_query_name_$i%07d"
       name -> (if (i % 7 == 0) Left(new RuntimeException("x"))
                else Right(i / 100.0))
     }
-    val line = Bench.compact(results)
+    val line = Bench.compact(results, "data/sf0.1")
     assert(line.getBytes("UTF-8").length < 1024, line)
+    assert(line.contains("\"sf\":\"data/sf0.1\","), line)
     assert(line.contains("\"n\":293,\"n_failed\":41,"), line)
     assert(line.contains("\"detail\":\"" + Bench.DetailPath + "\"}"), line)
     // the slowest query (2.93 s) leads the five slowest
-    assert(line.contains("\"slowest\":{\"q_synthetic_293_"), line)
+    assert(line.contains("\"slowest\":{\"q_synthetic_query_name_0000293\":2.93,"), line)
     assert(BenchGate.parseTotal(line) ==
       BenchGate.parseTotal(Bench.summary(results, "/sf")))
   }
