@@ -10,7 +10,7 @@ object Bench {
     val qs = ok.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    s"""{"metric":"total","value":${ok.map(_._2).sum},"unit":"sec","runs":2,"agg":"min","queries":$qs,"failed":$fs,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":${ok.map(_._2).sum},"unit":"sec","runs":2,"agg":"min","queries":$qs,"failed":$fs,"sf":"${graft.util.Json.escape(sfDir)}"}"""
   }
 
   /** Where a run writes its [[summary]] record (gitignored `tmp/`). */
@@ -30,7 +30,7 @@ object Bench {
     val slowest = ok.sortBy(-_._2).take(5)
       .map { case (n, sec) => "\"" + n + "\":" + ms(sec) }.mkString("{", ",", "}")
     val fs = failed.take(10).map("\"" + _ + "\"").mkString("[", ",", "]")
-    s"""{"metric":"total","value":${ok.map(_._2).sum},"unit":"sec","sf":"$sfDir","n":${results.size},"n_failed":${failed.size},"failed":$fs,"geomean":${ms(geomean)},"slowest":$slowest,"detail":"$DetailPath"}"""
+    s"""{"metric":"total","value":${ok.map(_._2).sum},"unit":"sec","sf":"${graft.util.Json.escape(sfDir)}","n":${results.size},"n_failed":${failed.size},"failed":$fs,"geomean":${ms(geomean)},"slowest":$slowest,"detail":"$DetailPath"}"""
   }
 
   /** (name, seconds) of the queries that ran, and the names that failed. */

@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.util.DirSwap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,7 +35,7 @@ object IndexStore {
     * are given. Returns cells sorted (s, code) — the [[Pq.train]] order. */
   def loadPq(spark: SparkSession, path: String,
              expectSubspaces: Int = -1, expectK: Int = -1): Seq[Pq.Cell] = {
-    recover(spark, path)
+    DirSwap.recover(spark, path)
     val cells = spark.read.parquet(path)
       .select(col("s").cast("int"), col("code").cast("int"), col("centroid"))
       .collect()
@@ -59,7 +61,7 @@ object IndexStore {
   /** Load IVF centroids sorted by cluster id; validates k when given. */
   def loadIvf(spark: SparkSession, path: String,
               expectK: Int = -1): Seq[(Int, Seq[Double])] = {
-    recover(spark, path)
+    DirSwap.recover(spark, path)
     val cs = spark.read.parquet(path)
       .select(col("cluster").cast("int"), col("centroid"))
       .collect()
@@ -75,52 +77,18 @@ object IndexStore {
     * [[Pq.trainDf]] / [[Ivf.trainDf]], feeding [[Pq.encodeByJoin]] /
     * [[Ivf.assignByJoin]] directly. */
   def loadPqDf(spark: SparkSession, path: String): DataFrame = {
-    recover(spark, path)
+    DirSwap.recover(spark, path)
     spark.read.parquet(path).select(col("s").cast("int"),
       col("code").cast("int"), col("centroid"))
   }
 
   def loadIvfDf(spark: SparkSession, path: String): DataFrame = {
-    recover(spark, path)
+    DirSwap.recover(spark, path)
     spark.read.parquet(path).select(col("cluster").cast("int"), col("centroid"))
   }
 
-  // ---- atomic install ---------------------------------------------------
-
-  /** Crash recovery for the swap: a crash between "move live aside" and
-    * "install new" leaves the only complete artifact at `path + ".old"` —
-    * restore it before any load (the ParquetTableStore recover contract). */
-  private def recover(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    if (!fs.exists(dst) && fs.exists(old) && !fs.rename(old, dst))
-      throw new java.io.IOException(s"index recover: could not restore $old")
-  }
-
-  /** Write to `path + ".new"`, then swap into place — a loader sees the
-    * old artifact or the new one, never a partial directory. The `.old`
-    * safety copy is deleted only AFTER the new artifact is installed, so
-    * a crash at any point leaves a complete artifact recoverable by
-    * [[recover]]. */
-  private def install(spark: SparkSession, path: String, df: DataFrame): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(spark, path) // a prior crash's .old must be re-adopted first
-    val tmp = new org.apache.hadoop.fs.Path(path + ".new")
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(dst)) {
-      fs.delete(old, true) // stale aside from an interrupted install
-      if (!fs.rename(dst, old))
-        throw new java.io.IOException(s"index install: could not move $dst aside")
-    }
-    if (!fs.rename(tmp, dst)) {
-      fs.rename(old, dst)
-      throw new java.io.IOException(s"index install: could not install $tmp")
-    }
-    fs.delete(old, true)
-  }
+  /** Single-file overwrite through [[DirSwap]]: a loader sees
+    * the old artifact or the new one, never a partial directory. */
+  private def install(spark: SparkSession, path: String, df: DataFrame): Unit =
+    DirSwap.install(spark, path)(df.coalesce(1).write.mode("overwrite").parquet(_))
 }

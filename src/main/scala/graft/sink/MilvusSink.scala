@@ -1,5 +1,8 @@
 package graft.sink
 
+import graft.sink.grpc.MilvusProto
+import graft.util.Json
+
 import org.apache.spark.sql.DataFrame
 
 /** Milvus sink (reference: internal/sink/milvus/milvus.go). Two wire
@@ -9,10 +12,10 @@ import org.apache.spark.sql.DataFrame
   *    (`id VARCHAR pk, vector FLOAT_VECTOR, payload JSON`,
   *    milvus.go:77-82), JDK HttpClient, JSON bodies.
   *  - `"grpc"`: the reference's own transport (milvus-sdk-go,
-  *    milvus.go:29-37) — hand-rolled h2c HTTP/2 + protobuf
-  *    ([[graft.sink.grpc.MilvusProto]]), the same protocol stance as the
-  *    from-scratch PostgreSQL replication client. `baseUrl` is then
-  *    `host:port` (a `grpc://` prefix is tolerated).
+  *    milvus.go:29-37) — cleartext HTTP/2 on Netty's codec
+  *    ([[graft.sink.grpc.H2cGrpcClient]]) carrying hand-encoded protobuf
+  *    ([[graft.sink.grpc.MilvusProto]]). `baseUrl` is then `host:port`
+  *    (a `grpc://` prefix is tolerated).
   *
   * Two deliberate deviations recorded in SURVEY.md §7.6 apply to BOTH
   * transports: true `upsert` instead of the reference's duplicate-row
@@ -178,7 +181,7 @@ final class MilvusSink(baseUrl: String, collection: String,
 }
 
 object MilvusSink {
-  private def esc(s: String): String = graft.util.Json.escape(s)
+  private def esc(s: String): String = Json.escape(s)
 
   /** `{"collectionName":…}` — shared by has/load requests. */
   def collectionBody(collection: String): String =
@@ -202,20 +205,17 @@ object MilvusSink {
   /** Body `code` field (0 = success); missing/unparsable counts as 0 so a
     * proxy or old server that omits the envelope is not rejected. */
   def parseCode(respJson: String): Int =
-    try new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(respJson).path("code").asInt(0)
+    try Json.mapper.readTree(respJson).path("code").asInt(0)
     catch { case _: Exception => 0 }
 
   /** Body `message` field for error reporting (empty when absent). */
   def parseMessage(respJson: String): String =
-    try new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(respJson).path("message").asText("")
+    try Json.mapper.readTree(respJson).path("message").asText("")
     catch { case _: Exception => "" }
 
   /** `{"data":{"has":bool}}` from the has-collection response. */
   def parseHas(respJson: String): Boolean =
-    try new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(respJson).path("data").path("has").asBoolean(false)
+    try Json.mapper.readTree(respJson).path("data").path("has").asBoolean(false)
     catch { case _: Exception => false }
 
   /** Vector dimension from a describe-collection response
@@ -223,14 +223,13 @@ object MilvusSink {
   def parseDim(respJson: String): Int =
     try {
       var dim = 0
-      new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(respJson).path("data").path("fields").forEach { f =>
-          if (f.path("name").asText() == "vector")
-            f.path("params").forEach { p =>
-              if (p.path("key").asText() == "dim")
-                dim = p.path("value").asText("0").toInt
-            }
-        }
+      Json.mapper.readTree(respJson).path("data").path("fields").forEach { f =>
+        if (f.path("name").asText() == "vector")
+          f.path("params").forEach { p =>
+            if (p.path("key").asText() == "dim")
+              dim = p.path("value").asText("0").toInt
+          }
+      }
       dim
     } catch { case _: Exception => 0 }
 
@@ -238,21 +237,14 @@ object MilvusSink {
   def upsertBody(collection: String,
                  points: Seq[(String, Seq[Float], Map[String, String])]): String = {
     val data = points.map { case (id, vec, meta) =>
-      val payload = meta.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString(",")
-      s"""{"id":"${esc(id)}","vector":[${vec.mkString(",")}],"payload":{$payload}}"""
+      s"""{"id":"${esc(id)}","vector":[${vec.mkString(",")}],"payload":${Json.stringMap(meta)}}"""
     }.mkString(",")
     s"""{"collectionName":"${esc(collection)}","data":[$data]}"""
   }
 
-  /** Delete filter built in two escape layers: ids are escaped for the
-    * Milvus filter expression (the reference splices raw ids,
-    * milvus.go:166), then the whole expression is JSON-escaped so the
-    * quotes around each id survive as part of the JSON string value. */
-  def deleteBody(collection: String, ids: Seq[String]): String = {
-    val filterExpr = ids
-      .map(id => "\"" + id.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-      .mkString("id in [", ",", "]")
-    s"""{"collectionName":"${esc(collection)}","filter":"${esc(filterExpr)}"}"""
-  }
+  /** The delete filter both wires send ([[MilvusProto.deleteExpr]], ids
+    * escaped for the Milvus expression), then JSON-escaped so the quotes
+    * around each id survive as part of the JSON string value. */
+  def deleteBody(collection: String, ids: Seq[String]): String =
+    s"""{"collectionName":"${esc(collection)}","filter":"${esc(MilvusProto.deleteExpr(ids))}"}"""
 }

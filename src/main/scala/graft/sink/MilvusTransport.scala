@@ -21,10 +21,11 @@ trait MilvusTransport extends AutoCloseable {
   override def close(): Unit = ()
 }
 
-/** gRPC transport over the hand-rolled h2c client — the reference-parity
-  * wire (milvus-sdk-go speaks exactly these MilvusService methods). One
-  * connection per transport instance (per partition in the distributed
-  * paths), calls serialized like the sink's request loop. */
+/** gRPC transport over [[H2cGrpcClient]] (Netty's HTTP/2 codec) — the
+  * reference-parity wire (milvus-sdk-go speaks exactly these
+  * MilvusService methods). One connection per transport instance (per
+  * partition in the distributed paths), calls serialized like the sink's
+  * request loop. */
 final class MilvusGrpcTransport(host: String, port: Int) extends MilvusTransport {
 
   // close() on a never-used transport must stay a no-op: forcing the lazy

@@ -14,25 +14,11 @@ import org.apache.spark.sql.functions._
   */
 final class ParquetVectorStore(path: String) extends Serializable {
 
-  /** Crash recovery for [[compact]]'s write-then-swap: a crash between
-    * "move live aside" and "install compacted" leaves the only complete
-    * log at `path + ".old"` — restore it before any append or read, or a
-    * restarted stream would silently recreate `path` with post-crash
-    * batches only and the next compaction's cleanup would destroy the
-    * sole surviving copy. */
-  private def recover(spark: SparkSession): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dst) && fs.exists(old) && !fs.rename(old, dst))
-      throw new java.io.IOException(s"compact: could not recover $old")
-  }
-
   /** Append one micro-batch of upserts and deletes. Re-delivery of the same
     * batchId is harmless: rows are identical and [[current]] dedupes. */
   def write(upserts: DataFrame, deletes: DataFrame, batchId: Long): Unit = {
     val spark = upserts.sparkSession
-    recover(spark)
+    graft.util.DirSwap.recover(spark, path)
     import spark.implicits._
     val up = upserts.select(col("id"), col("vector"), col("metadata"),
       lit("upsert").as("op"), lit(batchId).as("batch_id"))
@@ -45,7 +31,7 @@ final class ParquetVectorStore(path: String) extends Serializable {
 
   /** Latest state per external id (deletes drop the id). */
   def current(spark: SparkSession): DataFrame = {
-    recover(spark)
+    graft.util.DirSwap.recover(spark, path)
     val w = Window.partitionBy(col("id"))
       .orderBy(col("batch_id").desc, col("op")) // same-batch dup rows identical
     spark.read.parquet(path)
@@ -59,31 +45,17 @@ final class ParquetVectorStore(path: String) extends Serializable {
     * over the log, tiny result) keeps [[current]] reads O(state), not
     * O(history). `batchId` must exceed all live batch ids.
     *
-    * Crash safety: the live log is renamed aside BEFORE the compacted copy
-    * takes its place, so a crash at any step leaves either the old log (at
-    * `path` or recoverable at `path + ".old"`) or the already-complete new
-    * one — never nothing. Must not run concurrently with [[write]]: a batch
-    * appended between the snapshot read and the swap would be lost. */
-  def compact(spark: SparkSession, batchId: Long): Unit = {
-    val tmp = path + ".compact"
-    current(spark)
-      .select(col("id"), col("vector"), col("metadata"),
-        lit("upsert").as("op"), lit(batchId).as("batch_id"))
-      .write.mode("overwrite").parquet(tmp)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    // resolve the filesystem FROM the store path (fs.defaultFS would break
-    // s3a://-style stores)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(old, true) // leftover from a prior crashed compaction
-    if (!fs.rename(dst, old))
-      throw new java.io.IOException(s"compact: could not move $dst aside")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)) {
-      fs.rename(old, dst) // restore the live log before failing
-      throw new java.io.IOException(s"compact: could not install $tmp")
+    * Crash safety is [[graft.util.DirSwap.install]]'s: a crash at any step
+    * leaves the old log or the complete new one, never nothing. Must not
+    * run concurrently with [[write]]: a batch appended between the snapshot
+    * read and the swap would be lost. */
+  def compact(spark: SparkSession, batchId: Long): Unit =
+    graft.util.DirSwap.install(spark, path) { tmp =>
+      current(spark)
+        .select(col("id"), col("vector"), col("metadata"),
+          lit("upsert").as("op"), lit(batchId).as("batch_id"))
+        .write.mode("overwrite").parquet(tmp)
     }
-    fs.delete(old, true)
-  }
 }
 
 /** Qdrant HTTP sink (reference: internal/sink/qdrant/qdrant.go). Point ids
@@ -241,8 +213,7 @@ object QdrantSink {
     * 0 when absent/unparseable. */
   def extractVectorSize(infoJson: String): Int =
     try {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(infoJson)
+      val node = graft.util.Json.mapper.readTree(infoJson)
         .path("result").path("config").path("params").path("vectors").path("size")
       if (node.isInt) node.asInt else 0
     } catch { case _: Exception => 0 }
@@ -252,9 +223,8 @@ object QdrantSink {
   /** `{"points":[{"id":…,"vector":[…],"payload":{…,"ext_id":…}}]}` */
   def upsertBody(points: Seq[(String, Seq[Float], Map[String, String])]): String =
     points.map { case (id, vec, meta) =>
-      val payload = (meta + ("ext_id" -> id)).toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString(",")
-      s"""{"id":${pointId(id)},"vector":[${vec.mkString(",")}],"payload":{$payload}}"""
+      val payload = graft.util.Json.stringMap(meta + ("ext_id" -> id))
+      s"""{"id":${pointId(id)},"vector":[${vec.mkString(",")}],"payload":$payload}"""
     }.mkString("""{"points":[""", ",", "]}")
 
   /** `{"points":[id,…]}` (reference: qdrant.go:257-275). */

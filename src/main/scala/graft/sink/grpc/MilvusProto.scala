@@ -25,8 +25,8 @@ package graft.sink.grpc
   *   DeleteRequest{db_name=2, collection_name=3, expr=5}
   *   common.Status{error_code=1, reason=2}
   *
-  * The mock-server spec (`MilvusGrpcSpec`) pins this encoding end to end
-  * — frames, HPACK, protobuf, call order — so the transport swap is
+  * `MilvusGrpcSpec` pins this encoding end to end against a Netty HTTP/2
+  * server — protobuf, call order, error layers — so the transport is
   * verified at the wire level, not by stubbing the client.
   */
 object MilvusProto {
@@ -116,10 +116,8 @@ object MilvusProto {
       f.int(1, 23L).string(2, "payload")
       f.message(3)(s => { s.message(9) { arr =>
         points.foreach { p =>
-          val json = p._3.toSeq.sortBy(_._1).map { case (k, v) =>
-            s""""${graft.util.Json.escape(k)}":"${graft.util.Json.escape(v)}""""
-          }.mkString("{", ",", "}")
-          arr.bytes(1, json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          arr.bytes(1, graft.util.Json.stringMap(p._3)
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         }
         ()
       }; () })
@@ -133,15 +131,15 @@ object MilvusProto {
   def parseMutation(resp: Array[Byte], op: String): Unit =
     requireOk(ProtoWire.parse(resp), op)
 
-  /** Same non-interpolated id list as the REST path — the reference
-    * splices raw ids into the expr (milvus.go:166, injection-prone); ids
-    * here are escaped into a quoted list. */
-  def delete(collection: String, ids: Seq[String]): Array[Byte] = {
-    val expr = ids
-      .map(id => "\"" + id.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
+  def delete(collection: String, ids: Seq[String]): Array[Byte] =
+    new ProtoWriter().string(3, collection).string(5, deleteExpr(ids)).toBytes
+
+  /** `id in ["…",…]`, the delete filter both wires send. The reference
+    * splices raw ids into the expr (milvus.go:166, injection-prone); here
+    * each id is escaped into a quoted list. */
+  def deleteExpr(ids: Seq[String]): String =
+    ids.map(id => "\"" + id.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
       .mkString("id in [", ",", "]")
-    new ProtoWriter().string(3, collection).string(5, expr).toBytes
-  }
 
   /** common.Status at field 1: error_code(1)≠0 or reason(2) set → fail.
     * Absent status = OK (proto3 zero message is omitted). */

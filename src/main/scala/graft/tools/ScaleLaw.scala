@@ -113,7 +113,7 @@ object ScaleLaw {
           s"""\"$name\":{\"sec\":$sec,\"rows\":${rows(name)}}"""
       }
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"scalelaw","sf":"$sfDir","queries":$qs}""")
+    println(s"""{"metric":"scalelaw","sf":"${graft.util.Json.escape(sfDir)}","queries":$qs}""")
     spark.stop()
   }
 }

@@ -102,5 +102,10 @@ class HarnessSpec extends SparkSpec {
     assert(line.contains("\"slowest\":{\"q_synthetic_query_name_0000293\":2.93,"), line)
     assert(BenchGate.parseTotal(line) ==
       BenchGate.parseTotal(Bench.summary(results, "/sf")))
+    // a directory name with a quote and a backslash still gives lines a
+    // JSON parser reads back, with the name intact
+    val odd = """data/s"f\0.1"""
+    for (json <- Seq(Bench.compact(results, odd), Bench.summary(results, odd)))
+      assert(graft.util.Json.mapper.readTree(json).path("sf").asText() == odd, json)
   }
 }

@@ -1,16 +1,15 @@
 package graft
 
+import graft.NettyGrpcServer.standardDispatch
 import graft.sink.MilvusSink
-import graft.sink.grpc.{H2, MilvusProto, ProtoWire}
+import graft.sink.grpc.ProtoWire
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
-import java.net.ServerSocket
 import java.nio.charset.StandardCharsets.UTF_8
 
-/** The Milvus gRPC transport pinned at the WIRE level against a mock h2c
-  * gRPC server: real HTTP/2 frames, real HPACK header blocks, real
+/** The Milvus gRPC transport pinned at the WIRE level against a Netty
+  * HTTP/2 server ([[NettyGrpcServer]]): real frames, real HPACK, real
   * protobuf request decoding — no client stubbing. Asserts the same
   * bootstrap call sequence the REST spec pins (has→create→index→load on
   * missing; has→describe→load on existing; dim conflict hard error), the
@@ -19,185 +18,11 @@ import java.nio.charset.StandardCharsets.UTF_8
   * tolerance over the new wire. */
 class MilvusGrpcSpec extends AnyFunSuite {
 
-  /** One mock MilvusService over h2c. Dispatch gets (method, request
-    * message) and returns the response message (or throws GrpcFail to
-    * send a non-zero grpc-status).
-    *
-    * `huffman` switches every response header block to HUFFMAN-coded
-    * literals (grpc-go's encoder path). `streamWindow`/`maxFrame` are
-    * advertised in the server SETTINGS and ENFORCED the way grpc-go
-    * does: an oversized frame, a DATA byte beyond the granted window, or
-    * a client that keeps sending while its window is exhausted all land
-    * in `violations`. */
-  private final class MockMilvus(
-      dispatch: (String, Array[Byte]) => Array[Byte],
-      huffman: Boolean = false,
-      streamWindow: Int = 65535,
-      maxFrame: Int = 16384,
-      // split every trailer block across HEADERS+CONTINUATION (RFC 7540
-      // §6.10 — what a peer does when the block exceeds ITS max frame size)
-      splitTrailers: Boolean = false,
-      // instead of granting window credit on exhaustion, end the stream
-      // with a trailers-only error response (grpc-status, END_STREAM, no
-      // RST, no WINDOW_UPDATE) — grpc-go's shape for an early
-      // RESOURCE_EXHAUSTED rejection of a too-large request
-      earlyTrailerStatus: Option[(String, String)] = None) extends AutoCloseable {
-    val calls = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    val violations = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    private val server = new ServerSocket(0, 8,
-      java.net.InetAddress.getByName("127.0.0.1"))
-    def port: Int = server.getLocalPort
-    @volatile private var running = true
-
-    private val acceptor = new Thread(() => {
-      while (running) {
-        try {
-          val sock = server.accept()
-          new Thread(() => serve(sock)).start()
-        } catch { case _: Exception => () }
-      }
-    })
-    acceptor.setDaemon(true); acceptor.start()
-
-    private def serve(sock: java.net.Socket): Unit = try {
-      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-      val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
-      val preface = new Array[Byte](H2.Preface.length)
-      in.readFully(preface)
-      assert(preface.sameElements(H2.Preface), "bad h2c preface")
-      // initial SETTINGS advertises this test's window/frame limits
-      val sb = java.nio.ByteBuffer.allocate(12)
-      sb.putShort(H2.SettingsInitialWindowSize.toShort).putInt(streamWindow)
-      sb.putShort(H2.SettingsMaxFrameSize.toShort).putInt(maxFrame)
-      H2.writeFrame(out, H2.Frame(H2.Settings, 0, 0, sb.array()))
-      def encode(hs: Seq[(String, String)]): Array[Byte] =
-        if (huffman) H2.encodeHeadersHuffman(hs) else H2.encodeHeaders(hs)
-      val hpack = new H2.HpackDecoder
-      // per-stream state: path from HEADERS, body from DATA
-      val paths = scala.collection.mutable.Map[Int, String]()
-      val bodies = scala.collection.mutable.Map[Int, java.io.ByteArrayOutputStream]()
-      // send-side flow-control enforcement (per connection; the client
-      // runs one stream at a time)
-      var granted = streamWindow.toLong
-      var received = 0L
-      while (true) {
-        val f = H2.readFrame(in)
-        if (f.payload.length > maxFrame)
-          violations.add(s"${f.payload.length}-byte frame exceeds " +
-            s"advertised SETTINGS_MAX_FRAME_SIZE $maxFrame")
-        f.tpe match {
-          case H2.Settings if (f.flags & H2.Ack) == 0 =>
-            H2.writeFrame(out, H2.Frame(H2.Settings, H2.Ack, 0, Array.emptyByteArray))
-          case H2.Headers =>
-            val hs = hpack.decode(f.payload).toMap
-            paths(f.streamId) = hs(":path")
-            assert(hs(":method") == "POST" &&
-              hs("content-type") == "application/grpc" &&
-              hs("te") == "trailers", s"bad grpc request headers: $hs")
-          case H2.Data =>
-            received += f.payload.length
-            if (received > granted)
-              violations.add(s"DATA beyond the granted window " +
-                s"($received > $granted)")
-            bodies.getOrElseUpdate(f.streamId,
-              new java.io.ByteArrayOutputStream()).write(f.payload)
-            if ((f.flags & H2.EndStream) == 0 && received >= granted) {
-              // the window is exhausted mid-request: a compliant client is
-              // now BLOCKED — loopback delivers violating bytes well
-              // within the grace, so a quiet socket proves the block
-              Thread.sleep(150)
-              if (in.available() > 0)
-                violations.add("client kept sending on an exhausted window")
-              earlyTrailerStatus match {
-                case Some((status, msg)) =>
-                  // reject early: trailers-only response, never any credit
-                  writeTrailers(out, encode, f.streamId,
-                    Seq(":status" -> "200",
-                      "content-type" -> "application/grpc",
-                      "grpc-status" -> status, "grpc-message" -> msg))
-                case None =>
-                  val inc = java.nio.ByteBuffer.allocate(4).putInt(1 << 20).array()
-                  H2.writeFrame(out, H2.Frame(H2.WindowUpdate, 0, f.streamId, inc))
-                  H2.writeFrame(out, H2.Frame(H2.WindowUpdate, 0, 0, inc))
-                  granted += (1L << 20)
-              }
-            }
-            if ((f.flags & H2.EndStream) != 0) {
-              val path = paths(f.streamId)
-              val method = path.stripPrefix(MilvusProto.ServicePrefix)
-              calls.add(method)
-              val raw = bodies(f.streamId).toByteArray
-              val b = java.nio.ByteBuffer.wrap(raw)
-              b.get(); val len = b.getInt()
-              val req = new Array[Byte](len); b.get(req)
-              val (status, msg, resp) =
-                try ("0", "", dispatch(method, req))
-                catch { case GrpcFail(s, m) => (s, m, Array.emptyByteArray) }
-              H2.writeFrame(out, H2.Frame(H2.Headers, H2.EndHeaders, f.streamId,
-                encode(Seq(":status" -> "200",
-                  "content-type" -> "application/grpc"))))
-              val framed = java.nio.ByteBuffer.allocate(5 + resp.length)
-              framed.put(0.toByte).putInt(resp.length).put(resp)
-              H2.writeFrame(out, H2.Frame(H2.Data, 0, f.streamId, framed.array()))
-              writeTrailers(out, encode, f.streamId,
-                Seq("grpc-status" -> status) ++
-                  (if (msg.nonEmpty) Seq("grpc-message" -> msg) else Nil))
-            }
-          case _ => () // SETTINGS ack, WINDOW_UPDATE, PING — ignored
-        }
-      }
-    } catch { case _: Exception => () } finally sock.close()
-
-    /** Trailer block, optionally split HEADERS+CONTINUATION: END_STREAM
-      * rides the initial HEADERS frame; END_HEADERS only on the final
-      * fragment (RFC 7540 §6.10). The cut lands mid-block — a partial
-      * fragment is not independently HPACK-decodable, so a client that
-      * decodes per-frame mis-parses here. */
-    private def writeTrailers(out: DataOutputStream,
-        encode: Seq[(String, String)] => Array[Byte], sid: Int,
-        hs: Seq[(String, String)]): Unit = {
-      val block = encode(hs)
-      if (splitTrailers && block.length >= 2) {
-        val cut = block.length / 2
-        H2.writeFrame(out, H2.Frame(H2.Headers, H2.EndStream, sid,
-          java.util.Arrays.copyOfRange(block, 0, cut)))
-        H2.writeFrame(out, H2.Frame(H2.Continuation, H2.EndHeaders, sid,
-          java.util.Arrays.copyOfRange(block, cut, block.length)))
-      } else
-        H2.writeFrame(out,
-          H2.Frame(H2.Headers, H2.EndHeaders | H2.EndStream, sid, block))
-    }
-
-    override def close(): Unit = { running = false; server.close() }
-  }
-
-  private case class GrpcFail(status: String, message: String)
-    extends RuntimeException(message)
-
-  /** Standard dispatch: `exists` steers HasCollection; Describe reports
-    * dim=64; everything else returns an empty (OK) message. */
-  private def standardDispatch(exists: () => Boolean)
-    : (String, Array[Byte]) => Array[Byte] = (m, _) => m match {
-    case "HasCollection" =>
-      new graft.sink.grpc.ProtoWriter().bool(2, exists()).toBytes
-    case "DescribeCollection" =>
-      new graft.sink.grpc.ProtoWriter().message(2) { schema =>
-        schema.string(1, "c")
-        schema.message(4) { f =>
-          f.string(2, "vector").int(5, 101L)
-          f.message(6)(kv => { kv.string(1, "dim").string(2, "64"); () })
-          ()
-        }
-        ()
-      }.toBytes
-    case _ => Array.emptyByteArray
-  }
-
   test("bootstrap call sequence over gRPC: create+index+load when " +
     "missing, describe+load when present, dim conflict is a hard error") {
     var exists = false
     val reqs = new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
-    val mock = new MockMilvus((m, req) => {
+    val mock = new NettyGrpcServer((m, req) => {
       reqs.put(m, req); standardDispatch(() => exists)(m, req)
     })
     try {
@@ -235,7 +60,7 @@ class MilvusGrpcSpec extends AnyFunSuite {
   test("upsert and delete protobufs carry the row data exactly; the " +
     "delete expr escapes ids like the REST path") {
     val reqs = new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
-    val mock = new MockMilvus((m, req) => {
+    val mock = new NettyGrpcServer((m, req) => {
       reqs.put(m, req); standardDispatch(() => true)(m, req)
     })
     try {
@@ -272,7 +97,7 @@ class MilvusGrpcSpec extends AnyFunSuite {
   test("two-layer errors: non-zero grpc-status raises; in-body Status " +
     "'already exist' is tolerated mid-bootstrap (the race contract)") {
     var exists = false
-    val mock = new MockMilvus((m, _) => m match {
+    val mock = new NettyGrpcServer((m, _) => m match {
       case "HasCollection" =>
         new graft.sink.grpc.ProtoWriter().bool(2, exists).toBytes
       case "CreateCollection" =>
@@ -303,10 +128,10 @@ class MilvusGrpcSpec extends AnyFunSuite {
   test("huffman-coded response headers and trailers decode (grpc-go " +
     "huffman-compresses literals; grpc-status is not in the static table)") {
     var exists = false
-    val mock = new MockMilvus((m, req) => m match {
+    val mock = new NettyGrpcServer((m, req) => m match {
       case "Delete" => throw GrpcFail("7", "PERMISSION_DENIED")
       case _ => standardDispatch(() => exists)(m, req)
-    }, huffman = true)
+    }) // Netty's HPACK encoder huffman-codes every literal it shortens
     try {
       // full bootstrap through huffman-coded responses
       val base = s"grpc://127.0.0.1:${mock.port}"
@@ -328,10 +153,10 @@ class MilvusGrpcSpec extends AnyFunSuite {
     "whose block exceeds its own max frame size must split; END_HEADERS " +
     "gates the HPACK decode)") {
     var exists = false
-    val mock = new MockMilvus((m, req) => m match {
+    val mock = new NettyGrpcServer((m, req) => m match {
       case "Delete" => throw GrpcFail("7", "PERMISSION_DENIED")
       case _ => standardDispatch(() => exists)(m, req)
-    }, huffman = true, splitTrailers = true)
+    }, trailerPadding = 25000) // > 16384: Netty splits every trailer block
     try {
       // full bootstrap through split (and huffman-coded) trailer blocks
       val base = s"grpc://127.0.0.1:${mock.port}"
@@ -351,12 +176,13 @@ class MilvusGrpcSpec extends AnyFunSuite {
 
   test("early trailers-only error while the send is flow-control-blocked " +
     "surfaces the grpc-status instead of hanging (no RST, no credit ever)") {
-    // 1 KiB window + a ~40 KiB upsert: the client WILL block for credit;
+    // 1 KiB window + a ~45 KB upsert: the client WILL block for credit;
     // the server answers with a trailers-only RESOURCE_EXHAUSTED and
-    // never grants another byte — the pre-fix client waits forever here
-    val mock = new MockMilvus(standardDispatch(() => true),
-      streamWindow = 1024, maxFrame = 2048,
-      earlyTrailerStatus = Some(("8", "RESOURCE_EXHAUSTED: request too large")))
+    // never grants another byte. 16384 is the smallest legal
+    // SETTINGS_MAX_FRAME_SIZE (RFC 7540 §6.5.2)
+    val mock = new NettyGrpcServer(standardDispatch(() => true),
+      initialWindow = 1024, maxFrame = 16384,
+      rejectEarly = Some(("Upsert", "8", "RESOURCE_EXHAUSTED: request too large")))
     try {
       val t = new graft.sink.MilvusGrpcTransport("127.0.0.1", mock.port)
       try {
@@ -384,11 +210,13 @@ class MilvusGrpcSpec extends AnyFunSuite {
   test("request DATA splits at SETTINGS_MAX_FRAME_SIZE and blocks on the " +
     "flow-control window (the limits a real grpc-go server enforces)") {
     val reqs = new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
-    // a 1 KiB stream window and 2 KiB frames force the client to chunk
-    // and to block for WINDOW_UPDATE several times on a ~50 KiB upsert
-    val mock = new MockMilvus((m, req) => {
+    // a 1 KiB stream window forces the client to chunk and to block for
+    // WINDOW_UPDATE many times on a ~45 KB upsert; frames stay at 16384,
+    // the smallest legal SETTINGS_MAX_FRAME_SIZE (RFC 7540 §6.5.2), and
+    // Netty turns any frame or window violation into a connection error
+    val mock = new NettyGrpcServer((m, req) => {
       reqs.put(m, req); standardDispatch(() => true)(m, req)
-    }, streamWindow = 1024, maxFrame = 2048)
+    }, initialWindow = 1024, maxFrame = 16384)
     try {
       val t = new graft.sink.MilvusGrpcTransport("127.0.0.1", mock.port)
       try {
@@ -398,8 +226,6 @@ class MilvusGrpcSpec extends AnyFunSuite {
         t.upsert("c", points)
         val up = ProtoWire.parse(reqs.get("Upsert"))
         assert(up.int(7).contains(300L), "upsert did not round-trip intact")
-        assert(mock.violations.isEmpty,
-          s"wire violations: ${mock.violations.toArray.mkString("; ")}")
       } finally t.close()
     } finally mock.close()
   }

@@ -1,221 +1,56 @@
 package graft
 
+import graft.NettyGrpcServer.standardDispatch
 import graft.sink.MilvusSink
-import graft.sink.grpc.{MilvusProto, ProtoWire}
+import graft.sink.grpc.{H2cGrpcClient, ProtoWire}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import io.netty.bootstrap.ServerBootstrap
-import io.netty.buffer.Unpooled
-import io.netty.channel.{ChannelHandlerContext, ChannelInboundHandlerAdapter,
-  ChannelInitializer, MultiThreadIoEventLoopGroup}
-import io.netty.channel.nio.NioIoHandler
-import io.netty.channel.socket.SocketChannel
-import io.netty.channel.socket.nio.NioServerSocketChannel
-import io.netty.handler.codec.http2.{DefaultHttp2DataFrame,
-  DefaultHttp2Headers, DefaultHttp2HeadersFrame, DefaultHttp2WindowUpdateFrame,
-  Http2DataFrame, Http2FrameCodecBuilder, Http2FrameStream, Http2HeadersFrame,
-  Http2Settings}
-import io.netty.util.ReferenceCountUtil
-
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
 
 /** The live-soak analog of `tools/live_pg.sh` for the SINK side: the
-  * hand-rolled h2c gRPC client driven against a REAL, independent HTTP/2
-  * implementation — Netty's `netty-codec-http2`, the exact codec stack
-  * grpc-java builds on (and ships in this Spark distribution, so the
+  * gRPC client driven against a REAL, independent HTTP/2 server —
+  * [[NettyGrpcServer]] on Netty's `netty-codec-http2`, the exact codec
+  * stack grpc-java builds on (and ships in this Spark distribution, so the
   * soak runs unconditionally, no external server needed).
   *
-  * What "real" buys over the repo's own mock (`MilvusGrpcSpec`):
-  *  - a real SETTINGS handshake (Netty's, not frames we authored);
-  *  - real HPACK: Netty's HpackEncoder huffman-compresses literals
-  *    whenever shorter and uses static/dynamic table indexing — the
-  *    client decoder sees a production encoder's output, not our own
-  *    `encodeHeadersHuffman`;
-  *  - real flow control: Netty's DefaultHttp2LocalFlowController grants
-  *    WINDOW_UPDATE credit on its own consume/threshold schedule, and
-  *    ENFORCES the advertised limits — an oversized frame or a DATA byte
-  *    beyond the granted window from our client is a connection error
-  *    (GOAWAY) that fails these tests;
-  *  - real CONTINUATION: Netty's frame writer splits a header block
-  *    larger than the peer's SETTINGS_MAX_FRAME_SIZE across
-  *    HEADERS+CONTINUATION — exercising the client's buffered decode
-  *    against a real peer's split, not a hand-placed cut;
+  * What the legs pin:
+  *  - a real SETTINGS handshake and a production HPACK encoder (huffman
+  *    literals, static/dynamic table indexing);
+  *  - real flow control: Netty's local flow controller grants
+  *    WINDOW_UPDATE credit on its own schedule and ENFORCES the advertised
+  *    limits, so an oversized frame or a DATA byte beyond the window is a
+  *    connection error (GOAWAY) that fails these tests;
+  *  - real CONTINUATION: a trailer block larger than the client's
+  *    SETTINGS_MAX_FRAME_SIZE arrives split across HEADERS+CONTINUATION;
   *  - real early rejection: a trailers-only error response on a stream
-  *    whose flow-control window is exhausted and never re-credited —
-  *    the exact hang scenario the send-loop abort exists for.
+  *    whose flow-control window is exhausted and never re-credited;
+  *  - every way a stream can end without trailers (RST_STREAM, GOAWAY, a
+  *    header block over the client's limit) fails the call within
+  *    seconds, not at the 5-minute backstop;
+  *  - `close()` stops the client's event-loop thread.
   *
   * The reference's Milvus leg runs milvus-sdk-go over grpc-go
-  * (`/root/reference/internal/sink/milvus/milvus.go:29-37`); Milvus
-  * itself is not installable in this sandbox, so the MilvusService
-  * behavior is scripted per test while the WIRE below it is Netty's.
+  * (`internal/sink/milvus/milvus.go:29-37`); Milvus itself is not
+  * installable in this sandbox, so the MilvusService behavior is scripted
+  * per test while the WIRE below it is Netty's.
   */
 class NettyGrpcSoakSpec extends AnyFunSuite {
 
-  /** A real Netty h2c server speaking gRPC framing for MilvusService.
-    *
-    * `initialWindow` is advertised in the server's own SETTINGS and
-    * enforced by Netty's local flow controller. `rejectEarly = Some(
-    * (method, status, message))` answers that method with a trailers-only
-    * error on HEADERS and never grants window credit for its DATA.
-    * `trailerPadding` appends that many 'x' bytes to grpc-message, which
-    * past ~19k forces Netty to split the trailer block across
-    * HEADERS+CONTINUATION (the client advertises no SETTINGS_MAX_FRAME_SIZE,
-    * so Netty splits at the 16384 default). */
-  private final class NettyGrpcServer(
-      dispatch: (String, Array[Byte]) => Array[Byte],
-      initialWindow: Int = 65535,
-      rejectEarly: Option[(String, String, String)] = None,
-      trailerPadding: Int = 0) extends AutoCloseable {
-
-    val calls = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    val reqs = new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
-
-    private val group = new MultiThreadIoEventLoopGroup(2, NioIoHandler.newFactory())
-    private val settings = new Http2Settings().initialWindowSize(initialWindow)
-
-    private final class GrpcHandler extends ChannelInboundHandlerAdapter {
-      private val paths = scala.collection.mutable.Map[Int, String]()
-      private val bodies =
-        scala.collection.mutable.Map[Int, java.io.ByteArrayOutputStream]()
-
-      private def rejected(path: String): Option[(String, String, String)] =
-        rejectEarly.filter { case (m, _, _) => path.endsWith("/" + m) }
-
-      override def channelRead(ctx: ChannelHandlerContext, msg: AnyRef): Unit =
-        msg match {
-          case h: Http2HeadersFrame =>
-            val sid = h.stream().id()
-            val path = h.headers().path().toString
-            paths(sid) = path
-            // the request headers our client encodes (raw literals) must
-            // decode on a production HPACK decoder with these values
-            assert(h.headers().method().toString == "POST")
-            assert(h.headers().get("content-type").toString == "application/grpc")
-            rejected(path) match {
-              case Some((_, status, message)) =>
-                writeTrailersOnly(ctx, h.stream(), status, message)
-              case None if h.isEndStream => respond(ctx, h.stream())
-              case _ => ()
-            }
-          case d: Http2DataFrame =>
-            val sid = d.stream().id()
-            val buf = d.content()
-            val chunk = new Array[Byte](buf.readableBytes())
-            buf.readBytes(chunk)
-            bodies.getOrElseUpdate(sid,
-              new java.io.ByteArrayOutputStream()).write(chunk)
-            val consumed = d.initialFlowControlledBytes()
-            val end = d.isEndStream
-            val stream = d.stream()
-            d.release()
-            // grant credit through Netty's flow controller — EXCEPT for a
-            // rejected stream, which must starve (the hang scenario)
-            if (rejected(paths(sid)).isEmpty) {
-              if (consumed > 0)
-                ctx.write(new DefaultHttp2WindowUpdateFrame(consumed)
-                  .stream(stream))
-              if (end) respond(ctx, stream)
-              ctx.flush()
-            }
-          case other => ReferenceCountUtil.release(other)
-        }
-
-      private def respond(ctx: ChannelHandlerContext,
-                          stream: Http2FrameStream): Unit = {
-        val path = paths(stream.id())
-        val method = path.substring(path.lastIndexOf('/') + 1)
-        calls.add(method)
-        val raw = bodies.getOrElse(stream.id(),
-          new java.io.ByteArrayOutputStream()).toByteArray
-        val req =
-          if (raw.length >= 5) {
-            val b = java.nio.ByteBuffer.wrap(raw)
-            b.get(); val len = b.getInt()
-            val m = new Array[Byte](len); b.get(m); m
-          } else Array.emptyByteArray
-        reqs.put(method, req)
-        val (status, message, resp) =
-          try ("0", "", dispatch(method, req))
-          catch { case GrpcFail(s, m) => (s, m, Array.emptyByteArray) }
-        val headers = new DefaultHttp2Headers().status("200")
-        headers.set("content-type", "application/grpc")
-        ctx.write(new DefaultHttp2HeadersFrame(headers).stream(stream))
-        val framed = java.nio.ByteBuffer.allocate(5 + resp.length)
-          .put(0.toByte).putInt(resp.length).put(resp).array()
-        ctx.write(new DefaultHttp2DataFrame(
-          Unpooled.wrappedBuffer(framed)).stream(stream))
-        writeTrailers(ctx, stream, status, message)
-        ctx.flush()
-      }
-
-      private def writeTrailersOnly(ctx: ChannelHandlerContext,
-          stream: Http2FrameStream, status: String, message: String): Unit = {
-        calls.add("EARLY:" + paths(stream.id())
-          .substring(paths(stream.id()).lastIndexOf('/') + 1))
-        val headers = new DefaultHttp2Headers().status("200")
-        headers.set("content-type", "application/grpc")
-        headers.set("grpc-status", status)
-        headers.set("grpc-message", message)
-        ctx.writeAndFlush(
-          new DefaultHttp2HeadersFrame(headers, true).stream(stream))
-      }
-
-      private def writeTrailers(ctx: ChannelHandlerContext,
-          stream: Http2FrameStream, status: String, message: String): Unit = {
-        val trailers = new DefaultHttp2Headers()
-        trailers.set("grpc-status", status)
-        val msg =
-          if (trailerPadding > 0) message + ("x" * trailerPadding)
-          else message
-        if (msg.nonEmpty) trailers.set("grpc-message", msg)
-        ctx.write(new DefaultHttp2HeadersFrame(trailers, true).stream(stream))
-      }
-    }
-
-    private val channel = new ServerBootstrap()
-      .group(group)
-      .channel(classOf[NioServerSocketChannel])
-      .childHandler(new ChannelInitializer[SocketChannel] {
-        override def initChannel(ch: SocketChannel): Unit = {
-          ch.pipeline().addLast(
-            Http2FrameCodecBuilder.forServer().initialSettings(settings).build(),
-            new GrpcHandler)
-          ()
-        }
-      })
-      .bind("127.0.0.1", 0).sync().channel()
-
-    def port: Int =
-      channel.localAddress().asInstanceOf[InetSocketAddress].getPort
-
-    override def close(): Unit = {
-      channel.close().sync()
-      group.shutdownGracefully(0, 500, java.util.concurrent.TimeUnit.MILLISECONDS)
-      ()
-    }
-  }
-
-  private case class GrpcFail(status: String, message: String)
-    extends RuntimeException(message)
-
-  /** Same scripted MilvusService behavior as MilvusGrpcSpec's mock. */
-  private def standardDispatch(exists: () => Boolean)
-    : (String, Array[Byte]) => Array[Byte] = (m, _) => m match {
-    case "HasCollection" =>
-      new graft.sink.grpc.ProtoWriter().bool(2, exists()).toBytes
-    case "DescribeCollection" =>
-      new graft.sink.grpc.ProtoWriter().message(2) { schema =>
-        schema.string(1, "c")
-        schema.message(4) { f =>
-          f.string(2, "vector").int(5, 101L)
-          f.message(6)(kv => { kv.string(1, "dim").string(2, "64"); () })
-          ()
-        }
-        ()
-      }.toBytes
-    case _ => Array.emptyByteArray
+  /** Runs `f` on a daemon thread and returns what it threw, failing the
+    * test if it has not returned within 20 s. */
+  private def thrownWithin20s(f: => Unit): Throwable = {
+    val done = new java.util.concurrent.CountDownLatch(1)
+    @volatile var thrown: Throwable = null
+    val worker = new Thread(() => {
+      try f
+      catch { case e: Throwable => thrown = e }
+      finally done.countDown()
+    })
+    worker.setDaemon(true); worker.start()
+    assert(done.await(20, java.util.concurrent.TimeUnit.SECONDS),
+      "call still blocked after 20 s")
+    thrown
   }
 
   test("bootstrap + upsert + delete against a real Netty HTTP/2 peer: " +
@@ -341,6 +176,64 @@ class NettyGrpcSoakSpec extends AnyFunSuite {
           .map { case (k, v) => (k, v.length) }
         assert(counts == Map("Upsert" -> 100, "Delete" -> 100))
       } finally t.close()
+    } finally server.close()
+  }
+
+  test("peer RST_STREAM mid-call fails the call promptly, naming the path") {
+    val server = new NettyGrpcServer(standardDispatch(() => true),
+      resetOn = Some("Delete"))
+    try {
+      val t = new graft.sink.MilvusGrpcTransport("127.0.0.1", server.port)
+      try {
+        val e = thrownWithin20s(t.delete("c", Seq("x")))
+        assert(e.isInstanceOf[java.io.IOException] &&
+          e.getMessage.contains("MilvusService/Delete") &&
+          e.getMessage.contains("RST_STREAM"), s"got: $e")
+      } finally t.close()
+    } finally server.close()
+  }
+
+  test("peer GOAWAY mid-call fails the call promptly, naming the path") {
+    val server = new NettyGrpcServer(standardDispatch(() => true),
+      goAwayOn = Some("Upsert"))
+    try {
+      val t = new graft.sink.MilvusGrpcTransport("127.0.0.1", server.port)
+      try {
+        val e = thrownWithin20s(
+          t.upsert("c", Seq(("a:1", Seq(1.0f), Map("pk" -> "1")))))
+        assert(e.isInstanceOf[java.io.IOException] &&
+          e.getMessage.contains("MilvusService/Upsert"), s"got: $e")
+      } finally t.close()
+    } finally server.close()
+  }
+
+  test("a trailer block over the client's header-list limit fails the " +
+    "call promptly instead of hanging") {
+    val server = new NettyGrpcServer(standardDispatch(() => true),
+      trailerPadding = (H2cGrpcClient.MaxHeaderListSize + (1 << 20)).toInt)
+    try {
+      val t = new graft.sink.MilvusGrpcTransport("127.0.0.1", server.port)
+      try {
+        val e = thrownWithin20s(t.delete("c", Seq("x")))
+        assert(e.isInstanceOf[java.io.IOException] &&
+          e.getMessage.contains("MilvusService/Delete"), s"got: $e")
+      } finally t.close()
+    } finally server.close()
+  }
+
+  test("close() leaves no client event-loop thread alive") {
+    def loops = Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(_.getName.startsWith(H2cGrpcClient.ThreadPrefix))
+    val server = new NettyGrpcServer(standardDispatch(() => true))
+    try {
+      val before = loops
+      val t = new graft.sink.MilvusGrpcTransport("127.0.0.1", server.port)
+      t.delete("c", Seq("x"))
+      val left = loops -- before // this client's, not an earlier test's
+      assert(left.nonEmpty, "the client runs no event-loop thread")
+      t.close()
+      left.foreach(_.join(10000))
+      assert(left.forall(!_.isAlive), left.map(_.getName))
     } finally server.close()
   }
 }
