@@ -2,7 +2,11 @@ package graft.config
 
 import graft.model.Mapping
 
-import scala.collection.mutable
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
+
+import scala.jdk.CollectionConverters._
 
 /** Engine configuration, same information content as the reference's YAML
   * (reference: internal/config/config.go:61-117): source, embedding
@@ -40,43 +44,56 @@ final case class GraftConfig(
 
 object GraftConfig {
 
-  /** Load from the YAML subset the reference's config files use: two-space
-    * nested maps, scalars, inline `[a, b]` lists, and `-`-item lists of
-    * maps. Hand-rolled because the build is dependency-free by design. */
+  /** YAML through Jackson's YAML module (SnakeYAML underneath), the parser
+    * Spark itself ships. */
+  private val yaml = new ObjectMapper(new YAMLFactory())
+
+  /** Load a YAML config file. */
   def load(path: String): GraftConfig =
     fromYaml(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8))
 
+  /** Parse a YAML config. Absent keys and sections take the defaults;
+    * malformed YAML, a section that is not a mapping and a list or mapping
+    * where a scalar belongs raise `IllegalArgumentException`. */
   def fromYaml(text: String): GraftConfig = {
-    val root = Yaml.parse(text)
-    def section(name: String): Map[String, Any] =
-      root.get(name).collect { case m: Map[String @unchecked, Any @unchecked] => m }
-        .getOrElse(Map.empty)
-    def str(m: Map[String, Any], k: String, d: String = ""): String =
-      m.get(k).map(_.toString).getOrElse(d)
-    def num(m: Map[String, Any], k: String, d: Long): Long =
-      m.get(k).map(_.toString.trim.toLong).getOrElse(d)
-    def bool(m: Map[String, Any], k: String, d: Boolean): Boolean =
-      m.get(k).map(_.toString.trim.toBoolean).getOrElse(d)
+    val root = mapping("config", try yaml.readTree(text) catch {
+      case e: JsonProcessingException =>
+        throw new IllegalArgumentException(s"malformed YAML config: ${e.getOriginalMessage}", e)
+    })
+    def section(m: JsonNode, name: String): JsonNode = mapping(name, m.get(name))
+    def value(m: JsonNode, k: String): Option[String] = Option(m.get(k)).filterNot(_.isNull).map {
+      case v if v.isValueNode => v.asText
+      case _ => throw new IllegalArgumentException(s"config key '$k' must be a scalar")
+    }
+    def str(m: JsonNode, k: String, d: String = ""): String = value(m, k).getOrElse(d)
+    def num(m: JsonNode, k: String, d: Long): Long = value(m, k).map(_.trim.toLong).getOrElse(d)
+    def bool(m: JsonNode, k: String, d: Boolean): Boolean =
+      value(m, k).map(_.trim.toBoolean).getOrElse(d)
+    // a list, or one scalar standing for a one-element list
+    def strings(m: JsonNode, k: String): Seq[String] = Option(m.get(k)).filterNot(_.isNull) match {
+      case Some(a) if a.isArray => a.elements.asScala.map(_.asText).toSeq
+      case _ => value(m, k).toSeq
+    }
 
-    val source = section("source")
-    val emb = section("embedding")
-    val sink = section("sink")
-    val pipe = section("pipeline")
-    val mappings = root.get("mappings").collect {
-      case items: Seq[Any @unchecked] => items.collect {
-        case m: Map[String @unchecked, Any @unchecked] =>
-          Mapping(
-            table = str(m, "table"),
-            idColumn = str(m, "id_column", "id"),
-            textColumns = Yaml.stringList(m.getOrElse("text_columns", Nil)),
-            metadataColumns = Yaml.stringList(m.getOrElse("metadata_columns", Nil)))
-      }
-    }.getOrElse(Nil)
+    val source = section(root, "source")
+    val emb = section(root, "embedding")
+    val sink = section(root, "sink")
+    val pipe = section(root, "pipeline")
+    val mappings = Option(root.get("mappings")).filterNot(_.isNull) match {
+      case None => Nil
+      case Some(items) if items.isArray => items.elements.asScala.map { item =>
+        val m = mapping("mappings item", item)
+        Mapping(
+          table = str(m, "table"),
+          idColumn = str(m, "id_column", "id"),
+          textColumns = strings(m, "text_columns"),
+          metadataColumns = strings(m, "metadata_columns"))
+      }.toSeq
+      case Some(_) => throw new IllegalArgumentException("config key 'mappings' must be a list")
+    }
 
-    val pg = source.get("postgres")
-      .collect { case m: Map[String @unchecked, Any @unchecked] => m }
-      .getOrElse(Map.empty[String, Any])
+    val pg = section(source, "postgres")
     GraftConfig(
       sourceDir = str(source, "dir"),
       checkpointDir = str(source, "checkpoint_dir"),
@@ -108,89 +125,13 @@ object GraftConfig {
       sinkTransport = str(sink, "transport", "rest"),
       batchSize = num(pipe, "batch_size", 64L).toInt,
       flushIntervalMs = num(pipe, "flush_interval_ms", 500L),
-      httpAddr = str(section("http"), "addr", ":8080"),
+      httpAddr = str(section(root, "http"), "addr", ":8080"),
       mappings = mappings)
   }
-}
 
-/** Minimal YAML-subset parser (maps by 2-space indent, scalars, inline
-  * lists, `-` lists of maps). Not a general YAML implementation. */
-object Yaml {
-
-  def stringList(v: Any): Seq[String] = v match {
-    case s: Seq[Any @unchecked] => s.map(_.toString)
-    case other => Seq(other.toString)
-  }
-
-  def parse(text: String): Map[String, Any] = {
-    val lines = text.linesIterator
-      // a comment '#' only counts at line start or after whitespace, so
-      // values like "http://host/#frag" survive
-      .map(_.replaceAll("(^|\\s)#.*$", "").stripTrailing())
-      .filter(l => l.trim.nonEmpty && l.trim != "---" && l.trim != "...")
-      .toVector
-    parseBlock(lines, 0)._1
-  }
-
-  private def indentOf(s: String): Int = s.takeWhile(_ == ' ').length
-
-  private def scalar(raw: String): Any = {
-    val t = raw.trim.stripPrefix("\"").stripSuffix("\"")
-    if (raw.trim.startsWith("[") && raw.trim.endsWith("]"))
-      raw.trim.drop(1).dropRight(1).split(",").map(_.trim.stripPrefix("\"")
-        .stripSuffix("\"")).filter(_.nonEmpty).toSeq
-    else t
-  }
-
-  /** Parse lines at one indent level; returns (map, linesConsumed). */
-  private def parseBlock(lines: Vector[String], from: Int): (Map[String, Any], Int) = {
-    if (from >= lines.length) return (Map.empty, from)
-    val indent = indentOf(lines(from))
-    val out = mutable.LinkedHashMap[String, Any]()
-    var i = from
-    while (i < lines.length && indentOf(lines(i)) == indent &&
-      !lines(i).trim.startsWith("-")) {
-      val line = lines(i).trim
-      val colon = line.indexOf(':')
-      if (colon < 0)
-        throw new IllegalArgumentException(s"unparseable config line: '$line'")
-      val key = line.substring(0, colon).trim
-      val rest = line.substring(colon + 1).trim
-      if (rest.nonEmpty) { out(key) = scalar(rest); i += 1 }
-      else {
-        // nested block: map, or a '-' list of maps
-        if (i + 1 < lines.length && indentOf(lines(i + 1)) > indent) {
-          if (lines(i + 1).trim.startsWith("-")) {
-            val (items, next) = parseList(lines, i + 1, indentOf(lines(i + 1)))
-            out(key) = items; i = next
-          } else {
-            val (m, next) = parseBlock(lines, i + 1)
-            out(key) = m; i = next
-          }
-        } else { out(key) = ""; i += 1 }
-      }
-    }
-    (out.toMap, i)
-  }
-
-  private def parseList(lines: Vector[String], from: Int,
-                        indent: Int): (Seq[Any], Int) = {
-    val items = mutable.ArrayBuffer[Any]()
-    var i = from
-    while (i < lines.length && indentOf(lines(i)) == indent &&
-      lines(i).trim.startsWith("-")) {
-      // rewrite "- k: v" as "k: v" at a deeper indent and parse the item map
-      val first = lines(i).trim.stripPrefix("-").trim
-      val itemIndent = indent + 2
-      var itemLines = Vector(" " * itemIndent + first)
-      var j = i + 1
-      while (j < lines.length && indentOf(lines(j)) >= itemIndent &&
-        !lines(j).trim.startsWith("-")) {
-        itemLines :+= lines(j); j += 1
-      }
-      items += parseBlock(itemLines, 0)._1
-      i = j
-    }
-    (items.toSeq, i)
-  }
+  /** A YAML mapping; an absent or empty one is an empty mapping. */
+  private def mapping(name: String, node: JsonNode): JsonNode =
+    if (node == null || node.isMissingNode || node.isNull) yaml.createObjectNode()
+    else if (node.isObject) node
+    else throw new IllegalArgumentException(s"config $name must be a mapping, got '${node.asText}'")
 }

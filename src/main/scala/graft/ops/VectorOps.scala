@@ -76,9 +76,6 @@ object VectorOps {
     * `fnv1a64(s ∥ chr(code))` given h = fnv1a64(s) and ASCII code. The
     * replicate queries hash the row prefix ONCE and extend per replicate
     * with two ALU ops (see [[graft.ops.expr.FnvStep]]). */
-  def fnvStep(h: Column, code: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.ops.expr.FnvStep(
-      GraftBridge.expression(h), GraftBridge.expression(code)))
-  }
+  def fnvStep(h: Column, code: Column): Column =
+    graft.ops.expr.Kernel.column(h, code)(graft.ops.expr.FnvStep(_, _))
 }

@@ -1,8 +1,7 @@
 package graft.ops.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,27 +29,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * replays the same arithmetic in 128-bit integers (see q_chunk_dedup's
   * oracle), so the split is cross-engine checkable.
   */
-case class ChunkSplit(child: Expression) extends UnaryExpression {
+case class ChunkSplit(child: Expression) extends UnaryKernel("chunk_split", In.Str, "ChunkSplit.split") {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"chunk_split requires a string argument, got ${child.dataType}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    ChunkSplit.split(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.expr.ChunkSplit.split($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ChunkSplit =
-    copy(child = newChild)
-
-  override def prettyName: String = "chunk_split"
+  override def nullSafeEval(s: Any): Any = ChunkSplit.split(s.asInstanceOf[UTF8String])
+  override protected def withNewChildInternal(c: Expression): ChunkSplit = copy(child = c)
 }
 
 object ChunkSplit {
@@ -110,8 +92,5 @@ object ChunkSplit {
     new GenericArrayData(out.toArray)
   }
 
-  def column(c: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(ChunkSplit(GraftBridge.expression(c)))
-  }
+  def column(c: Column): Column = Kernel.column(c)(ChunkSplit(_))
 }

@@ -1,9 +1,8 @@
 package graft.ops.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** FNV-1a 64-bit hash over a string's UTF-8 bytes.
@@ -11,29 +10,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * This is the Qdrant sink's point-id scheme in the reference
   * (reference: internal/sink/qdrant/qdrant.go:174-179): external ids are
   * hashed to u64 point ids. Implemented as a native Catalyst expression with
-  * whole-stage codegen (a static-call `defineCodeGen`, the same pattern
-  * Spark's own `XxHash64` uses) so id hashing never breaks a codegen span.
+  * whole-stage codegen ([[UnaryKernel]]) so id hashing never breaks a
+  * codegen span.
   */
-case class Fnv1a64(child: Expression) extends UnaryExpression {
+case class Fnv1a64(child: Expression) extends UnaryKernel("fnv1a64", In.Str, "Fnv1a64.hash") {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"fnv1a64 requires a string argument, got ${child.dataType}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Fnv1a64.hash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.expr.Fnv1a64.hash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Fnv1a64 =
-    copy(child = newChild)
-
-  override def prettyName: String = "fnv1a64"
+  override def nullSafeEval(s: Any): Any = Fnv1a64.hash(s.asInstanceOf[UTF8String])
+  override protected def withNewChildInternal(c: Expression): Fnv1a64 = copy(child = c)
 }
 
 object Fnv1a64 {
@@ -104,17 +87,11 @@ object Fnv1a64 {
 
   def hashCodePoints(s: String): Long = hashCodePoints(UTF8String.fromString(s))
 
-  def column(c: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(Fnv1a64(GraftBridge.expression(c)))
-  }
+  def column(c: Column): Column = Kernel.column(c)(Fnv1a64(_))
 
   /** Codepoint-fold variant as a Column — for oracle-checked TEXT hashing
     * (an external engine replays `ascii(c)` per character). */
-  def columnCodePoints(c: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(Fnv1a64CodePoints(GraftBridge.expression(c)))
-  }
+  def columnCodePoints(c: Column): Column = Kernel.column(c)(Fnv1a64CodePoints(_))
 }
 
 /** One FNV-1a extension step from an intermediate state: (h ⊕ code)·prime,
@@ -129,49 +106,19 @@ object Fnv1a64 {
   * arithmetic (overflow throws), hence a native kernel — the documented
   * house rule. */
 case class FnvStep(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryKernel("fnv_step", In.Bigint, In.Bigint, "Fnv1a64.step") {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes() = {
-    if (left.dataType == LongType && right.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"fnv_step requires (bigint, bigint), got (${left.dataType}, ${right.dataType})")
-  }
-
   override def nullSafeEval(h: Any, code: Any): Any =
     Fnv1a64.step(h.asInstanceOf[Long], code.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (h, c) => s"graft.ops.expr.Fnv1a64.step($h, $c)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FnvStep =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "fnv_step"
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): FnvStep =
+    copy(left = l, right = r)
 }
 
 /** FNV-1a 64-bit over Unicode CODEPOINTS (see [[Fnv1a64.foldCodePoints]]) —
   * the cross-engine text-hashing contract, as a codegen'd expression. */
-case class Fnv1a64CodePoints(child: Expression) extends UnaryExpression {
+case class Fnv1a64CodePoints(child: Expression)
+    extends UnaryKernel("fnv1a64_cp", In.Str, "Fnv1a64.hashCodePoints") {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"fnv1a64_cp requires a string argument, got ${child.dataType}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Fnv1a64.hashCodePoints(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.expr.Fnv1a64.hashCodePoints($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Fnv1a64CodePoints =
-    copy(child = newChild)
-
-  override def prettyName: String = "fnv1a64_cp"
+  override def nullSafeEval(s: Any): Any = Fnv1a64.hashCodePoints(s.asInstanceOf[UTF8String])
+  override protected def withNewChildInternal(c: Expression): Fnv1a64CodePoints = copy(child = c)
 }

@@ -1,10 +1,9 @@
 package graft.ops.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** |A∩B| of two SORTED, de-duplicated string arrays in one two-pointer
   * merge pass — the counting sibling of [[JaccardSorted]] for callers that
@@ -24,35 +23,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
   * (array_sort's ordering) and compare equal to each other, mirroring
   * [[JaccardSorted]].
   */
-case class IntersectSortedCount(left: Expression, right: Expression)
-  extends BinaryExpression {
-
+case class IntersectSortedCount(left: Expression, right: Expression) extends BinaryKernel(
+    "intersect_sorted_count", In.Strings, In.Strings, "IntersectSortedCount.count") {
   override def dataType: DataType = IntegerType
-
-  private def isStrArray(t: DataType): Boolean = t match {
-    case ArrayType(StringType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes() =
-    if (isStrArray(left.dataType) && isStrArray(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"intersect_sorted_count requires two array<string> arguments, " +
-          s"got ${left.dataType} and ${right.dataType}")
-
   override def nullSafeEval(a: Any, b: Any): Any =
     IntersectSortedCount.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.ops.expr.IntersectSortedCount.count($a, $b)")
-
   override protected def withNewChildrenInternal(l: Expression, r: Expression): IntersectSortedCount =
     copy(left = l, right = r)
-
-  override def prettyName: String = "intersect_sorted_count"
 }
 
 object IntersectSortedCount {
@@ -79,8 +56,5 @@ object IntersectSortedCount {
     inter
   }
 
-  def column(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(IntersectSortedCount(GraftBridge.expression(a), GraftBridge.expression(b)))
-  }
+  def column(a: Column, b: Column): Column = Kernel.column(a, b)(IntersectSortedCount(_, _))
 }

@@ -1,10 +1,9 @@
 package graft.ops.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Exact Jaccard similarity of two SORTED, de-duplicated string arrays, as
   * one merge pass: |A∩B| by two-pointer merge, |A∪B| = |A|+|B|-|A∩B|.
@@ -21,67 +20,26 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
   * uses). Both-empty yields 0.0 (the ≥-threshold filters it either way).
   */
 case class JaccardSorted(left: Expression, right: Expression)
-  extends BinaryExpression {
-
+    extends BinaryKernel("jaccard_sorted", In.Strings, In.Strings, "JaccardSorted.jaccard") {
   override def dataType: DataType = DoubleType
-
-  private def isStrArray(t: DataType): Boolean = t match {
-    case ArrayType(StringType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes() =
-    if (isStrArray(left.dataType) && isStrArray(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"jaccard_sorted requires two array<string> arguments, " +
-          s"got ${left.dataType} and ${right.dataType}")
-
   override def nullSafeEval(a: Any, b: Any): Any =
     JaccardSorted.jaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.ops.expr.JaccardSorted.jaccard($a, $b)")
-
   override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardSorted =
     copy(left = l, right = r)
-
-  override def prettyName: String = "jaccard_sorted"
 }
 
 object JaccardSorted {
 
-  /** Runtime kernel shared by interpreted eval and generated code.
-    * Null elements sort LAST (array_sort's ordering) and are treated as
-    * equal to each other — the production inputs (sortedTokenSet) never
-    * contain them, but the function is SQL-registered, so a null element
-    * must not NPE the task. */
+  /** Runtime kernel shared by interpreted eval and generated code, over
+    * [[IntersectSortedCount.count]]'s merge: null elements sort LAST
+    * (array_sort's ordering) and are treated as equal to each other — the
+    * production inputs (sortedTokenSet) never contain them, but the
+    * function is SQL-registered, so a null element must not NPE the task. */
   def jaccard(a: ArrayData, b: ArrayData): Double = {
-    val na = a.numElements()
-    val nb = b.numElements()
-    var i = 0
-    var j = 0
-    var inter = 0
-    while (i < na && j < nb) {
-      val an = a.isNullAt(i)
-      val bn = b.isNullAt(j)
-      val cmp =
-        if (an && bn) 0
-        else if (an) 1
-        else if (bn) -1
-        else a.getUTF8String(i).compareTo(b.getUTF8String(j))
-      if (cmp < 0) i += 1
-      else if (cmp > 0) j += 1
-      else { inter += 1; i += 1; j += 1 }
-    }
-    val union = na + nb - inter
+    val inter = IntersectSortedCount.count(a, b)
+    val union = a.numElements() + b.numElements() - inter
     if (union == 0) 0.0 else inter.toDouble / union
   }
 
-  def column(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(JaccardSorted(GraftBridge.expression(a), GraftBridge.expression(b)))
-  }
+  def column(a: Column, b: Column): Column = Kernel.column(a, b)(JaccardSorted(_, _))
 }

@@ -1,9 +1,8 @@
 package graft.ops.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{DataType, IntegerType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Exact Levenshtein distance by Myers' bit-parallel algorithm (Myers,
@@ -27,29 +26,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * empty sides degenerate to the other side's length.
   */
 case class LevenshteinMyers(left: Expression, right: Expression)
-  extends BinaryExpression {
-
+    extends BinaryKernel("levenshtein_myers", In.Str, In.Str, "LevenshteinMyers.distance") {
   override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes() =
-    if (left.dataType == StringType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"levenshtein_myers requires two string arguments, " +
-          s"got ${left.dataType} and ${right.dataType}")
-
   override def nullSafeEval(a: Any, b: Any): Any =
     LevenshteinMyers.distance(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.ops.expr.LevenshteinMyers.distance($a, $b)")
-
   override protected def withNewChildrenInternal(l: Expression, r: Expression): LevenshteinMyers =
     copy(left = l, right = r)
-
-  override def prettyName: String = "levenshtein_myers"
 }
 
 object LevenshteinMyers {
@@ -195,8 +177,5 @@ object LevenshteinMyers {
     score
   }
 
-  def column(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(LevenshteinMyers(GraftBridge.expression(a), GraftBridge.expression(b)))
-  }
+  def column(a: Column, b: Column): Column = Kernel.column(a, b)(LevenshteinMyers(_, _))
 }

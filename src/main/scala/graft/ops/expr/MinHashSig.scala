@@ -1,10 +1,9 @@
 package graft.ops.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** MinHash signature over a token array in one pass.
   *
@@ -21,28 +20,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * elements is null — the HOF form never sees that because token sets are
   * non-empty after filtering; the kernel pins the identity explicitly).
   */
-case class MinHashSig(child: Expression, numHashes: Int) extends UnaryExpression {
+case class MinHashSig(child: Expression, numHashes: Int)
+    extends UnaryKernel("minhash_sig", In.Strings, "MinHashSig.signature") {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(StringType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"minhash_sig requires array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashSig.signature(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.ops.expr.MinHashSig.signature($c, $numHashes)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-
-  override def prettyName: String = "minhash_sig"
+  override protected def constants: Seq[Any] = Seq(numHashes)
+  override def nullSafeEval(t: Any): Any = MinHashSig.signature(t.asInstanceOf[ArrayData], numHashes)
+  override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
 }
 
 /** [[MinHashSig]] with FNV-1a 64 permutation hashes instead of salted
@@ -57,28 +40,12 @@ case class MinHashSig(child: Expression, numHashes: Int) extends UnaryExpression
   * permutation's precomputed prefix state through the token's codepoints,
   * so a token streams once per permutation with zero allocations.
   */
-case class MinHashSigFnv(child: Expression, numHashes: Int) extends UnaryExpression {
+case class MinHashSigFnv(child: Expression, numHashes: Int)
+    extends UnaryKernel("minhash_sig_fnv", In.Strings, "MinHashSig.signatureFnv") {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(StringType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"minhash_sig_fnv requires array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashSig.signatureFnv(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.ops.expr.MinHashSig.signatureFnv($c, $numHashes)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigFnv =
-    copy(child = newChild)
-
-  override def prettyName: String = "minhash_sig_fnv"
+  override protected def constants: Seq[Any] = Seq(numHashes)
+  override def nullSafeEval(t: Any): Any = MinHashSig.signatureFnv(t.asInstanceOf[ArrayData], numHashes)
+  override protected def withNewChildInternal(c: Expression): MinHashSigFnv = copy(child = c)
 }
 
 object MinHashSig {
@@ -114,10 +81,7 @@ object MinHashSig {
     new GenericArrayData(mins)
   }
 
-  def fnvColumn(c: Column, numHashes: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(MinHashSigFnv(GraftBridge.expression(c), numHashes))
-  }
+  def fnvColumn(c: Column, numHashes: Int): Column = Kernel.column(c)(MinHashSigFnv(_, numHashes))
 
   /** Runtime kernel shared by interpreted eval and generated code. A null
     * token contributes h1 = Seed — exactly the HOF form's `xxhash64(t, i)`,
@@ -145,8 +109,5 @@ object MinHashSig {
     new GenericArrayData(mins)
   }
 
-  def column(c: Column, numHashes: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(MinHashSig(GraftBridge.expression(c), numHashes))
-  }
+  def column(c: Column, numHashes: Int): Column = Kernel.column(c)(MinHashSig(_, numHashes))
 }

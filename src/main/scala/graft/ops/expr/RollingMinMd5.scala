@@ -1,8 +1,7 @@
 package graft.ops.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -28,26 +27,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * 8 chars fingerprint their whole text (one window), and the empty
   * string hashes the empty window — same rows, same bytes, both engines.
   */
-case class RollingMinMd5(child: Expression) extends UnaryExpression {
+case class RollingMinMd5(child: Expression)
+    extends UnaryKernel("rolling_min_md5", In.Str, "RollingMinMd5.minFp") {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"rolling_min_md5 requires a string argument, got ${child.dataType}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    RollingMinMd5.minFp(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.expr.RollingMinMd5.minFp($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RollingMinMd5 =
-    copy(child = newChild)
-
-  override def prettyName: String = "rolling_min_md5"
+  override def nullSafeEval(s: Any): Any = RollingMinMd5.minFp(s.asInstanceOf[UTF8String])
+  override protected def withNewChildInternal(c: Expression): RollingMinMd5 = copy(child = c)
 }
 
 object RollingMinMd5 {
@@ -104,8 +88,5 @@ object RollingMinMd5 {
     false
   }
 
-  def column(c: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(RollingMinMd5(GraftBridge.expression(c)))
-  }
+  def column(c: Column): Column = Kernel.column(c)(RollingMinMd5(_))
 }

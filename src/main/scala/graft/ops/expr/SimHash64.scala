@@ -1,10 +1,9 @@
 package graft.ops.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit SimHash over a token array, as one native codegen'd kernel.
@@ -22,27 +21,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * SimHash itself models the reference's sanctioned near-dup extension
   * surface (SURVEY.md §2.3 Group C, q_dedup_simhash).
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression) extends UnaryKernel("simhash64", In.Strings, "SimHash64.hash") {
   override def dataType: DataType = LongType
-
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(StringType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"simhash64 requires array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    SimHash64.hash(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.expr.SimHash64.hash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-
-  override def prettyName: String = "simhash64"
+  override def nullSafeEval(t: Any): Any = SimHash64.hash(t.asInstanceOf[ArrayData])
+  override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
 }
 
 /** [[SimHash64]] with FNV-1a 64 as the per-token hash instead of xxhash64.
@@ -57,27 +39,11 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   * Oracle-facing queries use this variant; [[SimHash64]] remains for
   * xxhash64-keyed paths.
   */
-case class SimHashFnv64(child: Expression) extends UnaryExpression {
+case class SimHashFnv64(child: Expression)
+    extends UnaryKernel("simhash_fnv64", In.Strings, "SimHash64.hashFnv") {
   override def dataType: DataType = LongType
-
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(StringType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"simhash_fnv64 requires array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    SimHash64.hashFnv(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.expr.SimHash64.hashFnv($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashFnv64 =
-    copy(child = newChild)
-
-  override def prettyName: String = "simhash_fnv64"
+  override def nullSafeEval(t: Any): Any = SimHash64.hashFnv(t.asInstanceOf[ArrayData])
+  override protected def withNewChildInternal(c: Expression): SimHashFnv64 = copy(child = c)
 }
 
 object SimHash64 {
@@ -142,13 +108,7 @@ object SimHash64 {
     out
   }
 
-  def column(c: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(SimHash64(GraftBridge.expression(c)))
-  }
+  def column(c: Column): Column = Kernel.column(c)(SimHash64(_))
 
-  def fnvColumn(c: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(SimHashFnv64(GraftBridge.expression(c)))
-  }
+  def fnvColumn(c: Column): Column = Kernel.column(c)(SimHashFnv64(_))
 }

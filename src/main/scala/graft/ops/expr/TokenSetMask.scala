@@ -2,9 +2,9 @@ package graft.ops.expr
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Closed-vocabulary token-set bitmask: maps a token array onto `words`
@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * build the index over the full corpus first.
   */
 case class TokenSetMask(child: Expression, vocab: Map[String, Int], words: Int)
-  extends UnaryExpression {
+    extends UnaryKernel("token_set_mask", In.Strings, "TokenSetMask.mask") {
 
   // fail fast on the DRIVER at plan-build time: an out-of-range vocabulary
   // index would otherwise ArrayIndexOutOfBounds per row on executors,
@@ -31,14 +31,6 @@ case class TokenSetMask(child: Expression, vocab: Map[String, Int], words: Int)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(StringType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"token_set_mask requires array<string>, got $other")
-  }
-
   /** UTF8String-keyed lookup built once per executor/deserialization. */
   @transient private lazy val lookup: java.util.HashMap[UTF8String, Integer] = {
     val m = new java.util.HashMap[UTF8String, Integer](vocab.size * 2)
@@ -48,9 +40,9 @@ case class TokenSetMask(child: Expression, vocab: Map[String, Int], words: Int)
     m
   }
 
-  override def nullSafeEval(input: Any): Any =
-    TokenSetMask.mask(input.asInstanceOf[ArrayData], lookup, words)
+  override def nullSafeEval(t: Any): Any = TokenSetMask.mask(t.asInstanceOf[ArrayData], lookup, words)
 
+  // the lookup is a reference object, not a constant the base can print
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val mapRef = ctx.addReferenceObj("vocabLookup", lookup,
       classOf[java.util.HashMap[UTF8String, Integer]].getName)
@@ -58,10 +50,7 @@ case class TokenSetMask(child: Expression, vocab: Map[String, Int], words: Int)
       s"graft.ops.expr.TokenSetMask.mask($c, $mapRef, $words)")
   }
 
-  override protected def withNewChildInternal(newChild: Expression): TokenSetMask =
-    copy(child = newChild)
-
-  override def prettyName: String = "token_set_mask"
+  override protected def withNewChildInternal(c: Expression): TokenSetMask = copy(child = c)
 }
 
 object TokenSetMask {
@@ -85,8 +74,6 @@ object TokenSetMask {
     new GenericArrayData(out)
   }
 
-  def column(c: Column, vocab: Map[String, Int], words: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(TokenSetMask(GraftBridge.expression(c), vocab, words))
-  }
+  def column(c: Column, vocab: Map[String, Int], words: Int): Column =
+    Kernel.column(c)(TokenSetMask(_, vocab, words))
 }

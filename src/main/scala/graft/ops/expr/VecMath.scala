@@ -1,11 +1,47 @@
 package graft.ops.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
-  UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+
+/** Σ aᵢ·bᵢ in double accumulation. */
+case class VecDot(left: Expression, right: Expression)
+    extends BinaryKernel("vec_dot", In.Vec, In.Vec, "VecMath.dot") {
+  override def dataType: DataType = DoubleType
+  override protected def constants: Seq[Any] = Seq(In.isFloat(left), In.isFloat(right))
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VecMath.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], In.isFloat(left), In.isFloat(right))
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): VecDot =
+    copy(left = l, right = r)
+}
+
+/** Σ (aᵢ-bᵢ)² in double accumulation. */
+case class VecDist2(left: Expression, right: Expression)
+    extends BinaryKernel("vec_dist2", In.Vec, In.Vec, "VecMath.dist2") {
+  override def dataType: DataType = DoubleType
+  override protected def constants: Seq[Any] = Seq(In.isFloat(left), In.isFloat(right))
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VecMath.dist2(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], In.isFloat(left), In.isFloat(right))
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): VecDist2 =
+    copy(left = l, right = r)
+}
+
+/** x / ‖x‖ with the norm accumulated in double, each component divided in
+  * double and narrowed to float; a zero-norm vector passes through
+  * unchanged. Same bits, `dataType` and null behaviour as the HOF form
+  * `when(norm === 0, v).otherwise(transform(v, x => (x / norm).cast(float)))`:
+  * the element type is the input's (a double input carries the
+  * float-narrowed quotients widened back), elements are nullable, and a
+  * null element stays null. */
+case class VecNormalize(child: Expression)
+    extends UnaryKernel("vec_normalize", In.Vec, "VecMath.normalize") {
+  override def dataType: DataType =
+    ArrayType(child.dataType.asInstanceOf[ArrayType].elementType, containsNull = true)
+  override protected def constants: Seq[Any] = Seq(In.isFloat(child))
+  override def nullSafeEval(v: Any): Any = VecMath.normalize(v.asInstanceOf[ArrayData], In.isFloat(child))
+  override protected def withNewChildInternal(c: Expression): VecNormalize = copy(child = c)
+}
 
 /** Native vector arithmetic over `ARRAY<FLOAT|DOUBLE>` columns.
   *
@@ -27,95 +63,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * queries (VectorOps.dotExact/l2normExact) stay HOF-based on purpose:
   * their cost is the determinism contract, not the loop shape.
   */
-private[expr] object VecType {
-  def isVec(t: DataType): Boolean = t match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _ => false
-  }
-
-  def isFloat(t: DataType): Boolean = t.asInstanceOf[ArrayType].elementType == FloatType
-}
-
-abstract class VecBinaryExpression extends BinaryExpression {
-  import VecType.isVec
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes() =
-    if (isVec(left.dataType) && isVec(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<float|double> arguments, " +
-          s"got ${left.dataType} and ${right.dataType}")
-
-  protected def leftIsFloat: Boolean = VecType.isFloat(left.dataType)
-  protected def rightIsFloat: Boolean = VecType.isFloat(right.dataType)
-}
-
-/** Σ aᵢ·bᵢ in double accumulation. */
-case class VecDot(left: Expression, right: Expression) extends VecBinaryExpression {
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecMath.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      leftIsFloat, rightIsFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.ops.expr.VecMath.dot($a, $b, $leftIsFloat, $rightIsFloat)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): VecDot =
-    copy(left = l, right = r)
-
-  override def prettyName: String = "vec_dot"
-}
-
-/** Σ (aᵢ-bᵢ)² in double accumulation. */
-case class VecDist2(left: Expression, right: Expression) extends VecBinaryExpression {
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecMath.dist2(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      leftIsFloat, rightIsFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.ops.expr.VecMath.dist2($a, $b, $leftIsFloat, $rightIsFloat)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): VecDist2 =
-    copy(left = l, right = r)
-
-  override def prettyName: String = "vec_dist2"
-}
-
-/** x / ‖x‖ with the norm accumulated in double, each component divided in
-  * double and narrowed to float; a zero-norm vector passes through
-  * unchanged. Same bits, `dataType` and null behaviour as the HOF form
-  * `when(norm === 0, v).otherwise(transform(v, x => (x / norm).cast(float)))`:
-  * the element type is the input's (a double input carries the
-  * float-narrowed quotients widened back), elements are nullable, and a
-  * null element stays null. */
-case class VecNormalize(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(child.dataType.asInstanceOf[ArrayType].elementType, containsNull = true)
-
-  override def checkInputDataTypes() =
-    if (VecType.isVec(child.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<float|double> argument, got ${child.dataType}")
-
-  private def isFloat: Boolean = VecType.isFloat(child.dataType)
-
-  override def nullSafeEval(v: Any): Any =
-    VecMath.normalize(v.asInstanceOf[ArrayData], isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"graft.ops.expr.VecMath.normalize($v, $isFloat)")
-
-  override protected def withNewChildInternal(c: Expression): VecNormalize =
-    copy(child = c)
-
-  override def prettyName: String = "vec_normalize"
-}
-
 object VecMath {
 
   private def elem(arr: ArrayData, i: Int, isFloat: Boolean): Double =
@@ -164,18 +111,9 @@ object VecMath {
     }
   }
 
-  def dotColumn(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(VecDot(GraftBridge.expression(a), GraftBridge.expression(b)))
-  }
+  def dotColumn(a: Column, b: Column): Column = Kernel.column(a, b)(VecDot(_, _))
 
-  def dist2Column(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(VecDist2(GraftBridge.expression(a), GraftBridge.expression(b)))
-  }
+  def dist2Column(a: Column, b: Column): Column = Kernel.column(a, b)(VecDist2(_, _))
 
-  def normalizeColumn(v: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(VecNormalize(GraftBridge.expression(v)))
-  }
+  def normalizeColumn(v: Column): Column = Kernel.column(v)(VecNormalize(_))
 }

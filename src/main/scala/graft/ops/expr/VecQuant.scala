@@ -1,11 +1,9 @@
 package graft.ops.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Quantized-integer vector arithmetic — the determinism contract of the
   * oracle-checked ANN family, at codegen'd long-arithmetic speed.
@@ -79,98 +77,42 @@ object VecQuant {
     acc
   }
 
-  import org.apache.spark.sql.GraftBridge
+  def dotColumn(a: Column, b: Column): Column = Kernel.column(a, b)(VecQuantDot(_, _))
 
-  def dotColumn(a: Column, b: Column): Column =
-    GraftBridge.column(
-      VecQuantDot(GraftBridge.expression(a), GraftBridge.expression(b)))
+  def wdotColumn(a: Column, w: Column): Column = Kernel.column(a, w)(VecQuantWDot(_, _))
 
-  def wdotColumn(a: Column, w: Column): Column =
-    GraftBridge.column(
-      VecQuantWDot(GraftBridge.expression(a), GraftBridge.expression(w)))
-
-  def dist2Column(a: Column, c: Column): Column =
-    GraftBridge.column(
-      VecQuantDist2(GraftBridge.expression(a), GraftBridge.expression(c)))
-}
-
-abstract class VecQuantBinary extends BinaryExpression {
-  override def dataType: DataType = LongType
-
-  protected def isVec(t: DataType): Boolean = t match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _ => false
-  }
-  protected def isLongArr(t: DataType): Boolean = t match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-  protected def leftIsFloat: Boolean =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  def dist2Column(a: Column, c: Column): Column = Kernel.column(a, c)(VecQuantDist2(_, _))
 }
 
 /** Σ q(aᵢ)·q(bᵢ) over two float/double vectors. */
-case class VecQuantDot(left: Expression, right: Expression) extends VecQuantBinary {
-  private def rightIsFloat: Boolean =
-    right.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isVec(left.dataType) && isVec(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<float|double>, got ${left.dataType} / ${right.dataType}")
-
+case class VecQuantDot(left: Expression, right: Expression)
+    extends BinaryKernel("vec_qdot", In.Vec, In.Vec, "VecQuant.dot") {
+  override def dataType: DataType = LongType
+  override protected def constants: Seq[Any] = Seq(In.isFloat(left), In.isFloat(right))
   override def nullSafeEval(a: Any, b: Any): Any =
-    VecQuant.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      leftIsFloat, rightIsFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.ops.expr.VecQuant.dot($a, $b, $leftIsFloat, $rightIsFloat)")
-
+    VecQuant.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], In.isFloat(left), In.isFloat(right))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecQuantDot =
     copy(left = l, right = r)
-
-  override def prettyName: String = "vec_qdot"
 }
 
 /** Σ wᵢ·q(aᵢ): left a float/double vector, right an integer weight array. */
-case class VecQuantWDot(left: Expression, right: Expression) extends VecQuantBinary {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isVec(left.dataType) && isLongArr(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float|double> and array<long>, " +
-        s"got ${left.dataType} / ${right.dataType}")
-
+case class VecQuantWDot(left: Expression, right: Expression)
+    extends BinaryKernel("vec_qwdot", In.Vec, In.Bigints, "VecQuant.wdot") {
+  override def dataType: DataType = LongType
+  override protected def constants: Seq[Any] = Seq(In.isFloat(left))
   override def nullSafeEval(a: Any, w: Any): Any =
-    VecQuant.wdot(a.asInstanceOf[ArrayData], w.asInstanceOf[ArrayData], leftIsFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, w) =>
-      s"graft.ops.expr.VecQuant.wdot($a, $w, $leftIsFloat)")
-
+    VecQuant.wdot(a.asInstanceOf[ArrayData], w.asInstanceOf[ArrayData], In.isFloat(left))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecQuantWDot =
     copy(left = l, right = r)
-
-  override def prettyName: String = "vec_qwdot"
 }
 
 /** Σ (q(aᵢ) − cᵢ)²: left a float/double vector, right a quantized centroid. */
-case class VecQuantDist2(left: Expression, right: Expression) extends VecQuantBinary {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isVec(left.dataType) && isLongArr(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float|double> and array<long>, " +
-        s"got ${left.dataType} / ${right.dataType}")
-
+case class VecQuantDist2(left: Expression, right: Expression)
+    extends BinaryKernel("vec_qdist2", In.Vec, In.Bigints, "VecQuant.dist2") {
+  override def dataType: DataType = LongType
+  override protected def constants: Seq[Any] = Seq(In.isFloat(left))
   override def nullSafeEval(a: Any, c: Any): Any =
-    VecQuant.dist2(a.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData], leftIsFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, c) =>
-      s"graft.ops.expr.VecQuant.dist2($a, $c, $leftIsFloat)")
-
+    VecQuant.dist2(a.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData], In.isFloat(left))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecQuantDist2 =
     copy(left = l, right = r)
-
-  override def prettyName: String = "vec_qdist2"
 }

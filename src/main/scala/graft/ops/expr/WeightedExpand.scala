@@ -1,8 +1,7 @@
 package graft.ops.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,30 +23,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * `WeightedExpandSpec` pins kernel ≡ HOF on multiplicity edge cases and
   * multi-byte text.
   */
-case class WeightedExpand(child: Expression, cap: Int) extends UnaryExpression {
+case class WeightedExpand(child: Expression, cap: Int)
+    extends UnaryKernel("weighted_expand", In.Strings, "WeightedExpand.expand") {
   require(cap >= 1 && cap <= 9,
     "cap must stay single-digit so lexicographic order equals (token, occ) order")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(StringType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"weighted_expand requires array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WeightedExpand.expand(input.asInstanceOf[ArrayData], cap)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.expr.WeightedExpand.expand($c, $cap)")
-
-  override protected def withNewChildInternal(newChild: Expression): WeightedExpand =
-    copy(child = newChild)
-
-  override def prettyName: String = "weighted_expand"
+  override protected def constants: Seq[Any] = Seq(cap)
+  override def nullSafeEval(t: Any): Any = WeightedExpand.expand(t.asInstanceOf[ArrayData], cap)
+  override protected def withNewChildInternal(c: Expression): WeightedExpand = copy(child = c)
 }
 
 object WeightedExpand {
@@ -81,8 +65,5 @@ object WeightedExpand {
     new GenericArrayData(a.asInstanceOf[Array[AnyRef]])
   }
 
-  def column(c: Column, cap: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(WeightedExpand(GraftBridge.expression(c), cap))
-  }
+  def column(c: Column, cap: Int): Column = Kernel.column(c)(WeightedExpand(_, cap))
 }

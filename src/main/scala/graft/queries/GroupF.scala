@@ -34,15 +34,6 @@ object GroupF {
   /** Codepoint-fold FNV-1a of a string column (native codegen'd kernel). */
   private def fnv(c: Column): Column = graft.ops.VectorOps.fnv1a64(c)
 
-  /** The HUGEINT replay of [[fnv]] over an arbitrary SQL string expr. */
-  private def fnvSql(expr: String): String =
-    s"""list_reduce(
-       |  list_prepend(CAST(14695981039346656037 AS HUGEINT),
-       |    list_transform(list_filter(string_split($expr, ''), c -> c <> ''),
-       |      c -> CAST(ascii(c) AS HUGEINT))),
-       |  (acc, x) -> (xor(acc, x) * 1099511628211)
-       |              % CAST(18446744073709551616 AS HUGEINT))""".stripMargin
-
   val all: Seq[Q] = Seq(
 
     // TPC-H Q13 shape (customer order-count distribution): the canonical

@@ -1,8 +1,9 @@
 package graft.queries
 
 import graft.ops.expr.Fnv1a64
+import graft.queries.Q.{big, events, fnvSql, quantCos, quantCosSql, quantN2, quantNormsCte, tbl}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -17,18 +18,6 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * replay per character in 128-bit arithmetic.
   */
 object GroupI {
-
-  /** DuckDB HUGEINT FNV-1a fold over the characters of a string SQL
-    * expression — the oracle twin of [[Fnv1a64.foldCodePoints]] (same
-    * contract q_embed_det / q_media_meta already prove). Shared with
-    * GroupP's panel-rank oracle. */
-  private[queries] def fnvSql(s: String): String =
-    s"""list_reduce(
-       |  list_prepend(CAST(14695981039346656037 AS HUGEINT),
-       |    list_transform(list_filter(string_split($s, ''), c -> c <> ''),
-       |      c -> CAST(ascii(c) AS HUGEINT))),
-       |  (acc, x) -> (xor(acc, x) * 1099511628211)
-       |              % CAST(18446744073709551616 AS HUGEINT))""".stripMargin
 
   /** Non-empty lowercase tokens of `text` (Spark side). */
   private val toks: Column = expr("filter(split(lower(text), ' '), x -> x <> '')")
@@ -542,16 +531,4 @@ object GroupI {
         .orderBy("user_id")
     }
   )
-
-  // local aliases so query bodies read like the other groups
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    Q.tbl(spark, dir, name)
-  private def events(spark: SparkSession, dir: String): DataFrame =
-    Q.events(spark, dir)
-  private def big(c: Column): Column = Q.big(c)
-  private def quantN2(c: Column): Column = Q.quantN2(c)
-  private def quantCos(a: Column, b: Column, n2a: Column, n2b: Column): Column =
-    Q.quantCos(a, b, n2a, n2b)
-  private def quantCosSql(a: String, b: String): String = Q.quantCosSql(a, b)
-  private def quantNormsCte(extra: String*): String = Q.quantNormsCte(extra: _*)
 }

@@ -2,8 +2,8 @@ package graft.queries
 
 import graft.cdc.Changelog
 import graft.ops.DedupOps
+import graft.queries.Q.{big, tbl}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -314,8 +314,4 @@ object GroupJ {
         .orderBy("table_name", "op")
     }
   )
-
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    Q.tbl(spark, dir, name)
-  private def big(c: Column): Column = Q.big(c)
 }

@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.cdc.Changelog
+import graft.queries.Q.{big, tbl}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -179,8 +179,4 @@ object GroupK {
         .orderBy(col("c").desc, col("key"))
     }
   )
-
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    Q.tbl(spark, dir, name)
-  private def big(c: Column): Column = Q.big(c)
 }

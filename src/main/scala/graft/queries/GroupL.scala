@@ -1,8 +1,9 @@
 package graft.queries
 
 import graft.ops.{DedupOps, TextAnalysis, VectorOps}
+import graft.queries.Q.{big, events, fnvSql, tbl}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -17,16 +18,6 @@ import org.apache.spark.sql.types.LongType
   * pseudo-content both engines can replay.
   */
 object GroupL {
-
-  /** DuckDB HUGEINT FNV-1a fold over the characters of a string SQL
-    * expression (the q_media_meta / q_frame_dedup oracle contract). */
-  private def fnvSql(s: String): String =
-    s"""list_reduce(
-       |  list_prepend(CAST(14695981039346656037 AS HUGEINT),
-       |    list_transform(list_filter(string_split($s, ''), c -> c <> ''),
-       |      c -> CAST(ascii(c) AS HUGEINT))),
-       |  (acc, x) -> (xor(acc, x) * 1099511628211)
-       |              % CAST(18446744073709551616 AS HUGEINT))""".stripMargin
 
   private val toksSql = "list_filter(string_split(lower(text), ' '), x -> x <> '')"
   private val toks: Column = expr("filter(split(lower(text), ' '), x -> x <> '')")
@@ -278,10 +269,4 @@ object GroupL {
         .orderBy("lang_a", "lang_b")
     }
   )
-
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    Q.tbl(spark, dir, name)
-  private def events(spark: SparkSession, dir: String): DataFrame =
-    Q.events(spark, dir)
-  private def big(c: Column): Column = Q.big(c)
 }

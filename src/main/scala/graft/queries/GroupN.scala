@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.cdc.Changelog
+import graft.queries.Q.{big, events, tbl}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -168,10 +168,4 @@ object GroupN {
         .orderBy("n_buckets")
     }
   )
-
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    Q.tbl(spark, dir, name)
-  private def events(spark: SparkSession, dir: String): DataFrame =
-    Q.events(spark, dir)
-  private def big(c: Column): Column = Q.big(c)
 }

@@ -1,6 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.queries.Q.{big, events, fnvSql, tbl}
+
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
@@ -33,7 +35,7 @@ object GroupP {
          |                   THEN f - CAST(18446744073709551616 AS HUGEINT)
          |                   ELSE f END AS BIGINT) AS r
          |  FROM (SELECT vec_id,
-         |               ${GroupI.fnvSql("'ln:' || CAST(vec_id AS VARCHAR)")} AS f
+         |               ${fnvSql("'ln:' || CAST(vec_id AS VARCHAR)")} AS f
          |        FROM embeddings)),
          |panel AS (
          |  SELECT vec_id FROM rk ORDER BY r, vec_id LIMIT 64),
@@ -249,10 +251,4 @@ object GroupP {
         .orderBy("event_type", "dow")
     }
   )
-
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    Q.tbl(spark, dir, name)
-  private def events(spark: SparkSession, dir: String): DataFrame =
-    Q.events(spark, dir)
-  private def big(c: Column): Column = Q.big(c)
 }

@@ -1,6 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.queries.Q.{big, events, tbl}
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -338,10 +340,4 @@ object GroupR {
         .orderBy("day")
     }
   )
-
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    Q.tbl(spark, dir, name)
-  private def events(spark: SparkSession, dir: String): DataFrame =
-    Q.events(spark, dir)
-  private def big(c: Column): Column = Q.big(c)
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.queries.Q.{big, events, tbl}
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -138,10 +139,4 @@ object GroupT {
         .orderBy("event_type")
     }
   )
-
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    Q.tbl(spark, dir, name)
-  private def events(spark: SparkSession, dir: String): DataFrame =
-    Q.events(spark, dir)
-  private def big(c: Column): Column = Q.big(c)
 }

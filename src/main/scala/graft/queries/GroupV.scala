@@ -1,6 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.queries.Q.{big, tbl}
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -254,8 +256,4 @@ object GroupV {
         .orderBy("name_a", "name_b")
     }
   )
-
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    Q.tbl(spark, dir, name)
-  private def big(c: Column): Column = Q.big(c)
 }

@@ -2,8 +2,8 @@ package graft.queries
 
 import graft.cdc.Changelog
 import graft.ops.VectorOps
+import graft.queries.Q.big
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Merge-store operations audits — the batch observability for the
@@ -12,8 +12,6 @@ import org.apache.spark.sql.functions._
   * alone and both DuckDB-oracle-gated.
   */
 object GroupX {
-
-  private def big(c: Column): Column = c.cast("long")
 
   /** Effective mapped-table changes with an addressable pk. */
   private def eff(spark: org.apache.spark.sql.SparkSession, dir: String) =

@@ -84,6 +84,17 @@ object Q {
   /** Date-only string (oracle: strftime '%Y-%m-%d'). */
   def dstr(c: Column): Column = date_format(c, "yyyy-MM-dd")
 
+  /** DuckDB HUGEINT FNV-1a fold over the characters of a string SQL
+    * expression — the oracle twin of [[graft.ops.expr.Fnv1a64.foldCodePoints]]
+    * (the q_embed_det / q_media_meta contract). */
+  def fnvSql(s: String): String =
+    s"""list_reduce(
+       |  list_prepend(CAST(14695981039346656037 AS HUGEINT),
+       |    list_transform(list_filter(string_split($s, ''), c -> c <> ''),
+       |      c -> CAST(ascii(c) AS HUGEINT))),
+       |  (acc, x) -> (xor(acc, x) * 1099511628211)
+       |              % CAST(18446744073709551616 AS HUGEINT))""".stripMargin
+
   /** Integer output normalized to BIGINT on both engines. */
   def big(c: Column): Column = c.cast(LongType)
 

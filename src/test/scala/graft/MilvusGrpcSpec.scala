@@ -1,7 +1,6 @@
 package graft
 
-import graft.NettyGrpcServer.standardDispatch
-import graft.sink.MilvusSink
+import graft.NettyGrpcServer.{ensureCollection, standardDispatch}
 import graft.sink.grpc.ProtoWire
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,7 +15,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   * upsert/delete message contents, the two-layer error contract
   * (grpc-status vs in-body Status), and the already-exists race
   * tolerance over the new wire. */
-class MilvusGrpcSpec extends AnyFunSuite {
+class MilvusGrpcSpec extends AnyFunSuite with NoLeakedGrpcClients {
 
   test("bootstrap call sequence over gRPC: create+index+load when " +
     "missing, describe+load when present, dim conflict is a hard error") {
@@ -27,7 +26,7 @@ class MilvusGrpcSpec extends AnyFunSuite {
     })
     try {
       val base = s"grpc://127.0.0.1:${mock.port}"
-      new MilvusSink(base, "c", transport = "grpc").ensureCollection(64)
+      ensureCollection(base, 64)
       assert(mock.calls.toArray.toSeq == Seq("HasCollection",
         "CreateCollection", "CreateIndex", "LoadCollection"))
       // the CreateCollection protobuf carries the reference schema
@@ -47,11 +46,11 @@ class MilvusGrpcSpec extends AnyFunSuite {
       assert(params("index_type") == "HNSW" && params("metric_type") == "IP")
 
       mock.calls.clear(); exists = true
-      new MilvusSink(base, "c", transport = "grpc").ensureCollection(64)
+      ensureCollection(base, 64)
       assert(mock.calls.toArray.toSeq == Seq("HasCollection",
         "DescribeCollection", "LoadCollection"))
       val e = intercept[IllegalStateException] {
-        new MilvusSink(base, "c", transport = "grpc").ensureCollection(128)
+        ensureCollection(base, 128)
       }
       assert(e.getMessage.contains("dim=64") && e.getMessage.contains("dim=128"))
     } finally mock.close()
@@ -112,7 +111,7 @@ class MilvusGrpcSpec extends AnyFunSuite {
     try {
       val base = s"grpc://127.0.0.1:${mock.port}"
       // bootstrap proceeds through the tolerated already-exists
-      new MilvusSink(base, "c", transport = "grpc").ensureCollection(8)
+      ensureCollection(base, 8)
       assert(mock.calls.toArray.toSeq == Seq("HasCollection",
         "CreateCollection", "CreateIndex", "LoadCollection"))
       // a genuine grpc-status failure surfaces as IOException
@@ -135,7 +134,7 @@ class MilvusGrpcSpec extends AnyFunSuite {
     try {
       // full bootstrap through huffman-coded responses
       val base = s"grpc://127.0.0.1:${mock.port}"
-      new MilvusSink(base, "c", transport = "grpc").ensureCollection(64)
+      ensureCollection(base, 64)
       assert(mock.calls.toArray.toSeq == Seq("HasCollection",
         "CreateCollection", "CreateIndex", "LoadCollection"))
       exists = true
@@ -160,7 +159,7 @@ class MilvusGrpcSpec extends AnyFunSuite {
     try {
       // full bootstrap through split (and huffman-coded) trailer blocks
       val base = s"grpc://127.0.0.1:${mock.port}"
-      new MilvusSink(base, "c", transport = "grpc").ensureCollection(64)
+      ensureCollection(base, 64)
       assert(mock.calls.toArray.toSeq == Seq("HasCollection",
         "CreateCollection", "CreateIndex", "LoadCollection"))
       exists = true

@@ -205,4 +205,38 @@ object NettyGrpcServer {
       }.toBytes
     case _ => Array.emptyByteArray
   }
+
+  /** Bootstraps collection `c` over a gRPC sink to `base`, then closes the
+    * sink so its client's event-loop thread stops. */
+  def ensureCollection(base: String, dim: Int): Unit = {
+    val sink = new graft.sink.MilvusSink(base, "c", transport = "grpc")
+    try sink.ensureCollection(dim) finally sink.close()
+  }
+}
+
+/** Fails the suite if a gRPC client it opened is still running its
+  * event-loop thread after the last test: every client must be closed. */
+trait NoLeakedGrpcClients extends org.scalatest.BeforeAndAfterAll {
+  self: org.scalatest.Suite =>
+
+  private def loops: Set[Thread] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(_.getName.startsWith(graft.sink.grpc.H2cGrpcClient.ThreadPrefix))
+  }
+  private var before = Set.empty[Thread]
+
+  override protected def beforeAll(): Unit = {
+    super.beforeAll()
+    before = loops
+  }
+
+  override protected def afterAll(): Unit =
+    try {
+      val left = loops -- before // this suite's, not an earlier suite's
+      val deadline = System.nanoTime() + 10000000000L
+      left.foreach(t => t.join(math.max(1L, (deadline - System.nanoTime()) / 1000000L)))
+      val alive = left.filter(_.isAlive).map(_.getName)
+      assert(alive.isEmpty, s"gRPC client event loops left running: $alive")
+    } finally super.afterAll()
 }

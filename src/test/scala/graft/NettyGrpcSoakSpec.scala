@@ -1,7 +1,6 @@
 package graft
 
-import graft.NettyGrpcServer.standardDispatch
-import graft.sink.MilvusSink
+import graft.NettyGrpcServer.{ensureCollection, standardDispatch}
 import graft.sink.grpc.{H2cGrpcClient, ProtoWire}
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -35,7 +34,7 @@ import scala.jdk.CollectionConverters._
   * installable in this sandbox, so the MilvusService behavior is scripted
   * per test while the WIRE below it is Netty's.
   */
-class NettyGrpcSoakSpec extends AnyFunSuite {
+class NettyGrpcSoakSpec extends AnyFunSuite with NoLeakedGrpcClients {
 
   /** Runs `f` on a daemon thread and returns what it threw, failing the
     * test if it has not returned within 20 s. */
@@ -60,7 +59,7 @@ class NettyGrpcSoakSpec extends AnyFunSuite {
     val server = new NettyGrpcServer(standardDispatch(() => exists))
     try {
       val base = s"grpc://127.0.0.1:${server.port}"
-      new MilvusSink(base, "c", transport = "grpc").ensureCollection(64)
+      ensureCollection(base, 64)
       assert(server.calls.toArray.toSeq == Seq("HasCollection",
         "CreateCollection", "CreateIndex", "LoadCollection"))
       val cc = ProtoWire.parse(server.reqs.get("CreateCollection"))
@@ -68,7 +67,7 @@ class NettyGrpcSoakSpec extends AnyFunSuite {
 
       exists = true
       server.calls.clear()
-      new MilvusSink(base, "c", transport = "grpc").ensureCollection(64)
+      ensureCollection(base, 64)
       assert(server.calls.toArray.toSeq == Seq("HasCollection",
         "DescribeCollection", "LoadCollection"))
 
