@@ -28,12 +28,14 @@ abstract class UnaryKernel(sqlName: String, in: In, method: String)
     extends UnaryExpression with Serializable {
   /** Constant arguments the static call takes after the child. */
   protected def constants: Seq[Any] = Nil
+  /** The generated static call with these arguments. */
+  protected def call(args: Seq[Any]): String = Kernel.call(method, args)
 
   override def prettyName: String = sqlName
   override def checkInputDataTypes(): TypeCheckResult =
     Kernel.check(sqlName, Seq(in), Seq(child))
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => Kernel.call(method, c +: constants))
+    defineCodeGen(ctx, ev, c => call(c +: constants))
 }
 
 /** [[UnaryKernel]] over two children. */

@@ -46,8 +46,7 @@ case class TokenSetMask(child: Expression, vocab: Map[String, Int], words: Int)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val mapRef = ctx.addReferenceObj("vocabLookup", lookup,
       classOf[java.util.HashMap[UTF8String, Integer]].getName)
-    defineCodeGen(ctx, ev, c =>
-      s"graft.ops.expr.TokenSetMask.mask($c, $mapRef, $words)")
+    defineCodeGen(ctx, ev, c => call(Seq(c, mapRef, words)))
   }
 
   override protected def withNewChildInternal(c: Expression): TokenSetMask = copy(child = c)
