@@ -72,10 +72,10 @@ object IndexStore {
     cs
   }
 
-  /** Large-k variant: the codebook table stays a DataFrame end to end
-    * (nothing index-sized on the driver) — the load-side companion of
-    * [[Pq.trainDf]] / [[Ivf.trainDf]], feeding [[Pq.encodeByJoin]] /
-    * [[Ivf.assignByJoin]] directly. */
+  /** The codebook table as a DataFrame, never collected to the driver —
+    * the load-side companion of [[Pq.trainDf]] / [[Ivf.trainDf]], feeding
+    * [[Pq.encodeByJoin]] / [[Ivf.assignByJoin]] (and
+    * [[graft.stream.IvfIndexMaintainer]]'s one-row codebook) directly. */
   def loadPqDf(spark: SparkSession, path: String): DataFrame = {
     DirSwap.recover(spark, path)
     spark.read.parquet(path).select(col("s").cast("int"),

@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.ops.expr.VecQuant
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -34,93 +36,49 @@ object Pq {
   private def subvec(v: Column, s: Int, subDim: Int): Column =
     slice(v, s * subDim + 1, subDim)
 
-  /** Nearest code in subspace `s` (ties → lowest code id), as an
-    * `array_min` over (d2, code) structs — linear expression size in k. */
-  private def nearestCode(v: Column, cells: Seq[Cell], s: Int, subDim: Int): Column =
-    array_min(array(cells.filter(_.s == s).map { cell =>
-      struct(
-        graft.ops.expr.VecQuant.dist2Column(subvec(v, s, subDim), typedLit(cell.centroid))
-          .as("d2"),
-        lit(cell.c).as("code"))
-    }: _*)).getField("code")
-
-  /** Above this codebook size, [[train]] switches to the join-based
-    * [[trainDf]] pipeline — the [[Ivf.MaxLiteralK]] treatment: a literal
-    * argmin embeds k structs per (row, subspace) in the expression tree
-    * and the update collects subspaces·k·subDim rows to the driver; both
-    * are fine at the queries' 8×16 codebooks and wrong at k in the
-    * thousands. PqSpec pins the two paths cell-for-cell at k=256. */
-  val MaxLiteralK = 64
-
-  /** Train per-subspace codebooks: seeds are the first `k` vectors by id
-    * (their quantized sub-vectors), refined by one Lloyd iteration whose
-    * centroid update re-quantizes floor(Σqx/count) — the same
-    * engine-replayable step [[Ivf.train]]'s exact mode uses. Empty cells
-    * keep their seed. Returns `subspaces·k` cells (tiny; broadcast-safe).
-    * Above [[MaxLiteralK]] the work runs through [[trainDf]] (one bounded
-    * subspaces·k·subDim collect at the end to honor this signature;
-    * callers at extreme k should consume [[trainDf]] + [[encodeByJoin]]
-    * and keep codebooks off the driver entirely). */
-  def train(vectors: DataFrame, idCol: String, vecCol: String,
-            subspaces: Int, k: Int): Seq[Cell] = {
-    if (k > MaxLiteralK) {
-      // dim probing + divisibility check happen inside trainDf
-      return trainDf(vectors, idCol, vecCol, subspaces, k)
-        .collect()
-        .map(r => Cell(r.getInt(0), r.getInt(1), r.getSeq[Long](2)))
-        .sortBy(c => (c.s, c.c)).toSeq
-    }
-    trainLiteral(vectors, idCol, vecCol, subspaces, k)
-  }
-
-  private[graft] def trainLiteral(vectors: DataFrame, idCol: String, vecCol: String,
-                                subspaces: Int, k: Int): Seq[Cell] = {
-    val dim = vectors.select(size(col(vecCol))).head().getInt(0)
-    require(dim % subspaces == 0, s"dim $dim not divisible by $subspaces")
-    val subDim = dim / subspaces
-    val seeds: Seq[Cell] = vectors.orderBy(col(idCol)).limit(k)
-      .select(col(vecCol)).collect().zipWithIndex.flatMap { case (r, c) =>
-        val q = r.getSeq[Float](0).map(x => graft.ops.expr.VecQuant.q(x.toDouble))
-        (0 until subspaces).map(s => Cell(s, c, q.slice(s * subDim, (s + 1) * subDim)))
-      }.toSeq
-    // one pass computes every subspace's assignment; the update is a single
-    // hash agg over (s, code, component) — no per-subspace jobs
-    val assigned = vectors.select(
+  /** The vectors as (idCol, s, sv) rows, one per subspace. */
+  private def subvectors(vectors: DataFrame, idCol: String, vecCol: String,
+                         subspaces: Int, subDim: Int): DataFrame =
+    vectors.select(col(idCol),
       explode(array((0 until subspaces).map { s =>
-        struct(lit(s).as("s"),
-          nearestCode(col(vecCol), seeds, s, subDim).as("code"),
-          subvec(col(vecCol), s, subDim).as("sv"))
-      }: _*)).as("a"))
-    val updated = assigned
-      .select(col("a.s").as("s"), col("a.code").as("code"),
-        posexplode(col("a.sv")).as(Seq("i", "x")))
-      .groupBy("s", "code", "i")
-      .agg(floor(sum(floor(col("x").cast("double") * graft.ops.expr.VecQuant.Scale))
-        .cast("double") / count(lit(1)).cast("double")).as("m"))
-      .collect()
-      .groupBy(r => (r.getInt(0), r.getInt(1)))
-      .map { case ((s, c), rows) =>
-        (s, c) -> rows.sortBy(_.getInt(2)).map(_.getLong(3)).toSeq
-      }
-    seeds.map(cell =>
-      cell.copy(centroid = updated.getOrElse((cell.s, cell.c), cell.centroid)))
-  }
+        struct(lit(s).as("s"), subvec(col(vecCol), s, subDim).as("sv"))
+      }: _*)).as("v"))
+      .select(col(idCol), col("v.s").as("s"), col("v.sv").as("sv"))
 
-  /** The large-k trainer: codebooks stay a (s, code, centroid) DataFrame
-    * end to end — nothing subspaces·k·subDim-sized reaches the driver and
-    * no expression embeds k literals. Assignment streams the exploded
-    * (id, s, sv) sub-vectors past the broadcast cell table joined on s,
-    * arg-min in one hash agg (ties → lowest code, the [[trainLiteral]]
-    * contract); the update re-quantizes floor(Σqx/count) per component;
-    * empty cells keep their seed via the left join. Arithmetic is
-    * identical to the literal path — PqSpec proves cell-for-cell equality
-    * at k=256. */
+  /** Each (s, sv) row's nearest code in its subspace's codebook, a
+    * DataFrame of (s, code, centroid) cells: a broadcast join on s against
+    * the per-subspace codebook rows ([[Ivf.codebook]]), then one
+    * `vec_nearest` call per row (ties → lowest code). */
+  private def codesByJoin(sv: DataFrame, cells: DataFrame): DataFrame =
+    sv.join(broadcast(Ivf.codebook(cells, Seq("s"), "code", exact = true)), Seq("s"))
+      .withColumn("code", Ivf.nearestId(col("sv")))
+
+  /** Train per-subspace codebooks: [[trainDf]], collected and sorted
+    * (s, code). Returns `subspaces·k` cells (tiny; broadcast-safe) — callers
+    * at extreme k should consume [[trainDf]] + [[encodeByJoin]] and keep
+    * codebooks off the driver entirely. */
+  def train(vectors: DataFrame, idCol: String, vecCol: String,
+            subspaces: Int, k: Int): Seq[Cell] =
+    trainDf(vectors, idCol, vecCol, subspaces, k)
+      .collect()
+      .map(r => Cell(r.getInt(0), r.getInt(1), r.getSeq[Long](2)))
+      .sortBy(c => (c.s, c.c)).toSeq
+
+  /** Train per-subspace codebooks as a (s, code, centroid) DataFrame: seeds
+    * are the first `k` vectors by id (their quantized sub-vectors), refined
+    * by one Lloyd iteration whose centroid update re-quantizes
+    * floor(Σqx/count) — the same engine-replayable step [[Ivf.train]]'s
+    * exact mode uses. Nothing subspaces·k·subDim-sized reaches the driver.
+    * Assignment streams the exploded (id, s, sv) sub-vectors past the
+    * broadcast codebook rows joined on s; the update is one hash agg per
+    * (s, code, i); empty cells keep their seed via the left join. */
   def trainDf(vectors: DataFrame, idCol: String, vecCol: String,
               subspaces: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dim = vectors.select(size(col(vecCol))).head().getInt(0)
     require(dim % subspaces == 0, s"dim $dim not divisible by $subspaces")
     val subDim = dim / subspaces
+    val q: Column => Column = x => floor(x.cast("double") * VecQuant.Scale)
     // seeds: first k by id, exploded per subspace, quantized to longs; the
     // row_number window spans only the k-row limit result
     val seeds = vectors.orderBy(col(idCol)).limit(k)
@@ -128,31 +86,15 @@ object Pq {
       .withColumn("code", row_number().over(Window.orderBy(col("__sid"))) - 1)
       .select(explode(array((0 until subspaces).map { s =>
         struct(lit(s).as("s"), col("code"),
-          transform(subvec(col(vecCol), s, subDim),
-            x => floor(x.cast("double") * graft.ops.expr.VecQuant.Scale)
-              .cast("long")).as("centroid"))
+          transform(subvec(col(vecCol), s, subDim), x => q(x).cast("long")).as("centroid"))
       }: _*)).as("c"))
       .select(col("c.s"), col("c.code"), col("c.centroid"))
       .localCheckpoint(true)
-    // one Lloyd step: explode (id, s, sv) once, broadcast-join the cell
-    // table on s, argmin per (id, s), then one hash agg per (s, code, i)
-    val sv = vectors.select(col(idCol),
-      explode(array((0 until subspaces).map { s =>
-        struct(lit(s).as("s"), subvec(col(vecCol), s, subDim).as("sv"))
-      }: _*)).as("v"))
-      .select(col(idCol), col("v.s").as("s"), col("v.sv").as("sv"))
-    val assigned = sv.join(broadcast(seeds), Seq("s"))
-      .select(col(idCol), col("s"), col("sv"),
-        struct(graft.ops.expr.VecQuant.dist2Column(col("sv"), col("centroid"))
-          .as("d2"), col("code")).as("__dc"))
-      .groupBy(col(idCol), col("s"))
-      .agg(first(col("sv")).as("sv"),
-        min(col("__dc")).getField("code").as("code"))
-    val updated = assigned
+    val updated = codesByJoin(subvectors(vectors, idCol, vecCol, subspaces, subDim), seeds)
       .select(col("s"), col("code"), posexplode(col("sv")).as(Seq("i", "x")))
       .groupBy("s", "code", "i")
-      .agg(floor(sum(floor(col("x").cast("double") * graft.ops.expr.VecQuant.Scale))
-        .cast("double") / count(lit(1)).cast("double")).cast("long").as("m"))
+      .agg(floor(sum(q(col("x"))).cast("double") / count(lit(1)).cast("double"))
+        .cast("long").as("m"))
       .groupBy("s", "code")
       .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
         e => e.getField("m")).as("upd"))
@@ -163,44 +105,33 @@ object Pq {
 
   /** Encode: one row per (id, subspace) with the nearest code id — the
     * long-format code table an ADC join consumes (8 rows/vector here; a
-    * production sink would pack them into one long). */
+    * production sink would pack them into one long). The codebook is one
+    * literal of per-subspace code and centroid arrays, indexed by s. */
   def encode(vectors: DataFrame, idCol: String, vecCol: String,
-             cells: Seq[Cell], subspaces: Int, subDim: Int): DataFrame =
-    vectors.select(col(idCol),
-      explode(array((0 until subspaces).map { s =>
-        struct(lit(s).as("s"), nearestCode(col(vecCol), cells, s, subDim).as("code"))
-      }: _*)).as("sc"))
-      .select(col(idCol), col("sc.s").as("s"), col("sc.code").as("code"))
+             cells: Seq[Cell], subspaces: Int, subDim: Int): DataFrame = {
+    val bySub = (0 until subspaces).map(s => cells.filter(_.s == s).sortBy(_.c))
+    subvectors(vectors, idCol, vecCol, subspaces, subDim)
+      .select(col(idCol), col("s"), Ivf.nearestId(col("sv"),
+        typedLit(bySub.map(_.map(_.c))).getItem(col("s")),
+        typedLit(bySub.map(_.map(_.centroid))).getItem(col("s"))).as("code"))
+  }
 
-  /** Encode against a (s, code, centroid) DataFrame codebook — the
-    * large-k companion of [[encode]]: sub-vectors stream past the
-    * broadcast cell table, argmin in one hash agg, no literal expressions.
-    * Same tie-break (lowest code) as [[encode]]. */
+  /** Encode against a (s, code, centroid) DataFrame codebook — [[encode]]
+    * with the codebook broadcast instead of inlined; same codes. */
   def encodeByJoin(vectors: DataFrame, idCol: String, vecCol: String,
                    cells: DataFrame, subspaces: Int, subDim: Int): DataFrame =
-    vectors.select(col(idCol),
-      explode(array((0 until subspaces).map { s =>
-        struct(lit(s).as("s"), subvec(col(vecCol), s, subDim).as("sv"))
-      }: _*)).as("v"))
-      .select(col(idCol), col("v.s").as("s"), col("v.sv").as("sv"))
-      .join(broadcast(cells), Seq("s"))
-      .select(col(idCol), col("s"),
-        struct(graft.ops.expr.VecQuant.dist2Column(col("sv"), col("centroid"))
-          .as("d2"), col("code")).as("__dc"))
-      .groupBy(col(idCol), col("s"))
-      .agg(min(col("__dc")).getField("code").as("code"))
+    codesByJoin(subvectors(vectors, idCol, vecCol, subspaces, subDim), cells)
+      .select(col(idCol), col("s"), col("code"))
 
   /** Per-query ADC lookup table: distance from the query's sub-vector to
     * every (subspace, code) centroid — `subspaces·k` rows per query, the
-    * small side of the search join. */
+    * small side of the search join. The cells are one literal, exploded
+    * per query through the distance kernel. */
   def adcTable(queries: DataFrame, idCol: String, vecCol: String,
                cells: Seq[Cell], subDim: Int): DataFrame =
-    queries.select(col(idCol),
-      explode(array(cells.map { cell =>
-        struct(lit(cell.s).as("s"), lit(cell.c).as("code"),
-          graft.ops.expr.VecQuant.dist2Column(subvec(col(vecCol), cell.s, subDim),
-            typedLit(cell.centroid)).as("d2"))
-      }: _*)).as("t"))
-      .select(col(idCol), col("t.s").as("s"), col("t.code").as("code"),
-        col("t.d2").as("d2"))
+    queries.select(col(idCol), col(vecCol),
+      explode(typedLit(cells.map(c => (c.s, c.c, c.centroid)))).as("t"))
+      .select(col(idCol), col("t._1").as("s"), col("t._2").as("code"),
+        VecQuant.dist2Column(slice(col(vecCol), col("t._1") * subDim + 1, lit(subDim)),
+          col("t._3")).as("d2"))
 }

@@ -65,6 +65,9 @@ object In {
   val Strings = new In("array<string>", arrayOf(_ == StringType))
   val Bigints = new In("array<bigint>", arrayOf(_ == LongType))
   val Vec = new In("array<float|double>", arrayOf(e => e == FloatType || e == DoubleType))
+  /** A codebook: quantized centroids (exact mode) or double centroids. */
+  val Centroids = new In("array<array<bigint|double>>",
+    arrayOf(arrayOf(e => e == LongType || e == DoubleType)))
 
   /** Whether a [[Vec]] input holds floats (else doubles) — the flag the
     * vector kernels take as a constant argument. */

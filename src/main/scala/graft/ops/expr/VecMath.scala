@@ -3,7 +3,7 @@ package graft.ops.expr
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 /** Σ aᵢ·bᵢ in double accumulation. */
 case class VecDot(left: Expression, right: Expression)
@@ -24,6 +24,21 @@ case class VecDist2(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any =
     VecMath.dist2(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], In.isFloat(left), In.isFloat(right))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecDist2 =
+    copy(left = l, right = r)
+}
+
+/** Position of a vector's nearest centroid in a codebook (see
+  * [[VecMath.nearest]]): `array<array<bigint>>` centroids measure the exact
+  * quantized distance, `array<array<double>>` the double one. */
+case class VecNearest(left: Expression, right: Expression)
+    extends BinaryKernel("vec_nearest", In.Vec, In.Centroids, "VecMath.nearest") {
+  override def dataType: DataType = IntegerType
+  private def exact: Boolean =
+    right.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[ArrayType].elementType == LongType
+  override protected def constants: Seq[Any] = Seq(In.isFloat(left), exact)
+  override def nullSafeEval(v: Any, cs: Any): Any =
+    VecMath.nearest(v.asInstanceOf[ArrayData], cs.asInstanceOf[ArrayData], In.isFloat(left), exact)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): VecNearest =
     copy(left = l, right = r)
 }
 
@@ -111,9 +126,39 @@ object VecMath {
     }
   }
 
+  /** 0-based position of the nearest centroid in `cs` to `v`, the lowest
+    * position among ties; −1 when `cs` holds no centroid (a null one is
+    * skipped). Each distance is [[VecQuant.dist2]] when `exact` (`cs` holds
+    * quantized longs), else [[dist2]] over double centroids, ordered as
+    * Spark orders doubles: NaN above every number and equal to NaN, so a
+    * vector whose distances are all NaN gets position 0. */
+  def nearest(v: ArrayData, cs: ArrayData, vFloat: Boolean, exact: Boolean): Int = {
+    var best = -1
+    var bestQ = 0L
+    var bestD = 0.0
+    var i = 0
+    while (i < cs.numElements()) {
+      if (!cs.isNullAt(i)) {
+        val c = cs.getArray(i)
+        if (exact) {
+          val d = VecQuant.dist2(v, c, vFloat)
+          if (best < 0 || d < bestQ) { best = i; bestQ = d }
+        } else {
+          val d = dist2(v, c, vFloat, false)
+          if (best < 0 || d < bestD || (bestD.isNaN && !d.isNaN)) { best = i; bestD = d }
+        }
+      }
+      i += 1
+    }
+    best
+  }
+
   def dotColumn(a: Column, b: Column): Column = Kernel.column(a, b)(VecDot(_, _))
 
   def dist2Column(a: Column, b: Column): Column = Kernel.column(a, b)(VecDist2(_, _))
 
   def normalizeColumn(v: Column): Column = Kernel.column(v)(VecNormalize(_))
+
+  def nearestColumn(v: Column, centroids: Column): Column =
+    Kernel.column(v, centroids)(VecNearest(_, _))
 }

@@ -680,13 +680,10 @@ object PipelineDedup {
         |ORDER BY vec_id""".stripMargin) { (spark, dir) =>
       val centroids = ivfCentroids(spark, dir)
       val e = tbl(spark, dir, "embeddings")
-      // one argmin yields cluster AND its exact d² (array_min over
-      // (d2, cid) structs — ties resolve to the lower cid, as iv_idx)
-      val nearest = array_min(array(centroids.map { case (cid, c) =>
-        struct(graft.ops.expr.VecQuant
-          .dist2Column(col("embedding"), typedLit(c.map(_.toLong))).as("d2"),
-          lit(cid).as("cluster"))
-      }: _*))
+      // the nearest position yields cluster AND its exact d² (ties
+      // resolve to the lower cid, as iv_idx)
+      val (ids, cs) = graft.ops.Ivf.literal(centroids, exact = true)
+      val nearest = graft.ops.expr.VecMath.nearestColumn(col("embedding"), cs)
       // CLONE COMPACTION (round-11, after the sf1 run measured the member-
       // level pair join 39× for 10× data on the clone fixture): cluster,
       // d², n², and every pairwise cosine are pure functions of the
@@ -711,8 +708,9 @@ object PipelineDedup {
             .select(col("embedding"), col("members"), col("mult"),
               element_at(col("members"), 1).as("rep_id"),
               quantN2(col("embedding")).as("n2"),
-              nearest.getField("cluster").as("cluster"),
-              nearest.getField("d2").as("d2"))
+              ids.getItem(nearest).as("cluster"),
+              graft.ops.expr.VecQuant.dist2Column(col("embedding"), cs.getItem(nearest))
+                .as("d2"))
         }
       val x = groups.select(col("cluster"), col("rep_id").as("a_rep"),
         col("d2").as("xd2"), col("embedding").as("xv"), col("n2").as("xn2"))

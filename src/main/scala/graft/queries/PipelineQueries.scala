@@ -324,8 +324,8 @@ object PipelineQueries {
     * pipeline encodes once at index-build time and every searcher scans the
     * codes, never the floats — q_pq_encode emits this table, q_pq_adc and
     * q_ivf_pq join against it. Materialized via [[graft.util.SessionCache]]
-    * (the encode expression is 128 inlined cell distances — worth compiling
-    * and running exactly once per session). */
+    * (128 cell distances per vector — worth running exactly once per
+    * session). */
   private[queries] def pqCodes(spark: SparkSession, dir: String): DataFrame =
     graft.util.SessionCache.getOrMaterialize(spark, s"pq_codes:$dir") {
       graft.ops.Pq.encode(tbl(spark, dir, "embeddings"), "vec_id", "embedding",

@@ -15,13 +15,13 @@ import org.apache.spark.sql.functions._
   *    so cell assignments never drift between runs (retraining per batch
   *    would silently reshuffle the index);
   *  - each micro-batch of (id, vector, lsn, deleted) rows is assigned to
-  *    its nearest persisted cell by the same broadcast-join argmin the
-  *    batch q_ann_ivf uses ([[Ivf.assignByJoin]]'s shape: vectors ×
-  *    broadcast(k×dim centroids), one hash agg — no driver-side loops),
-  *    and applied to the assignment store LSN-monotonically by REUSING
-  *    [[ParquetTableStore]] (bucketed deltas, tombstones, GC) — so
-  *    re-delivered / out-of-order batches converge and a delete
-  *    tombstones its vector's cell entry;
+  *    its nearest persisted cell by the nearest-centroid kernel the batch
+  *    q_ann_ivf uses ([[Ivf.assignByJoin]]'s shape: vectors × the
+  *    broadcast one-row codebook, one `vec_nearest` call per row — no
+  *    shuffle, no driver-side loops), and applied to the assignment store
+  *    LSN-monotonically by REUSING [[ParquetTableStore]] (bucketed deltas,
+  *    tombstones, GC) — so re-delivered / out-of-order batches converge
+  *    and a delete tombstones its vector's cell entry;
   *  - [[StalenessMonitor]] transitions feed [[retrainAdvice]], which
   *    flags when the persisted quantizer has drifted from the corpus
   *    (stale + ghost fraction over the audited pks crosses a threshold) —
@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * and the retrain advice over streamed transitions ≡ the advice over the
   * batch q_index_staleness statuses.
   *
-  * Scale shape per trigger: one broadcast of the k×dim centroid table
+  * Scale shape per trigger: one broadcast of the one-row k×dim codebook
   * (tiny), one map-side argmin over the micro-batch, then the store's
   * O(batch) bucketed delta write. Nothing is O(index size) per trigger.
   */
@@ -45,13 +45,13 @@ final class IvfIndexMaintainer(centroidPath: String, storePath: String)
   val store = new ParquetTableStore(storePath, table = "graft.ivf_index",
     attrCols = Seq("cluster"))
 
-  // The quantizer artifact is loaded ONCE per maintainer and reused for
-  // every micro-batch: re-reading per trigger wastes I/O, and silently
-  // picking up a mid-stream artifact swap would split one run's
-  // assignments across two generations. After an offline retrain installs
-  // a new artifact, call [[reloadCentroids]] (or start a fresh maintainer
-  // for the rebuild store).
-  @transient private var cachedCentroids: DataFrame = _
+  // The quantizer artifact is loaded ONCE per maintainer, as the one-row
+  // codebook ([[Ivf.codebook]]), and reused for every micro-batch:
+  // re-reading per trigger wastes I/O, and silently picking up a mid-stream
+  // artifact swap would split one run's assignments across two
+  // generations. After an offline retrain installs a new artifact, call
+  // [[reloadCentroids]] (or start a fresh maintainer for the rebuild store).
+  @transient private var cachedCodebook: DataFrame = _
 
   /** Drop the memoized quantizer so the next batch loads the newly
     * installed artifact. The old frame must be UNPERSISTED, not merely
@@ -59,20 +59,20 @@ final class IvfIndexMaintainer(centroidPath: String, storePath: String)
     * plan, so a fresh read of the same path would silently serve the old
     * generation's cached buffers. */
   def reloadCentroids(): Unit = synchronized {
-    if (cachedCentroids != null) {
-      try cachedCentroids.unpersist(blocking = true)
+    if (cachedCodebook != null) {
+      try cachedCodebook.unpersist(blocking = true)
       catch { case _: Exception => () }
-      cachedCentroids = null
+      cachedCodebook = null
     }
   }
 
-  private def centroids(spark: SparkSession): DataFrame = synchronized {
-    if (cachedCentroids == null) {
-      cachedCentroids = IndexStore.loadIvfDf(spark, centroidPath)
+  private def codebook(spark: SparkSession): DataFrame = synchronized {
+    if (cachedCodebook == null) {
+      cachedCodebook = Ivf.codebook(IndexStore.loadIvfDf(spark, centroidPath), exact = true)
         .persist()
-      cachedCentroids.count() // store eagerly (tiny: k×dim)
+      cachedCodebook.count() // store eagerly (tiny: one k×dim row)
     }
-    cachedCentroids
+    cachedCodebook
   }
 
   /** Apply one micro-batch of vector changes. Expected columns:
@@ -80,20 +80,12 @@ final class IvfIndexMaintainer(centroidPath: String, storePath: String)
     * `deleted` (boolean). Upserts are assigned to their nearest persisted
     * cell; deletes carry no vector and tombstone the id. */
   def applyBatch(batch: DataFrame): Unit = {
-    val spark = batch.sparkSession
-    val centroids = this.centroids(spark)
-    val ups = batch.filter(!col("deleted"))
-      .select(col("id"), col("lsn"), col("vec"))
-    val assigned = Ivf.assignByJoin(
-      ups.withColumn("__rk", concat_ws(":", col("id"), col("lsn"))),
-      "__rk", "vec", centroids, exact = true)
-      .join(ups.select(concat_ws(":", col("id"), col("lsn")).as("__rk"),
-        col("id"), col("lsn")), Seq("__rk"))
-      .select(col("id"), col("lsn"), col("cluster"))
-    val upEnv = assigned.select(
-      lit("c").as("op"), lit("graft").as("schema"), lit("ivf_index").as("table"),
-      col("id").cast("string").as("primary_key"), col("lsn").cast("string").as("lsn"),
-      map(lit("cluster"), col("cluster").cast("string")).as("after"))
+    val upEnv = batch.filter(!col("deleted"))
+      .crossJoin(broadcast(codebook(batch.sparkSession)))
+      .select(
+        lit("c").as("op"), lit("graft").as("schema"), lit("ivf_index").as("table"),
+        col("id").cast("string").as("primary_key"), col("lsn").cast("string").as("lsn"),
+        map(lit("cluster"), Ivf.nearestId(col("vec")).cast("string")).as("after"))
     val delEnv = batch.filter(col("deleted")).select(
       lit("d").as("op"), lit("graft").as("schema"), lit("ivf_index").as("table"),
       col("id").cast("string").as("primary_key"), col("lsn").cast("string").as("lsn"),

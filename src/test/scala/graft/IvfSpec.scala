@@ -36,34 +36,68 @@ class IvfSpec extends SparkSpec {
     assert(joined == 5)
   }
 
-  test("large-k training: DataFrame path equals the literal path, no k-literal plans") {
-    // synthetic corpus big enough for k=256 (the fixture has too few rows):
-    // 600 16-dim vectors with a fixed seed
+  // synthetic corpus big enough for k=256 (the fixture has too few rows):
+  // 600 16-dim vectors with a fixed seed
+  private lazy val synth: Seq[(Long, Seq[Float])] = {
     val rnd = new scala.util.Random(3)
-    val vecs = (0 until 600).map(i =>
-      (i.toLong, Array.fill(16)(rnd.nextFloat() * 2f - 1f).toSeq))
-      .toDF("vec_id", "embedding")
-      .localCheckpoint(true)
-    // equivalence at a k both paths handle, in exact-decimal mode so the
-    // comparison is bit-for-bit (double aggregation order differs between
-    // the two pipelines otherwise)
-    val viaLiteral = Ivf.train(vecs, "vec_id", "embedding", k = 32,
-      iterations = 2, exact = true)
-    val viaDf = Ivf.trainDf(vecs, "vec_id", "embedding", k = 32,
-      iterations = 2, exact = true)
-      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).sortBy(_._1).toSeq
-    assert(viaDf == viaLiteral)
-    // k=256 > MaxLiteralK: train() must route through the DataFrame path
-    // and still produce a complete, covering quantizer
-    assert(256 > Ivf.MaxLiteralK)
+    (0 until 600).map(i => (i.toLong, Array.fill(16)(rnd.nextFloat() * 2f - 1f).toSeq))
+  }
+  private lazy val vecs = synth.toDF("vec_id", "embedding").localCheckpoint(true)
+
+  test("large-k training matches the driver-side reference; both public forms agree") {
+    val rows = synth.map { case (id, v) => id -> v.map(_.toDouble) }
+    def centroids(df: org.apache.spark.sql.DataFrame): Seq[(Int, Seq[Double])] =
+      df.collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).sortBy(_._1).toSeq
+    // exact mode, so the comparison is bit-for-bit
+    val small = Ivf.train(vecs, "vec_id", "embedding", k = 32, iterations = 2, exact = true)
+    assert(small.map(_._2) == LloydReference.train(rows, 32, 2).map(_.map(_.toDouble)))
+    assert(centroids(Ivf.trainDf(vecs, "vec_id", "embedding", k = 32,
+      iterations = 2, exact = true)) == small)
+    // k=256: a complete, covering quantizer, the same through both forms
     val big = Ivf.train(vecs, "vec_id", "embedding", k = 256, exact = true)
     assert(big.size == 256 && big.forall(_._2.size == 16))
+    assert(big.map(_._2) == LloydReference.train(rows, 256, 1).map(_.map(_.toDouble)))
     val idx = Ivf.assignByJoin(vecs, "vec_id", "embedding",
       Ivf.trainDf(vecs, "vec_id", "embedding", k = 256, exact = true),
       exact = true)
     assert(idx.count() == 600)
     assert(idx.groupBy("cluster").count().count() > 32,
       "large-k quantizer degenerated")
+    val viaJoin = idx.select($"vec_id", $"cluster").as[(Long, Int)].collect().toSet
+    val viaSeq = Ivf.index(vecs, "vec_id", "embedding", big, exact = true)
+      .select($"vec_id", $"cluster").as[(Long, Int)].collect().toSet
+    assert(viaJoin == viaSeq)
+    val cs = big.map(_._2.map(_.toLong))
+    assert(viaSeq == rows.map { case (id, v) =>
+      id -> LloydReference.nearest(LloydReference.quantize(v), cs) }.toSet)
+  }
+
+  test("training on array<double> vectors equals the same vectors as array<float>") {
+    // components are multiples of 2⁻⁸, so float and double hold them
+    // exactly and every sum is exact in any order
+    val rnd = new scala.util.Random(11)
+    val f = (0 until 200).map(i =>
+      (i.toLong, Seq.fill(16)((rnd.nextInt(512) - 256) / 256f)))
+      .toDF("vec_id", "embedding").localCheckpoint(true)
+    val d = f.select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
+    for (exact <- Seq(false, true)) {
+      assert(Ivf.train(d, "vec_id", "embedding", k = 16, iterations = 2, exact = exact) ==
+        Ivf.train(f, "vec_id", "embedding", k = 16, iterations = 2, exact = exact),
+        s"exact = $exact")
+    }
+  }
+
+  test("k=256 assignment and probing run in generated code") {
+    val centroids = Ivf.train(vecs, "vec_id", "embedding", k = 256, exact = true)
+    CodegenGuard.noFallback {
+      for (exact <- Seq(false, true)) {
+        // an aggregate over the cluster column, so the kernel is generated
+        Ivf.index(vecs, "vec_id", "embedding", centroids, exact = exact)
+          .agg(sum($"cluster")).collect()
+        Ivf.probes(vecs.filter($"vec_id" < 20), "vec_id", "embedding", centroids,
+          nprobe = 4, exact = exact).agg(sum($"cluster")).collect()
+      }
+    }
   }
 
   test("IVF ANN recall vs brute force on the probed queries") {

@@ -54,6 +54,8 @@ class KernelPathsSpec extends SparkSpec {
       c => VecQuant.wdotColumn(c(0), c(1))),
     Kernel("vec_qdist2", Seq("d", "w"), Seq("s1", "w"), "VecQuant.dist2(", Seq("false"))(
       c => VecQuant.dist2Column(c(0), c(1))),
+    Kernel("vec_nearest", Seq("f", "cw"), Seq("f", "w"), "VecMath.nearest(",
+      Seq("true", "true"))(c => VecMath.nearestColumn(c(0), c(1))),
     Kernel("token_set_mask", Seq("r"), Seq("s1"), "TokenSetMask.mask(", Seq("2"))(
       c => TokenSetMask.column(c(0), vocab, 2)),
     Kernel("weighted_expand", Seq("r"), Seq("f"), "WeightedExpand.expand(", Seq("3"))(
@@ -78,7 +80,9 @@ class KernelPathsSpec extends SparkSpec {
     StructField("t1", ArrayType(StringType)), StructField("t2", ArrayType(StringType)),
     StructField("r", ArrayType(StringType)),
     StructField("f", ArrayType(FloatType)), StructField("d", ArrayType(DoubleType)),
-    StructField("w", ArrayType(LongType))))
+    StructField("w", ArrayType(LongType)),
+    StructField("cw", ArrayType(ArrayType(LongType))),
+    StructField("cd", ArrayType(ArrayType(DoubleType)))))
 
   /** Row 0 is all null; the last row nulls every right-hand input only. */
   private def rows: Seq[Row] = {
@@ -94,16 +98,24 @@ class KernelPathsSpec extends SparkSpec {
     def sortedSet(): Seq[String] = toks().distinct.sortBy(_.codePoints().toArray.toSeq)(
       Ordering.Implicits.seqOrdering[Seq, Int])
     def vec(): Seq[Double] = Seq.fill(1 + rnd.nextInt(20))(rnd.nextGaussian() * 0.3)
+    // codebooks draw from their own generator, so the other columns keep
+    // their values
+    val cbRnd = new scala.util.Random(7L)
+    def codebook(): Seq[Seq[Double]] =
+      Seq.fill(1 + cbRnd.nextInt(6))(Seq.fill(1 + cbRnd.nextInt(20))(cbRnd.nextGaussian() * 0.3))
     val body = (1 to 6).map { i =>
       val f: Seq[Any] = vec().map(_.toFloat)
+      val cd = codebook()
+      val cw: Seq[Any] = cd.map(_.map(VecQuant.q))
       Row(i, str(), str(), rnd.nextLong(), rnd.nextLong(), sortedSet(), sortedSet(),
         if (i == 2) toks() :+ null else toks(),
         if (i == 3) f :+ null else f, vec(),
-        Seq.fill(1 + rnd.nextInt(20))(rnd.nextInt(15) - 7L))
+        Seq.fill(1 + rnd.nextInt(20))(rnd.nextInt(15) - 7L),
+        if (i == 4) cw :+ null else cw, cd)
     }
     val last = Row(7, "left only", null, 42L, null, Seq("a", "b"), null, Seq("a", "a"),
-      Seq(0.0f, 0.0f), null, null)
-    Row(0, null, null, null, null, null, null, null, null, null, null) +: body :+ last
+      Seq(0.0f, 0.0f), null, null, null, null)
+    Row(0, null, null, null, null, null, null, null, null, null, null, null, null) +: body :+ last
   }
 
   /** Float and double values by their bits, so -0.0, NaN and rounding all
@@ -131,6 +143,26 @@ class KernelPathsSpec extends SparkSpec {
   // projection over local rows interpreted on both paths
   private def frame(): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+
+  test("vec_nearest: ties take the lower position, a NaN vector position 0, " +
+    "a null vector null, on both paths and in both modes") {
+    val cd = Seq(Seq(5.0, 5.0), Seq(1.0, 1.0), Seq(1.0, 1.0), Seq(3.0, 3.0))
+    val cw = cd.map(_.map(VecQuant.q))
+    val s = StructType(Seq(StructField("id", IntegerType),
+      StructField("d", ArrayType(DoubleType)), StructField("cw", schema("cw").dataType),
+      StructField("cd", schema("cd").dataType)))
+    val vs = Seq(Seq(1.0, 1.0), Seq(1.2, 0.8), Seq(Double.NaN, 1.0), null)
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      vs.zipWithIndex.map { case (v, i) => Row(i, v, cw, cd) }, 2), s)
+    def run(): Seq[(Any, Any)] = df.select(col("id"),
+        VecMath.nearestColumn(col("d"), col("cw")), VecMath.nearestColumn(col("d"), col("cd")))
+      .collect().sortBy(_.getInt(0)).map(r => (r.get(1), r.get(2))).toSeq
+    val interp = onPath("NO_CODEGEN", wholeStage = false)(run())
+    val gen = onPath("CODEGEN_ONLY", wholeStage = true)(run())
+    assert(interp == gen)
+    // exact mode quantizes a NaN component to 0, so only fast mode sees NaN
+    assert(interp == Seq((1, 1), (1, 1), (1, 0), (null, null)), interp)
+  }
 
   kernels.foreach { k =>
     test(s"${k.name}: interpreted and generated paths agree, a null row included") {

@@ -69,40 +69,70 @@ class PqSpec extends SparkSpec {
     assert(recall >= 0.5, f"ADC shortlist recall collapsed: $recall%.2f")
   }
 
-  test("join-based trainer matches the literal path cell-for-cell at k=256") {
-    // k=256 is the production codebook size and is above MaxLiteralK, so
-    // Pq.train takes the trainDf route; the literal path is forced via
-    // trainLiteral. Equality must be exact — same seeds (first k by id),
-    // same quantized assignment tie-breaks, same floor'd update — on every
-    // (subspace, code) centroid, including empty cells keeping seeds.
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+  // k=256 is the production codebook size
+  private lazy val big = Pq.train(e, "vec_id", "embedding", subspaces = 4, k = 256)
+
+  test("trainer matches the driver-side reference cell-for-cell at k=256") {
+    // Equality must be exact — same seeds (first k by id), same quantized
+    // assignment tie-breaks, same floor'd update — on every (subspace, code)
+    // centroid, including empty cells keeping seeds.
     val k = 256
-    val viaDf = graft.ops.Pq.train(e, "vec_id", "embedding",
-      subspaces = 4, k = k).sortBy(c => (c.s, c.c))
-    val viaLiteral = graft.ops.Pq.trainLiteral(e, "vec_id", "embedding",
-      subspaces = 4, k = k).sortBy(c => (c.s, c.c))
-    assert(k > graft.ops.Pq.MaxLiteralK, "k must exercise the trainDf route")
-    assert(viaDf.size == viaLiteral.size)
-    viaDf.zip(viaLiteral).foreach { case (a, b) =>
+    val rows = e.select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect()
+      .map { case (id, v) => id -> v.map(_.toDouble).toSeq }.toSeq
+    val subDim = rows.head._2.size / 4
+    def sub(v: Seq[Double], s: Int): Seq[Double] = v.slice(s * subDim, (s + 1) * subDim)
+    val reference = (0 until 4).flatMap { s =>
+      LloydReference.train(rows.map { case (id, v) => id -> sub(v, s) }, k, 1)
+        .zipWithIndex.map { case (c, code) => Pq.Cell(s, code, c) }
+    }
+    assert(big.size == reference.size)
+    big.zip(reference).foreach { case (a, b) =>
       assert(a.s == b.s && a.c == b.c, s"cell order diverged: $a vs $b")
       assert(a.centroid == b.centroid,
         s"centroid mismatch at (s=${a.s}, c=${a.c})")
     }
-    // and the join-based encoder agrees with the literal encoder on the
-    // trained codebook
-    import org.apache.spark.sql.functions.col
-    val dim = e.select(org.apache.spark.sql.functions.size(col("embedding")))
-      .head().getInt(0)
-    val cellsDf = graft.ops.Pq.trainDf(e, "vec_id", "embedding",
-      subspaces = 4, k = k)
-    val encJoin = graft.ops.Pq.encodeByJoin(e, "vec_id", "embedding",
-      cellsDf, subspaces = 4, subDim = dim / 4)
+    val cellsDf = Pq.trainDf(e, "vec_id", "embedding", subspaces = 4, k = k)
+    assert(cellsDf.as[(Int, Int, Seq[Long])].collect().sortBy(c => (c._1, c._2))
+      .map { case (s, c, cen) => Pq.Cell(s, c, cen) }.toSeq == big)
+    // the join-based encoder agrees with the literal encoder and with the
+    // reference argmin on the trained codebook
+    val encJoin = Pq.encodeByJoin(e, "vec_id", "embedding",
+      cellsDf, subspaces = 4, subDim = subDim)
       .orderBy("vec_id", "s")
       .as[(Long, Int, Int)].collect().toSeq
-    val encLit = graft.ops.Pq.encode(e, "vec_id", "embedding",
-      viaLiteral, subspaces = 4, subDim = dim / 4)
+    val encLit = Pq.encode(e, "vec_id", "embedding",
+      big, subspaces = 4, subDim = subDim)
       .orderBy("vec_id", "s")
       .as[(Long, Int, Int)].collect().toSeq
     assert(encJoin == encLit, "join-based encode diverged from literal encode")
+    val encRef = rows.sortBy(_._1).flatMap { case (id, v) =>
+      (0 until 4).map { s =>
+        (id, s, LloydReference.nearest(LloydReference.quantize(sub(v, s)),
+          big.filter(_.s == s).map(_.centroid)))
+      }
+    }
+    assert(encLit == encRef, "encode diverged from the reference argmin")
+  }
+
+  test("training on array<double> vectors equals the same vectors as array<float>") {
+    // components are multiples of 2⁻⁸, so float and double hold them exactly
+    val rnd = new scala.util.Random(11)
+    val f = (0 until 200).map(i =>
+      (i.toLong, Seq.fill(16)((rnd.nextInt(512) - 256) / 256f)))
+      .toDF("vec_id", "embedding").localCheckpoint(true)
+    val d = f.select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
+    assert(Pq.train(d, "vec_id", "embedding", subspaces = 4, k = 16) ==
+      Pq.train(f, "vec_id", "embedding", subspaces = 4, k = 16))
+  }
+
+  test("k=256 encoding and ADC tables run in generated code") {
+    val subDim = e.select(size($"embedding")).head().getInt(0) / 4
+    CodegenGuard.noFallback {
+      // aggregates over the output columns, so the kernels are generated
+      Pq.encode(e, "vec_id", "embedding", big, subspaces = 4, subDim = subDim)
+        .agg(sum($"code")).collect()
+      Pq.adcTable(e.filter($"vec_id" < 10), "vec_id", "embedding", big, subDim)
+        .agg(sum($"d2")).collect()
+    }
   }
 }
