@@ -44,7 +44,7 @@ class IvfSpec extends SparkSpec {
   }
   private lazy val vecs = synth.toDF("vec_id", "embedding").localCheckpoint(true)
 
-  test("large-k training matches the driver-side reference; both public forms agree") {
+  test("large-k training matches the plain-Scala reference; both public forms agree") {
     val rows = synth.map { case (id, v) => id -> v.map(_.toDouble) }
     def centroids(df: org.apache.spark.sql.DataFrame): Seq[(Int, Seq[Double])] =
       df.collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).sortBy(_._1).toSeq

@@ -2,8 +2,8 @@ package graft
 
 import graft.ops.expr.VecQuant
 
-/** Driver-side reference for the exact-mode Lloyd training of `Ivf` and
-  * `Pq`, in plain Scala: seeds are the first k vectors by id, components
+/** Plain-Scala reference for the exact-mode Lloyd training of `Ivf` and
+  * `Pq`: seeds are the first k vectors by id, components
   * quantize to floor(x·2²⁴), each vector joins the lowest-index argmin of
   * the exact long squared distance, and a centroid component becomes
   * floor(Σq / count) (one IEEE division); an empty cell keeps its

@@ -72,7 +72,7 @@ class PqSpec extends SparkSpec {
   // k=256 is the production codebook size
   private lazy val big = Pq.train(e, "vec_id", "embedding", subspaces = 4, k = 256)
 
-  test("trainer matches the driver-side reference cell-for-cell at k=256") {
+  test("trainer matches the plain-Scala reference cell-for-cell at k=256") {
     // Equality must be exact — same seeds (first k by id), same quantized
     // assignment tie-breaks, same floor'd update — on every (subspace, code)
     // centroid, including empty cells keeping seeds.
