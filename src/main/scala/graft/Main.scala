@@ -8,6 +8,7 @@ import graft.sink.{MilvusSink, ParquetVectorStore, QdrantSink}
 import graft.stream.{CdcStream, Health, HealthServer, Supervisor}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
 /** Process entry point — the engine-shaped equivalent of the reference's
@@ -69,19 +70,14 @@ object Main {
           else s"$storeDir/_checkpoint")
         .trigger(Trigger.ProcessingTime(cfg.flushIntervalMs))
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // one materialization of the micro-batch feeds every mapping and
-          // sink (without this, each sink re-runs the whole chain up to and
-          // including the per-row embedding calls)
-          batch.persist()
-          try {
-            cfg.mappings.foreach { mapping => // ALL configured tables
-              val upserts = VectorPipeline.vectorPoints(
-                batch, mapping, embedder, cfg.normalize).persist()
-              val deletes = VectorPipeline.deletions(batch, mapping)
-              try writeBatch(cfg, storeDir, upserts, deletes, batchId)
-              finally upserts.unpersist()
-            }
-          } finally batch.unpersist()
+          cfg.mappings.foreach { mapping => // ALL configured tables
+            // one materialization of the mapping's collapse → embed chain
+            // feeds the op log and the network sink
+            val ops = VectorPipeline.pointOps(
+              batch, mapping, embedder, cfg.normalize).persist()
+            try writeBatch(cfg, storeDir, ops, batchId)
+            finally ops.unpersist()
+          }
           System.err.println(s"[graft] batch $batchId → ${health.statusJson}")
         }
         .start()
@@ -167,11 +163,13 @@ object Main {
 
   /** Route one micro-batch to the configured sink (reference sink switch:
     * main.go:66-92). The parquet store always records the op log too, so a
-    * network sink can be replayed/backfilled from the lake. */
+    * network sink can be replayed/backfilled from the lake. `ops` is
+    * [[VectorPipeline.pointOps]]'s frame. */
   private def writeBatch(cfg: GraftConfig, storeDir: String,
-                         upserts: DataFrame, deletes: DataFrame,
-                         batchId: Long): Unit = {
-    new ParquetVectorStore(s"$storeDir/oplog").write(upserts, deletes, batchId)
+                         ops: DataFrame, batchId: Long): Unit = {
+    new ParquetVectorStore(s"$storeDir/oplog").append(ops, batchId)
+    def upserts = ops.filter(col("op") === "upsert")
+    def deletes = ops.filter(col("op") === "delete")
     cfg.sinkType match {
       case "qdrant" =>
         val s = new QdrantSink(cfg.sinkUrl, cfg.sinkCollection)

@@ -18,30 +18,52 @@ object VectorPipeline {
 
   /** Upsert-side output: `(id, vector, metadata)` per
     * (reference: internal/types/types.go:14-18). `changes` must be in
-    * RowChange shape ([[graft.model.Types.rowChangeSchema]]). */
+    * RowChange shape ([[graft.model.Types.rowChangeSchema]]). These are
+    * the upsert rows of [[pointOps]]. */
   def vectorPoints(changes: DataFrame, mapping: Mapping,
                    embedder: Embedder = Embedders.deterministic,
-                   normalize: Boolean = true): DataFrame = {
-    val latest = latestByPk(mappedOnly(changes, Seq(mapping.table)))
-      .filter(col("op") =!= "d" && col("after").isNotNull)
+                   normalize: Boolean = true): DataFrame =
+    pointOps(changes, mapping, embedder, normalize)
+      .filter(col("op") === "upsert")
+      // upsert rows always carry metadata; the coalesce only keeps the
+      // column's non-null schema
+      .select(col("id"), col("vector"),
+        coalesce(col("metadata"), typedLit(Map.empty[String, String])).as("metadata"))
+
+  /** One micro-batch's whole effect on a vector store: the batch collapsed
+    * by key once, then one `(id, vector, metadata, op)` row per surviving
+    * key. `op` is `upsert` for a key whose latest change carries non-empty
+    * text (F3, pipeline.go:204-207) and embeds to a non-empty vector (E2,
+    * pipeline.go:223-228), `delete` for a key whose latest change is a
+    * delete; a delete row has a null vector and null metadata. The embedder
+    * runs under `CASE WHEN op = 'upsert'`, so a delete never reaches it. */
+  def pointOps(changes: DataFrame, mapping: Mapping,
+               embedder: Embedder = Embedders.deterministic,
+               normalize: Boolean = true): DataFrame = {
+    // a null op is neither: it falls through both branches and is dropped
+    val kind = when(col("op") === "d", "delete")
+      .when(col("op") =!= "d" && col("after").isNotNull, "upsert")
+    val (upsert, delete) = (col("op") === "upsert", col("op") === "delete")
     val textCols = mapping.textColumns.map(c => element_at(col("after"), c))
-    val embed = Embedders.embedColumn(embedder)
-    val withText = latest
+    val vec = Embedders.embedColumn(embedder)(col("text"))
+    latestByPk(mappedOnly(changes, Seq(mapping.table)))
+      .withColumn("op", kind)
       .withColumn("text", TextOps.textConcat(textCols))
-      .filter(length(col("text")) > 0) // F3 empty-text skip (pipeline.go:204-207)
-    val vec = embed(col("text"))
-    withText
-      .withColumn("vector",
-        if (normalize) VectorOps.l2normalize(vec) else vec)
-      .filter(size(col("vector")) > 0) // E2 empty-vector guard (pipeline.go:223-228)
+      .filter(delete || (upsert && length(col("text")) > 0))
+      .withColumn("vector", when(upsert, if (normalize) VectorOps.l2normalize(vec) else vec))
+      .filter(delete || size(col("vector")) > 0)
       .select(
         TextOps.docId(col("schema"), col("table"), col("primary_key")).as("id"),
         col("vector"),
-        TextOps.metaProject(col("schema"), col("table"), col("primary_key"),
-          col("after"), mapping.metadataColumns).as("metadata"))
+        when(upsert, TextOps.metaProject(col("schema"), col("table"),
+          col("primary_key"), col("after"), mapping.metadataColumns)).as("metadata"),
+        col("op"))
   }
 
-  /** Delete-side output: external ids whose latest change is a delete. */
+  /** Delete-side output: external ids whose latest change is a delete. A
+    * projection of the same collapse as [[pointOps]] that never embeds:
+    * filtering `pointOps` instead would embed every upsert row, since
+    * Catalyst cannot push a filter below a nondeterministic projection. */
   def deletions(changes: DataFrame, mapping: Mapping): DataFrame =
     latestByPk(mappedOnly(changes, Seq(mapping.table)))
       .filter(col("op") === "d")

@@ -6,28 +6,35 @@ import org.apache.spark.sql.functions._
 
 /** Parquet-backed vector store: the engine's always-available sink (the
   * reference's Qdrant/Milvus/Kafka sinks are network services; this is the
-  * lake-native equivalent). Writes are an append-only op log partitioned by
-  * micro-batch; the current state is a latest-by-id view — the same
-  * idempotent-upsert contract the reference relies on (at-least-once
-  * delivery + upsert = exactly-once effect,
-  * reference: internal/pipeline/pipeline.go:173-179).
+  * lake-native equivalent). Writes append flat parquet files of
+  * `(id, vector, metadata, op, batch_id)` rows, one set per micro-batch;
+  * the current state is a latest-by-id view — the same idempotent-upsert
+  * contract the reference relies on (at-least-once delivery + upsert =
+  * exactly-once effect, reference: internal/pipeline/pipeline.go:173-179).
   */
 final class ParquetVectorStore(path: String) extends Serializable {
 
-  /** Append one micro-batch of upserts and deletes. Re-delivery of the same
-    * batchId is harmless: rows are identical and [[current]] dedupes. */
-  def write(upserts: DataFrame, deletes: DataFrame, batchId: Long): Unit = {
-    val spark = upserts.sparkSession
-    graft.util.DirSwap.recover(spark, path)
-    import spark.implicits._
-    val up = upserts.select(col("id"), col("vector"), col("metadata"),
-      lit("upsert").as("op"), lit(batchId).as("batch_id"))
-    val del = deletes.select(col("id"),
-      lit(null).cast("array<float>").as("vector"),
-      lit(null).cast("map<string,string>").as("metadata"),
-      lit("delete").as("op"), lit(batchId).as("batch_id"))
-    up.unionByName(del).write.mode("append").parquet(path)
+  /** Append one micro-batch of `(id, vector, metadata, op)` rows, `op`
+    * `upsert` or `delete` (the shape of
+    * [[graft.pipeline.VectorPipeline.pointOps]]), in one write. Re-delivery
+    * of the same batchId is harmless: rows are identical and [[current]]
+    * dedupes. */
+  def append(ops: DataFrame, batchId: Long): Unit = {
+    graft.util.DirSwap.recover(ops.sparkSession, path)
+    ops.select(col("id"), col("vector"), col("metadata"), col("op"),
+      lit(batchId).as("batch_id"))
+      .write.mode("append").parquet(path)
   }
+
+  /** Append one micro-batch of upserts `(id, vector, metadata)` and deleted
+    * ids, as [[append]] does. */
+  def write(upserts: DataFrame, deletes: DataFrame, batchId: Long): Unit =
+    append(upserts.select(col("id"), col("vector"), col("metadata"),
+      lit("upsert").as("op"))
+      .unionByName(deletes.select(col("id"),
+        lit(null).cast("array<float>").as("vector"),
+        lit(null).cast("map<string,string>").as("metadata"),
+        lit("delete").as("op"))), batchId)
 
   /** Latest state per external id (deletes drop the id). */
   def current(spark: SparkSession): DataFrame = {

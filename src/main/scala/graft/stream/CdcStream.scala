@@ -65,17 +65,16 @@ object CdcStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(flushIntervalMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // upserts and deletions both derive from the micro-batch; persist it
-        // so the source isn't re-scanned (and rows re-embedded) per output
-        batch.persist()
-        try store.write(
-          VectorPipeline.vectorPoints(batch, mapping),
-          VectorPipeline.deletions(batch, mapping),
-          batchId)
-        finally batch.unpersist()
+        writeBatch(store, mapping, batch, batchId)
       }
       .start()
   }
+
+  /** One micro-batch of [[run]]: one collapse by key, one embedding per
+    * upserted key, one append to the store. */
+  def writeBatch(store: ParquetVectorStore, mapping: Mapping,
+                 batch: DataFrame, batchId: Long): Unit =
+    store.append(VectorPipeline.pointOps(batch, mapping), batchId)
 }
 
 /** Event-time streaming operators over the events stream — the watermarked

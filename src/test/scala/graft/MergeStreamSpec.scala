@@ -192,42 +192,17 @@ class MergeStreamSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs `body` starts: counted by a listener up to a marker job
-    * submitted after it, so every earlier job-start event has arrived. */
-  private def jobsIn(body: => Unit): Int = {
-    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        starts.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription("jobs-in-marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      Iterator.continually(starts.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .takeWhile { d =>
-          assert(d != null, "marker job never reached the listener")
-          d != "jobs-in-marker"
-        }.size
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("a merge costs at most four Spark jobs: one stats aggregate and " +
     "one write, also when it folds in a bucket compaction") {
     val plain = new ParquetTableStore(tmp() + "/plain")
     plain.merge(change("c", "1", 10, "v1"))
-    val plainJobs = jobsIn(plain.merge(change("c", "2", 20, "v2")
+    val plainJobs = SparkJobs.jobsIn(spark)(plain.merge(change("c", "2", 20, "v2")
       .unionByName(change("u", "1", 30, "v3"))))
     assert(plainJobs <= 4, s"a plain merge ran $plainJobs jobs")
     val folded = new ParquetTableStore(tmp() + "/folded", numBuckets = 1,
       maxDeltasPerBucket = 1)
     folded.merge(change("c", "1", 10, "v1"))
-    val foldedJobs = jobsIn(folded.merge(change("c", "2", 20, "v2")))
+    val foldedJobs = SparkJobs.jobsIn(spark)(folded.merge(change("c", "2", 20, "v2")))
     assert(folded.stats(spark).as[(Int, Boolean, Int)].collect().toSeq ==
       Seq((0, true, 0)), "fixture broken: the merge did not compact")
     assert(foldedJobs <= 4, s"a compacting merge ran $foldedJobs jobs")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.cdc.Changelog
-import graft.model.Mapping
+import graft.model.{Mapping, Types}
 import graft.pipeline.VectorPipeline
 import graft.sink.ParquetVectorStore
 import graft.stream.{CdcStream, EventStreams, RowChangeRec, Stateful}
@@ -39,17 +39,30 @@ class StreamSpec extends SparkSpec {
     val q2 = CdcStream.run(spark, src, store, ckpt, Mapping.documents)
     q2.processAllAvailable(); q2.stop()
 
-    // store state == batch replay of the full log
-    val streamed = pvs.current(spark).select("id").as[String].collect().toSet
-    val batch = VectorPipeline
-      .vectorPoints(Changelog.changes(spark, sfDir), Mapping.documents)
-      .select("id").as[String].collect().toSet
-    assert(streamed == batch)
+    // store state == batch replay of the full log, as multisets of whole
+    // points: id, vector (bit for bit) and metadata
+    val streamed = PipelineSpec.wholePoints(pvs.current(spark))
+    val batch = PipelineSpec.wholePoints(VectorPipeline
+      .vectorPoints(Changelog.changes(spark, sfDir), Mapping.documents))
+    assert(streamed.nonEmpty && streamed == batch)
 
     // restart once more with no new data: no reprocessing, same state
     val q3 = CdcStream.run(spark, src, store, ckpt, Mapping.documents)
     q3.processAllAvailable(); q3.stop()
-    assert(pvs.current(spark).count() == streamed.size)
+    assert(PipelineSpec.wholePoints(pvs.current(spark)) == streamed)
+  }
+
+  test("a vector micro-batch runs in at most two Spark jobs, in generated code") {
+    val src = tmp()
+    Changelog.envelopes(spark, sfDir).coalesce(1).write.mode("overwrite").text(src)
+    // the shape of a file-source micro-batch: one scan of the landed JSON
+    val batch = spark.read.schema(Types.rowChangeSchema).json(src)
+    val store = new ParquetVectorStore(tmp() + "/store")
+    val jobs = CodegenGuard.noFallback(SparkJobs.jobsIn(spark)(
+      CdcStream.writeBatch(store, Mapping.documents, batch, 0L)))
+    assert(jobs <= 2, s"the vector batch body ran $jobs jobs")
+    assert(PipelineSpec.wholePoints(store.current(spark)) ==
+      PipelineSpec.wholePoints(VectorPipeline.vectorPoints(batch, Mapping.documents)))
   }
 
   test("dropDuplicatesWithinWatermark removes re-delivered events") {
