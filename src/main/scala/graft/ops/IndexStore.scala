@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.util.DirSwap
+import graft.util.{DirSwap, LocalFs}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -90,5 +90,6 @@ object IndexStore {
   /** Single-file overwrite through [[DirSwap]]: a loader sees
     * the old artifact or the new one, never a partial directory. */
   private def install(spark: SparkSession, path: String, df: DataFrame): Unit =
-    DirSwap.install(spark, path)(df.coalesce(1).write.mode("overwrite").parquet(_))
+    DirSwap.install(spark, path)(
+      df.coalesce(1).write.options(LocalFs.options).mode("overwrite").parquet(_))
 }

@@ -23,7 +23,7 @@ final class ParquetVectorStore(path: String) extends Serializable {
     graft.util.DirSwap.recover(ops.sparkSession, path)
     ops.select(col("id"), col("vector"), col("metadata"), col("op"),
       lit(batchId).as("batch_id"))
-      .write.mode("append").parquet(path)
+      .write.options(graft.util.LocalFs.options).mode("append").parquet(path)
   }
 
   /** Append one micro-batch of upserts `(id, vector, metadata)` and deleted
@@ -61,7 +61,7 @@ final class ParquetVectorStore(path: String) extends Serializable {
       current(spark)
         .select(col("id"), col("vector"), col("metadata"),
           lit("upsert").as("op"), lit(batchId).as("batch_id"))
-        .write.mode("overwrite").parquet(tmp)
+        .write.options(graft.util.LocalFs.options).mode("overwrite").parquet(tmp)
     }
 }
 

@@ -1,10 +1,13 @@
 package graft.stream
 
 import graft.ops.VectorOps
+import graft.util.LocalFs
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType,
   StringType, StructField, StructType}
@@ -145,8 +148,7 @@ final class ParquetTableStore(path: String,
     pmod(VectorOps.fnv1a64(pk), lit(b.toLong)).cast("int")
 
   private def fs(spark: SparkSession) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    LocalFs.fileSystem(path, spark.sparkContext.hadoopConfiguration)
 
   // ---- manifest: the store's atomically-installed commit head ----------
 
@@ -305,6 +307,7 @@ final class ParquetTableStore(path: String,
     seqs.dropRight(keepManifests).foreach(s => f.delete(manifestPath(s), false))
     val referenced = listManifestSeqs(f)
       .flatMap(readManifest(f, _).liveDirs).toSet
+    scans.keySet.removeIf(d => !referenced(d))
     val dd = new org.apache.hadoop.fs.Path(dataDir)
     if (f.exists(dd))
       f.listStatus(dd).foreach { st =>
@@ -314,6 +317,30 @@ final class ParquetTableStore(path: String,
   }
 
   // ---- read path --------------------------------------------------------
+
+  /** Each committed dir's parquet relation (its file listing and schema),
+    * kept by dir name. A dir a committed manifest names never changes: a
+    * crash replay rewrites only an uncommitted SEQ and every write takes
+    * the next one. Only [[unionLive]] adds entries, for dirs of a loaded
+    * manifest; [[vacuum]] drops those no retained manifest names. Each
+    * call wraps the relation in the caller's session, as `spark.read`
+    * does; a relation built under another SparkContext is rebuilt, since
+    * its scans run on the context it holds. */
+  @transient private lazy val scans =
+    new java.util.concurrent.ConcurrentHashMap[String, BaseRelation]()
+
+  private def dirScan(spark: SparkSession, d: String): DataFrame =
+    spark.baseRelationToDataFrame(scans.compute(d, (_, kept) =>
+      if (kept != null && (kept.sqlContext.sparkContext eq spark.sparkContext)) kept
+      else spark.read.schema(rowSchema).parquet(s"$dataDir/$d")
+        .queryExecution.analyzed.collectFirst { case r: LogicalRelation => r.relation }
+        .get))
+
+  /** The dirs whose relation this instance keeps. */
+  private[graft] def keptDirs: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    scans.keySet.asScala.toSet
+  }
 
   def exists(spark: SparkSession): Boolean =
     listManifestSeqs(fs(spark)).nonEmpty
@@ -333,8 +360,7 @@ final class ParquetTableStore(path: String,
     val parts = byDir.toSeq.sortBy(_._1).map { case (d, ks) =>
       val mod = m.mods.getOrElse(d, m.buckets)
       val physical = ks.map(k => k % mod)
-      val scan = spark.read.schema(rowSchema).parquet(s"$dataDir/$d")
-        .filter(col("bucket").isInCollection(physical))
+      val scan = dirScan(spark, d).filter(col("bucket").isInCollection(physical))
       if (mod == m.buckets) scan
       else scan.withColumn("bucket", bucketCol(m.buckets))
         .filter(col("bucket").isInCollection(ks))
@@ -473,7 +499,7 @@ final class ParquetTableStore(path: String,
     lww((rows ++ live).reduce(_.unionByName(_))
       .repartition(n, col("bucket")), "bucket", "pk")
       .filter(!col("deleted") || col("lsn") > lit(m.gc))
-      .write.partitionBy("bucket").mode("overwrite")
+      .write.options(LocalFs.options).partitionBy("bucket").mode("overwrite")
       .parquet(s"$dataDir/$name")
     val next = m.copy(seq = seq, applied = applied,
       mods = m.mods + (name -> m.buckets),

@@ -208,7 +208,7 @@ final class SegmentLsnIndex(dir: String, conf: Configuration,
 final class SegmentRetention(dir: String, conf: Configuration,
                              val index: SegmentLsnIndex) {
 
-  private def fs: FileSystem = new Path(dir).getFileSystem(conf)
+  private def fs: FileSystem = graft.util.LocalFs.fileSystem(dir, conf)
 
   /** Delete the longest name-prefix of segments with maxLsn ≤ `horizon`
     * (plus any straggler at or below the current marker from a crashed

@@ -18,7 +18,7 @@ object DirSwap {
   // s3a://-style stores)
   private def locate(spark: SparkSession, path: String): (FileSystem, Path, Path) = {
     val dst = new Path(path)
-    (dst.getFileSystem(spark.sparkContext.hadoopConfiguration), dst,
+    (LocalFs.fileSystem(path, spark.sparkContext.hadoopConfiguration), dst,
       new Path(path + ".old"))
   }
 

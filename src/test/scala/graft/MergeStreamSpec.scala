@@ -567,6 +567,45 @@ class MergeStreamSpec extends SparkSpec {
     }
   }
 
+  test("kept dir scans never serve stale state: one store instance through " +
+    "compactions, a split, a two-phase GC and vacuums reads what a fresh " +
+    "instance reads at every step") {
+    val dir = tmp() + "/kept"
+    def open() = new ParquetTableStore(dir, numBuckets = 4,
+      maxDeltasPerBucket = 1, keepManifests = 1)
+    val store = open()
+    def rows(s: ParquetTableStore) = s.snapshot(spark)
+      .select("pk", "lsn", "deleted", "content")
+      .as[(String, Long, Boolean, Option[String])].collect().sorted.toSeq
+    def changes(lsn: Long, pks: Seq[Int], deletes: Set[Int] = Set.empty) =
+      pks.map(pk => change(if (deletes(pk)) "d" else "c", pk.toString, lsn, s"v$pk-$lsn"))
+        .reduce(_.unionByName(_))
+    var everKept = Set.empty[String]
+    val steps: Seq[(String, () => Unit)] = Seq(
+      "merge" -> (() => store.merge(changes(10, 1 to 20))),
+      "compacting merge" -> (() => store.merge(changes(20, 1 to 10, deletes = Set(2, 3)))),
+      "compacting merge" -> (() => store.merge(changes(30, 11 to 20, deletes = Set(12)))),
+      "split" -> (() => store.split(spark)),
+      "merge after split" -> (() => store.merge(changes(40, Seq(1, 5, 11, 15)))),
+      "gc capture" -> (() => store.gcTwoPhase(spark, 35L, epoch = 1L)),
+      "merge" -> (() => store.merge(changes(50, 1 to 20 by 3, deletes = Set(4)))),
+      "gc promotion" -> (() => store.gcTwoPhase(spark, 45L, epoch = 2L)),
+      "merge over the horizon" -> (() => store.merge(changes(60, 1 to 20 by 2))),
+      "compactAll" -> (() => store.compactAll(spark)),
+      "merge" -> (() => store.merge(changes(70, 2 to 20 by 2))))
+    steps.zipWithIndex.foreach { case ((name, step), i) =>
+      step()
+      assert(rows(store) == rows(open()), s"step $i ($name): kept scans diverged")
+      val kept = store.keptDirs
+      val missing = kept.filterNot(d => Files.isDirectory(java.nio.file.Paths.get(dir, "data", d)))
+      assert(missing.isEmpty, s"step $i ($name): kept dirs gone from disk: $missing")
+      everKept ++= kept
+    }
+    assert(store.gcHorizon(spark) == 35L) // the epoch-1 capture, promoted
+    // the kept scans were used and vacuumed dirs left them
+    assert(everKept.size > store.keptDirs.size && store.keptDirs.nonEmpty, everKept)
+  }
+
   test("bucket-count drift under an existing store is refused") {
     val dir = tmp() + "/table"
     new ParquetTableStore(dir, numBuckets = 4).merge(change("c", "1", 10, "v"))
